@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -25,8 +23,10 @@ import graft.table.VersionedTable
   *     is a no-op (exactly-once without Delta's txn log).
   *   - '''S5''' Gold: the CDF streaming source is a parquet file stream
   *     tailing the Silver table's `_changes/` directory — change files
-  *     are flat and append-only precisely so this works; `foreachBatch`
-  *     applies the signed-delta additive merge, batch-id-guarded (the
+  *     are flat and append-only precisely so this works, and each one's
+  *     name carries its commit stamps ([[VersionedTable.changeStream]]
+  *     derives `_commit_version` / `_commit_timestamp` from it);
+  *     `foreachBatch` applies the signed-delta additive merge, batch-id-guarded (the
   *     additive update is NOT idempotent by itself — SURVEY §7.5 risk 1).
   *
   * All streaming state beyond source offsets lives in the target tables
@@ -162,15 +162,9 @@ object CdcStreams {
             "table_changes read, then restart the tail from a fresh " +
             "checkpoint.")
     }
-    // The CDF directory may not exist until the first merge commits;
-    // the file source requires the path at stream start.
-    Files.createDirectories(Paths.get(silver.changesLocation))
-    spark.readStream
-      .schema(silver.changeSchema)
-      // per-commit files only: compacted `r<lo>-<hi>/` spans (already
-      // consumed by any tail this guard admitted) stay invisible
-      .option("pathGlobFilter", "v*.parquet")
-      .parquet(silver.changesLocation)
+    // per-commit files only: compacted `r<lo>-<hi>/` spans (already
+    // consumed by any tail this guard admitted) stay invisible
+    silver.changeStream
       .filter(org.apache.spark.sql.functions.col("_commit_version") >= startingVersion)
       .writeStream
       .foreachBatch { (changes: DataFrame, batchId: Long) =>
@@ -232,13 +226,8 @@ object CdcStreams {
       b: VersionedTable,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    Files.createDirectories(Paths.get(a.changesLocation))
-    Files.createDirectories(Paths.get(b.changesLocation))
-    def tail(t: VersionedTable): DataFrame = spark.readStream
-      .schema(t.changeSchema)
-      .option("pathGlobFilter", "v*.parquet")
-      .parquet(t.changesLocation)
-      .select(org.apache.spark.sql.functions.col("_commit_version"))
+    def tail(t: VersionedTable): DataFrame =
+      t.changeStream.select(org.apache.spark.sql.functions.col("_commit_version"))
     tail(a).union(tail(b))
       .writeStream
       .foreachBatch { (_: DataFrame, _: Long) =>
@@ -265,11 +254,7 @@ object CdcStreams {
       refresh: () => Option[Long],
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    Files.createDirectories(Paths.get(source.changesLocation))
-    spark.readStream
-      .schema(source.changeSchema)
-      .option("pathGlobFilter", "v*.parquet")
-      .parquet(source.changesLocation)
+    source.changeStream
       .select(org.apache.spark.sql.functions.col("_commit_version"))
       .writeStream
       .foreachBatch { (_: DataFrame, _: Long) =>

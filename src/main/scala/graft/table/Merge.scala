@@ -1,10 +1,9 @@
 package graft.table
 
-import java.nio.file.Files
-import java.util.UUID
-
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** One conditional action of a multi-clause MERGE (D3/D4). Conditions
@@ -57,12 +56,18 @@ final case class MergeStats(
   *     (SQL MERGE clause order semantics) producing an action id plus
   *     the clause's result row as a struct — all codegen'd expressions,
   *     no UDFs;
-  *  3. the action-annotated join output is staged to parquet ONCE, then
-  *     the new snapshot and the CDF rows (insert / delete /
-  *     update_preimage / update_postimage) are cheap columnar
-  *     projections of the staging data — nondeterministic inputs
-  *     (`current_timestamp` audit columns) are computed exactly once,
-  *     and a commit failure can always be retried from the staging.
+  *  3. ONE labelled write job (`merge:stage <table>`) produces the
+  *     commit's files: each join row expands into its new-snapshot row
+  *     (a data row, clustered by bucket and sorted by key hash like any
+  *     [[VersionedTable]] write) and its CDF rows (insert / delete /
+  *     update_preimage / update_postimage, tagged with their change
+  *     type), and the write partitions by that tag. Data files move into
+  *     `data/` with footer stats; change files wait in `_staging/` until
+  *     the commit names them `v<version>-<commitMillis>-…`. Per-clause
+  *     row counts and CHECK-constraint violations are observed metrics
+  *     of the same job, so nondeterministic inputs (`current_timestamp`
+  *     audit columns) are computed exactly once, nothing is re-read, and
+  *     the commit's CAS loop only links files.
   *
   * Unmatched target rows pass through untouched unless a
   * NOT-MATCHED-BY-SOURCE clause claims them; matched rows matching
@@ -154,13 +159,24 @@ object Merge {
   /** Additive, nullable widening of the target schema with source-only
     * columns (Delta's `mergeSchema` behavior). */
   private def evolvedSchema(
-      target: org.apache.spark.sql.types.StructType,
-      source: org.apache.spark.sql.types.StructType) = {
+      target: StructType,
+      source: StructType) = {
     val extra = source.fields
       .filterNot(f => target.fieldNames.contains(f.name))
       .map(_.copy(nullable = true))
-    org.apache.spark.sql.types.StructType(target.fields ++ extra)
+    StructType(target.fields ++ extra)
   }
+
+  /** Whether the candidate files' key projection may be broadcast to the
+    * insert anti join: `candRows` (the manifest's live row counts) times
+    * the key width must fit `budget`. Only a fixed-width key has a width
+    * the schema knows — a string's `defaultSize` is a 20 B guess a long
+    * key overruns — so any other key keeps the shuffle. */
+  private[table] def keySideFits(
+      keyTypes: Seq[DataType], candRows: Option[Long], budget: Long): Boolean =
+    keyTypes.forall(UnsafeRow.isFixedLength) && candRows.exists { n =>
+      n * math.max(8L, keyTypes.map(_.defaultSize.toLong).sum) <= budget
+    }
 
   private def runOnce(
       table: VersionedTable,
@@ -171,15 +187,46 @@ object Merge {
       validateUniqueKeys: Boolean,
       mergeSchema: Boolean,
       extraTxn: Map[String, Long]): MergeStats = {
-    val spark = table.spark
     val base = table.latestManifest
-
     // cheap pre-check; commitFiles re-checks under the CAS
     val alreadyApplied = txn.exists { case (appId, batchId) =>
       base.txn.get(appId).exists(_ >= batchId)
     }
     if (alreadyApplied) return MergeStats(None, 0, 0, 0)
 
+    val st = stage(table, base, source, onKeys, clauses, validateUniqueKeys, mergeSchema)
+    // a conflict or a raced-in txn retracts this attempt's data files
+    val version = table.retractingOnFailure(st.written.added) {
+      table.commitFiles(st.written.added, st.removed, st.written.changes, "merge",
+        txn, extraTxn,
+        newSchemaJson = st.newSchemaJson,
+        baseVersion = Some(base.version),
+        conflictsWith = Some(st.conflicts))
+    }
+    MergeStats(version, st.inserted, st.updated, st.deleted)
+  }
+
+  /** One merge attempt's files, written and not yet committed. */
+  private[table] final case class Staged(
+      written: Written,
+      removed: Seq[String],
+      conflicts: DataFile => Boolean,
+      newSchemaJson: Option[String],
+      inserted: Long,
+      updated: Long,
+      deleted: Long)
+
+  /** Plans the merge against `base` and writes its files — everything
+    * but the commit. */
+  private[table] def stage(
+      table: VersionedTable,
+      base: CommitManifest,
+      source: DataFrame,
+      onKeys: Seq[String],
+      clauses: Seq[MergeClause],
+      validateUniqueKeys: Boolean,
+      mergeSchema: Boolean): Staged = {
+    val spark = table.spark
     val baseSchema = base.schema
     val targetSchema =
       if (mergeSchema) evolvedSchema(baseSchema, source.schema) else baseSchema
@@ -229,22 +276,24 @@ object Merge {
         val khash = hash(onKeys.map(col): _*)
         // NOT deduped here: a `.distinct()` at this level shuffles the
         // source's whole key set per merge; the downstream
-        // `(bucket, path)` projections dedup map-side into their own
-        // (bounded) distinct, so dropping the exchange loses nothing —
-        // one less shuffle per merge at any batch size (guide §2.4)
+        // `(bucket, path)` projections dedup per task instead, so
+        // dropping the exchange loses nothing (guide §2.4)
         val srcKeys = src
           .select(khash.cast("long").as("__h"),
             pmod(khash, lit(n)).cast("int").as("__b"))
         val (statted, statless) = base.dataFiles.partition(f =>
           f.bucket.isDefined && f.minHash.isDefined && f.maxHash.isDefined)
+        import spark.implicits._
+        // each task dedups its own (bucket, path) pairs and the driver
+        // unions them: the result is bounded by tasks × (buckets + files),
+        // and no shuffle (one job fewer than a distributed distinct)
         if (statted.isEmpty) {
           val touched = VersionedTable.labeled(spark, "merge:prune") {
-            srcKeys.select("__b").distinct()
+            srcKeys.select("__b").as[Int].mapPartitions(_.toSet.iterator)
               .collect()
-          }.map(_.getInt(0)).toSet // bounded by numBuckets
+          }.toSet
           (statless.map(_.path), touched)
         } else {
-          import spark.implicits._
           val fileDf = statted
             .map(f => (f.path, f.bucket.get, f.minHash.get, f.maxHash.get))
             .toDF("__path", "__fb", "__mn", "__mx")
@@ -252,12 +301,13 @@ object Merge {
             srcKeys.join(broadcast(fileDf),
                 col("__b") === col("__fb") &&
                 col("__h") >= col("__mn") && col("__h") <= col("__mx"), "left")
-              .select(col("__b"), col("__path")).distinct()
+              .select(col("__b"), col("__path")).as[(Int, String)]
+              .mapPartitions(_.toSet.iterator)
               .collect()
-          } // bounded by buckets + files
-          val touched = rows.map(_.getInt(0)).toSet
+          }.toSet
+          val touched = rows.map(_._1)
           val candidates =
-            (rows.flatMap(r => Option(r.getString(1))).toSeq ++ statless.map(_.path)).distinct
+            (rows.flatMap(r => Option(r._2)).toSeq ++ statless.map(_.path)).distinct
           (candidates, touched)
         }
       }
@@ -284,8 +334,7 @@ object Merge {
       // col("target.x") / col("source.x") then resolve as struct-FIELD
       // extraction, which — unlike subquery aliases — survives a UNION,
       // so the two join shapes below produce interchangeable rows.
-      val tStructType = org.apache.spark.sql.types.StructType(
-        targetFields.map(_.copy(nullable = true)))
+      val tStructType = StructType(targetFields.map(_.copy(nullable = true)))
       val t = targetDf.select(
         struct(targetFields.toIndexedSeq.map(f => col(f.name)): _*)
           .cast(tStructType).as("target"),
@@ -308,11 +357,12 @@ object Merge {
       // The anti join moves only the narrow key projection of the
       // candidate files (and broadcasts that too when the manifest's
       // per-file row counts prove it small — a driver-side bound, no
-      // IO). Sources past the budget keep the full-outer shuffle: when
-      // most of the table is hit, shuffling it is the right plan.
-      // Unbucketed (full-rewrite) merges also keep it — they have no
-      // prior action to have materialized the cache, so no measured
-      // size to decide on, and their targets are small by design.
+      // IO; see keySideFits). Sources past the budget keep the
+      // full-outer shuffle: when most of the table is hit, shuffling it
+      // is the right plan. Unbucketed (full-rewrite) merges also keep it
+      // — they have no prior action to have materialized the cache, so
+      // no measured size to decide on, and their targets are small by
+      // design.
       val broadcastBytes = spark.conf.getOption(BROADCAST_SOURCE_MAX_BYTES)
         .map(_.toLong).getOrElse(DEFAULT_BROADCAST_SOURCE_MAX_BYTES)
       val srcSmall = bucketed.isDefined &&
@@ -322,21 +372,19 @@ object Merge {
           s"srcBytes=${src.queryExecution.optimizedPlan.stats.sizeInBytes} " +
           s"budget=$broadcastBytes srcSmall=$srcSmall")
       val joined =
-        if (srcSmall && !hasBySource) {
+        if (srcSmall) {
           val matchedAndKept = t.join(broadcast(s), joinCond, "left_outer")
           val tKeys = targetDf.select(onKeys.toIndexedSeq.map(col): _*)
-          val candRows = bucketed.map { case (candidates, _) =>
+          val candRows = bucketed.flatMap { case (candidates, _) =>
             val cset = candidates.toSet
             val entries = base.dataFiles.filter(f => cset(f.path))
             if (entries.forall(_.rows.isDefined))
-              entries.map(_.liveRows.getOrElse(0L)).sum
-            else Long.MaxValue
-          }.getOrElse(Long.MaxValue)
-          val keyWidth = math.max(8L,
-            onKeys.map(k => targetSchema(k).dataType.defaultSize.toLong).sum)
+              Some(entries.map(_.liveRows.getOrElse(0L)).sum)
+            else None
+          }
           val keysDf =
-            if (candRows != Long.MaxValue && candRows * keyWidth <= broadcastBytes)
-              broadcast(tKeys)
+            if (keySideFits(onKeys.map(k => targetSchema(k).dataType),
+                candRows, broadcastBytes)) broadcast(tKeys)
             else tKeys
           val antiCond = onKeys.map(k => col(s"source.$k") === tKeys(k))
             .reduce(_ && _)
@@ -383,7 +431,7 @@ object Merge {
         Some(acc.fold(when(applies, lit(i)))(_.when(applies, lit(i))))
       }.get.otherwise(when(tPresent, lit(KEEP)))
 
-      val rowType = org.apache.spark.sql.types.StructType(targetFields)
+      val rowType = StructType(targetFields)
       val newRow = indexed
         .filter { case (c, _) => !c.isInstanceOf[WhenMatchedDelete] }
         .foldLeft(Option.empty[Column]) { case (acc, (c, i)) =>
@@ -402,84 +450,47 @@ object Merge {
       def in(ids: Seq[Int]): Column =
         if (ids.isEmpty) lit(false) else col("__action").isin(ids: _*)
 
-      val staged = joined
+      // per-clause-family row counts ride the write as observed metrics
+      // — no separate counting job
+      val obs = org.apache.spark.sql.Observation()
+      val actions = joined
         .withColumn("__action", action)
         .filter(col("__action").isNotNull) // drop source rows no clause inserts
         .select(col("__action"), targetStruct.as("__t"), newRow.as("__new"))
-
-      // per-clause-family row counts ride the staging write as observed
-      // metrics — no separate counting job
-      val obs = org.apache.spark.sql.Observation()
-      val stagingDir = table.root.resolve(
-        s"${VersionedTable.STAGING_DIR}/merge-${UUID.randomUUID()}")
-      VersionedTable.labeled(spark, s"merge:stage ${table.root.getFileName}") {
-        staged.observe(obs,
-            count(when(in(insertIds), 1)).as("ins"),
-            count(when(in(updateIds), 1)).as("upd"),
-            count(when(in(deleteIds), 1)).as("del"))
-          .write.mode("overwrite").parquet(stagingDir.toString)
-      }
+        .observe(obs,
+          count(when(in(insertIds), 1)).as("ins"),
+          count(when(in(updateIds), 1)).as("upd"),
+          count(when(in(deleteIds), 1)).as("del"))
+      // each join row: its new-snapshot row unless deleted (CHECK
+      // constraints judge the rows this merge INTRODUCES — inserts +
+      // update post-images; untouched target rows pass through unjudged,
+      // Delta's merge-constraint contract) plus 0..2 CDF rows
+      val rows = table.expand(actions, rowType, Seq(
+        Alt(!in(deleteIds), coalesce(col("__new"), col("__t")),
+          intro = in(insertIds) || in(updateIds)),
+        Alt(in(insertIds), col("__new"), Some("insert")),
+        Alt(in(deleteIds), col("__t"), Some("delete")),
+        Alt(in(updateIds), col("__t"), Some("update_preimage")),
+        Alt(in(updateIds), col("__new"), Some("update_postimage"))))
+      val written = table.write(rows, s"merge:stage ${table.root.getFileName}")
       val counts = obs.get
-      var added = Seq.empty[DataFile]
-      try {
-        // explicit schema: an empty staged result may write zero part
-        // files, and an empty directory cannot be schema-inferred
-        val st = spark.read.schema(staged.schema).parquet(stagingDir.toString)
+      def metric(k: String) = counts.get(k).map(_.asInstanceOf[Long]).getOrElse(0L)
 
-        // CHECK constraints gate exactly the rows this merge INTRODUCES
-        // (inserts + update post-images); untouched target rows pass
-        // through unjudged — Delta's merge-constraint contract
-        table.enforceConstraints(
-          st.filter(in(insertIds) || in(updateIds)).select(col("__new.*")))
-
-        val flat = st.filter(!in(deleteIds))
-          .select(coalesce(col("__new"), col("__t")).as("r"))
-          .select(col("r.*"))
-        added = table.ingest(flat)
-
-        // all four CDF projections in ONE scan of the staging data: each
-        // row contributes 0..2 (change-row, change-type) pairs
-        val changes = {
-          val parts = array(
-            when(in(insertIds), struct(col("__new").as("r"), lit("insert").as("t"))),
-            when(in(deleteIds), struct(col("__t").as("r"), lit("delete").as("t"))),
-            when(in(updateIds), struct(col("__t").as("r"), lit("update_preimage").as("t"))),
-            when(in(updateIds), struct(col("__new").as("r"), lit("update_postimage").as("t"))))
-          st.select(explode(array_compact(parts)).as("c"))
-            .select(col("c.r.*"), col("c.t").as("_change_type"))
-        }
-
-        val removed = bucketed match {
-          case Some((candidates, _)) => candidates
-          case None => base.dataFiles.map(_.path)
-        }
-        // conflict scope: for bucketed merges, any concurrently-added file
-        // in a bucket we touch (or without bucket info) conflicts; for
-        // full-rewrite merges any concurrent commit conflicts
-        val conflictPred: DataFile => Boolean = bucketed match {
-          case Some((_, touched)) =>
-            f => f.bucket.map(touched.contains).getOrElse(true)
-          case None => _ => true
-        }
-        val version = table.commitFiles(added, removed, Some(changes), "merge",
-          txn, extraTxn,
-          newSchemaJson =
-            if (targetSchema == baseSchema) None else Some(targetSchema.json),
-          baseVersion = Some(base.version),
-          conflictsWith = Some(conflictPred))
-        if (version.isEmpty) // txn raced in: retract unpublished files
-          added.foreach(f => Files.deleteIfExists(table.root.resolve(f.path)))
-
-        def metric(k: String) = counts.get(k).map(_.asInstanceOf[Long]).getOrElse(0L)
-        MergeStats(version, metric("ins"), metric("upd"), metric("del"))
-      } catch {
-        case e: CommitConflictException =>
-          // retract this attempt's unpublished data files before re-running
-          added.foreach(f => Files.deleteIfExists(table.root.resolve(f.path)))
-          throw e
-      } finally {
-        VersionedTable.deleteRecursively(stagingDir)
+      val removed = bucketed match {
+        case Some((candidates, _)) => candidates
+        case None => base.dataFiles.map(_.path)
       }
+      // conflict scope: for bucketed merges, any concurrently-added file
+      // in a bucket we touch (or without bucket info) conflicts; for
+      // full-rewrite merges any concurrent commit conflicts
+      val conflicts: DataFile => Boolean = bucketed match {
+        case Some((_, touched)) =>
+          f => f.bucket.map(touched.contains).getOrElse(true)
+        case None => _ => true
+      }
+      Staged(written, removed, conflicts,
+        if (targetSchema == baseSchema) None else Some(targetSchema.json),
+        metric("ins"), metric("upd"), metric("del"))
     } finally src.unpersist()
   }
 }

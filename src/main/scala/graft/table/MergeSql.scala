@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.graftshim.SparkInternals
 
 /** SQL front-end for the merge engine: accepts the reference's literal
@@ -23,10 +24,11 @@ import org.apache.spark.sql.graftshim.SparkInternals
   * tables); the target name resolves through the caller-provided map.
   * Clause/ON conditions may qualify columns with either side's alias —
   * they are re-qualified onto the engine's canonical `target`/`source`
-  * aliases. Not supported (absent from the reference): WHEN NOT MATCHED
-  * BY SOURCE, schema evolution, non-equi ON conditions, and Databricks'
-  * QUALIFY inside the source (write the ROW_NUMBER subquery instead —
-  * SURVEY §2.5 W1).
+  * aliases. An unqualified column resolves to the one side that has it;
+  * a column both sides have must be qualified. Not supported (absent
+  * from the reference): WHEN NOT MATCHED BY SOURCE, schema evolution,
+  * non-equi ON conditions, and Databricks' QUALIFY inside the source
+  * (write the ROW_NUMBER subquery instead — SURVEY §2.5 W1).
   */
 object MergeSql {
 
@@ -64,14 +66,25 @@ object MergeSql {
     val sourceQuals = Set("__source__") ++ aliasOf(m.sourceTable) ++
       relationName(m.sourceTable).toSeq.flatMap(n => Seq(n, n.split('.').last))
 
+    val source: DataFrame = SparkInternals.ofRows(spark, m.sourceTable)
+    def has(schema: StructType, name: String) =
+      schema.fieldNames.exists(_.equalsIgnoreCase(name))
+
     def requalify(e: Expression): Column = SparkInternals.column(e.transformUp {
-      case UnresolvedAttribute(parts) if parts.length >= 2 =>
-        val mapped = parts.head match {
-          case q if sourceQuals(q) => "source"
-          case q if targetQuals(q) => "target"
-          case q => q
+      case UnresolvedAttribute(parts) if parts.length >= 2 &&
+          (sourceQuals(parts.head) || targetQuals(parts.head)) =>
+        UnresolvedAttribute(
+          (if (sourceQuals(parts.head)) "source" else "target") +: parts.tail)
+      case UnresolvedAttribute(parts) =>
+        // unqualified: the side whose schema has the column
+        (has(table.schema, parts.head), has(source.schema, parts.head)) match {
+          case (true, true) => throw new IllegalArgumentException(
+            s"ambiguous column '${parts.mkString(".")}' in MERGE: both the " +
+              s"target and the source have '${parts.head}' — qualify it")
+          case (true, false) => UnresolvedAttribute("target" +: parts)
+          case (false, true) => UnresolvedAttribute("source" +: parts)
+          case _ => UnresolvedAttribute(parts)
         }
-        UnresolvedAttribute(mapped +: parts.tail)
     })
 
     // ON condition: a conjunction of cross-side column equalities
@@ -108,8 +121,6 @@ object MergeSql {
         WhenNotMatchedInsert(cond.map(requalify), toSet(assignments))
       case other => throw new IllegalArgumentException(s"unsupported: $other")
     }
-
-    val source: DataFrame = SparkInternals.ofRows(spark, m.sourceTable)
 
     Merge.run(table, source, onKeys, matched ++ notMatched, txn)
   }

@@ -5,7 +5,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 import scala.util.{Try, Using}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.json4s.{DefaultFormats, Formats}
@@ -97,6 +97,27 @@ final case class CommitManifest(
   def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
 }
 
+/** Change files written ahead of a commit, waiting under `_staging/`
+  * until [[VersionedTable.commitFiles]] names them after the version it
+  * wins. */
+final case class StagedChanges private[table] (dir: Path, files: Seq[Path])
+
+/** What one [[VersionedTable.write]] produced: the data files' manifest
+  * entries (already under `data/`) and the staged change files. */
+private[table] final case class Written(
+    added: Seq[DataFile], changes: Option[StagedChanges])
+
+/** One output row of [[VersionedTable.expand]]: `row` (a struct in the
+  * table's column order) is emitted when `when` holds — as a data row
+  * when `changeType` is None, else as a change row of that type.
+  * `intro` marks the data rows a commit introduces, which CHECK
+  * constraints judge. */
+private[table] final case class Alt(
+    when: Column,
+    row: Column,
+    changeType: Option[String] = None,
+    intro: Column = lit(false))
+
 /** Hash-bucketing spec for copy-on-write tables: rows are clustered
   * into `pmod(hash(keys), numBuckets)` bucket files at write time, and
   * within each bucket sorted by `hash(keys)` so every file covers a
@@ -125,10 +146,12 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *   _commits/<%020d version>.json   // manifest; atomic hard-link commit
   *   data/<uuid>.parquet             // immutable data files, shared
   *                                   // across versions by reference
-  *   _changes/v<version>-*.parquet   // CDF rows of one commit (flat files
+  *   _changes/v<version>-<commitMillis>-<part>.parquet
+  *                                   // CDF rows of one commit (flat files
   *                                   // so a streaming source can tail the
   *                                   // directory without partition-column
-  *                                   // inference)
+  *                                   // inference); the commit stamps live
+  *                                   // in the NAME, not the rows
   * }}}
   *
   * Readers resolve the latest version by listing `_commits`; data written
@@ -277,8 +300,10 @@ final class VersionedTable private (
 
   /** Whether merges emit change rows (reference: table property
     * `delta.enableChangeDataFeed = true`, demo-notebook.py:225-227). */
-  def cdfEnabled: Boolean =
-    properties.get(PROP_CDF).exists(_.equalsIgnoreCase("true"))
+  def cdfEnabled: Boolean = cdfOn(properties)
+
+  private def cdfOn(props: Map[String, String]): Boolean =
+    props.get(PROP_CDF).exists(_.equalsIgnoreCase("true"))
 
   /** Copy-on-write bucketing spec, if the table was created with one. */
   def bucketSpec: Option[BucketSpec] = {
@@ -391,6 +416,23 @@ final class VersionedTable private (
     * (demo-notebook.py:363-371). */
   def changeSchema: StructType = changeSchemaOf(schema)
 
+  /** Columns stored in a per-commit change file: the table's plus
+    * `_change_type`. The commit stamps are derived from the file name on
+    * read ([[withCommitStamps]]). */
+  private def changeFileSchema: StructType =
+    StructType(schema.fields :+ changeSchema(CHANGE_TYPE))
+
+  /** Streaming tail of the per-commit change files, in [[changeSchema]]
+    * — the CDF source of [[graft.streaming.CdcStreams]]. Compacted
+    * `r<lo>-<hi>/` spans stay invisible to it. */
+  def changeStream: DataFrame = {
+    // the file source requires the directory at stream start
+    Files.createDirectories(changesDir)
+    withCommitStamps(spark.readStream.schema(changeFileSchema)
+      .option("pathGlobFilter", "v*.parquet")
+      .parquet(changesLocation))
+  }
+
   /** Batch CDF read — `table_changes(name, from [, to])` (S7,
     * demo-notebook.py:371). Manifest-driven: only change files a commit
     * actually published are read, so orphans from crashed or lost
@@ -414,7 +456,7 @@ final class VersionedTable private (
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], changeSchema)
     val tail =
       if (files.isEmpty) empty
-      else spark.read.schema(changeSchema).parquet(files: _*)
+      else withCommitStamps(spark.read.schema(changeFileSchema).parquet(files: _*))
     val compacted =
       if (ranges.isEmpty) empty
       else spark.read.schema(changeSchema)
@@ -471,8 +513,10 @@ final class VersionedTable private (
           .flatMap(v => byVersion.getOrElse(v, Seq.empty)).map(_._2)
         if (!existing.contains((lo, hiV)) && files.nonEmpty) {
           val tmp = changesDir.resolve(s".r$lo-$hiV-${UUID.randomUUID()}")
-          val w = spark.read.schema(changeSchema)
-            .parquet(files.map(_.toString): _*)
+          // a span mixes versions, so its rows carry the stamps their
+          // per-commit files held in their names
+          val w = withCommitStamps(spark.read.schema(changeFileSchema)
+              .parquet(files.map(_.toString): _*))
             .coalesce(1).write.mode("overwrite")
           maxRecords.fold(w)(m => w.option("maxRecordsPerFile", m))
             .parquet(tmp.toString)
@@ -488,14 +532,15 @@ final class VersionedTable private (
     }
   }
 
+  /** Published per-commit change files with their versions, parsed from
+    * the names `v<version>-<commitMillis>-<part>.parquet`. */
   private def changeFilesOnDisk: Seq[(Long, Path)] =
     if (!Files.isDirectory(changesDir)) Seq.empty
     else Using.resource(Files.list(changesDir)) { s =>
       s.iterator.asScala.flatMap { p =>
         val n = p.getFileName.toString
-        // layout: v<version>-<original part file name>.parquet
-        if (n.startsWith("v") && n.contains("-") && n.endsWith(".parquet"))
-          Try(n.substring(1, n.indexOf('-')).toLong).toOption.map(_ -> p)
+        if (n.startsWith("v") && n.endsWith(".parquet"))
+          changeFileVersion(n).map(_ -> p)
         else None
       }.toSeq
     }
@@ -504,74 +549,162 @@ final class VersionedTable private (
 
   /** Writes `df` as immutable files under `data/` and returns their
     * manifest entries — data only becomes visible when a later
-    * [[commitFiles]] publishes a manifest referencing it.
-    *
-    * For bucketed tables the write clusters rows into bucket files
-    * sorted by key hash, and MATERIALIZES the key hash as a narrow
-    * `__khash` column so the per-file hash range + row count come
-    * straight from the parquet footers — a driver-side metadata read,
-    * zero extra Spark jobs (readers never see the column: all reads go
-    * through explicit schemas). */
+    * [[commitFiles]] publishes a manifest referencing it. */
   private[table] def ingest(df: DataFrame): Seq[DataFile] =
-    VersionedTable.labeled(spark, s"table:ingest ${root.getFileName}")(ingestImpl(df))
+    write(df, ingestLabel).added
 
-  private def ingestImpl(df: DataFrame): Seq[DataFile] = {
-    val tmp = root.resolve(s"$STAGING_DIR/ingest-${UUID.randomUUID()}")
-    // Optional file sizing (PROP_MAX_RECORDS_PER_FILE): a huge bucket
-    // splits into several files, and because rows are sorted by key hash
-    // the split files cover DISJOINT hash ranges — merge pruning then
-    // skips within buckets too, and compactSmallFiles has units to pack.
-    val maxRecords = properties.get(PROP_MAX_RECORDS).map(_.toLong)
-    def sized[T](w: org.apache.spark.sql.DataFrameWriter[T]) =
-      maxRecords.fold(w)(m => w.option("maxRecordsPerFile", m))
-    val pkeys = latestManifest.partitionKeys
-    bucketSpec match {
-      case Some(BucketSpec(keys, n)) =>
-        val khash = hash(keys.map(col): _*)
-        sized(df.withColumn(KHASH_COL, khash.cast("long"))
-          .withColumn(BUCKET_COL, pmod(khash, lit(n)).cast("int"))
-          .repartition(col(BUCKET_COL))
-          .sortWithinPartitions(col(BUCKET_COL), col(KHASH_COL))
-          .write.mode("overwrite").partitionBy(BUCKET_COL)).parquet(tmp.toString)
-      case None => pkeys match {
-        case Some(pcols) =>
-          // Hive-style `col=value/` layout via ALIAS partition columns:
-          // the real columns stay IN the data files, so reads need no
-          // directory-value recovery (explicit-schema scans keep
-          // working) and the footer min=max stats are exact per
-          // partition — FileSkipping's stats evaluation IS the
-          // directory-level pruning, applied before any file opens.
-          // The repartition clusters each batch partition-wise (Delta's
-          // optimized-write analog) so no file straddles two partition
-          // values; maxRecordsPerFile still splits huge partitions.
-          val aliased = pcols.foldLeft(df)((d, c) =>
-            d.withColumn(s"$PART_PREFIX$c", col(c)))
-          sized(aliased.repartition(pcols.map(col): _*)
-            .write.mode("overwrite")
-            .partitionBy(pcols.map(PART_PREFIX + _): _*)).parquet(tmp.toString)
-        case None =>
-          sized(df.write.mode("overwrite")).parquet(tmp.toString)
+  private def ingestLabel: String = s"table:ingest ${root.getFileName}"
+
+  /** The rows one commit writes, as ONE projection of `df`: each input
+    * row emits every [[Alt]] whose condition holds (`rowType` is the
+    * table schema the `row` structs take), so nondeterministic inputs
+    * are computed once however many data and change rows they feed.
+    * Change alternatives are dropped when the table's CDF is off. */
+  private[table] def expand(
+      df: DataFrame, rowType: StructType, alts: Seq[Alt]): DataFrame = {
+    val rowT = StructType(rowType.fields.map(_.copy(nullable = true)))
+    val elems = alts.filter(a => a.changeType.isEmpty || cdfEnabled).map { a =>
+      when(a.when, struct(a.row.cast(rowT).as("r"),
+        lit(a.changeType.orNull).cast("string").as("t"), a.intro.as("i")))
+    }
+    df.select(explode(array_compact(array(elems: _*))).as("c"))
+      .select(col("c.r.*"), col("c.t").as(CHANGE_TYPE), col("c.i").as(INTRO_COL))
+  }
+
+  /** Writes one commit's files in ONE labelled Spark job and moves the
+    * data files into `data/`. Beside the table columns, `rows` may carry
+    * the two tag columns of [[expand]]:
+    *
+    *   - `_change_type`: null on a data row, the CDF type on a change
+    *     row. The write partitions change rows into files of their own,
+    *     which wait in `_staging/` ([[StagedChanges]]) until
+    *     [[commitFiles]] names them after the version it wins;
+    *   - `__intro`: the data rows the commit introduces. The table's
+    *     CHECK constraints (`graft.constraint.<name>` properties) are
+    *     counted over them as observed metrics of the same job; a
+    *     violation (NULL counts as one) deletes everything written and
+    *     fails before any commit — Delta's write-time constraint
+    *     contract.
+    *
+    * For bucketed tables data rows cluster into bucket files sorted by
+    * key hash, and MATERIALIZE the key hash as a narrow `__khash` column
+    * so the per-file hash range + row count come straight from the
+    * parquet footers — a driver-side metadata read, zero extra Spark
+    * jobs (readers never see the column: all reads go through explicit
+    * schemas). */
+  private[table] def write(rows: DataFrame, label: String): Written =
+    labeled(spark, label) {
+      val hasChanges = rows.columns.contains(CHANGE_TYPE)
+      val cdf = hasChanges && cdfEnabled
+      val dataFields = rows.schema.fields.toSeq
+        .filterNot(f => f.name == CHANGE_TYPE || f.name == INTRO_COL)
+      val checks =
+        if (!rows.columns.contains(INTRO_COL)) Seq.empty
+        else properties.toSeq.filter(_._1.startsWith(PROP_CONSTRAINT_PREFIX)).sortBy(_._1)
+      val obs = org.apache.spark.sql.Observation()
+      val observed =
+        if (checks.isEmpty) rows
+        else {
+          val counts = checks.zipWithIndex.map { case ((_, sql), i) =>
+            count(when(col(INTRO_COL) &&
+              !coalesce(expr(sql).cast("boolean"), lit(false)), 1)).as(s"c$i")
+          }
+          rows.observe(obs, counts.head, counts.tail: _*)
+        }
+      val df =
+        if (cdf || !hasChanges) observed.drop(INTRO_COL)
+        else observed.filter(col(CHANGE_TYPE).isNull).drop(INTRO_COL, CHANGE_TYPE)
+
+      val tmp = root.resolve(s"$STAGING_DIR/write-${UUID.randomUUID()}")
+      val isChange = col(CHANGE_TYPE).isNotNull
+      // bucket and partition values are data-row properties: change rows
+      // leave them null and land together in `__cdf=true/`
+      def onData(c: Column) = if (cdf) when(!isChange, c) else c
+      val tagged = if (cdf) df.withColumn(CDF_COL, isChange) else df
+      val tags = if (cdf) Seq(CDF_COL) else Seq.empty
+      // Optional file sizing (PROP_MAX_RECORDS_PER_FILE): a huge bucket
+      // splits into several files, and because rows are sorted by key hash
+      // the split files cover DISJOINT hash ranges — merge pruning then
+      // skips within buckets too, and compactSmallFiles has units to pack.
+      val maxRecords = properties.get(PROP_MAX_RECORDS).map(_.toLong)
+      def save(d: DataFrame, partCols: Seq[String]): Unit = {
+        val w = d.write.mode("overwrite")
+        val parted = if (partCols.isEmpty) w else w.partitionBy(partCols: _*)
+        maxRecords.fold(parted)(m => parted.option("maxRecordsPerFile", m))
+          .parquet(tmp.toString)
       }
+      val pkeys = latestManifest.partitionKeys
+      bucketSpec match {
+        case Some(BucketSpec(keys, n)) =>
+          val khash = hash(keys.map(col): _*)
+          // change rows shuffle by a bucket-sized hash range of their own:
+          // a large merge's change rows spread over tasks, a small one's
+          // coalesce with its data rows into one task (one change file)
+          val shuffleKey =
+            if (cdf) coalesce(col(BUCKET_COL), lit(-1) - pmod(khash, lit(n)))
+            else col(BUCKET_COL)
+          save(tagged.withColumn(KHASH_COL, onData(khash.cast("long")))
+            .withColumn(BUCKET_COL, onData(pmod(khash, lit(n)).cast("int")))
+            .repartition(shuffleKey)
+            .sortWithinPartitions((tags :+ BUCKET_COL :+ KHASH_COL).map(col): _*),
+            tags :+ BUCKET_COL)
+        case None => pkeys match {
+          case Some(pcols) =>
+            // Hive-style `col=value/` layout via ALIAS partition columns:
+            // the real columns stay IN the data files, so reads need no
+            // directory-value recovery (explicit-schema scans keep
+            // working) and the footer min=max stats are exact per
+            // partition — FileSkipping's stats evaluation IS the
+            // directory-level pruning, applied before any file opens.
+            // The repartition clusters each batch partition-wise (Delta's
+            // optimized-write analog) so no file straddles two partition
+            // values; maxRecordsPerFile still splits huge partitions.
+            val aliased = pcols.foldLeft(tagged)((d, c) =>
+              d.withColumn(s"$PART_PREFIX$c", onData(col(c))))
+            save(aliased.repartition(pcols.map(col): _*),
+              tags ++ pcols.map(PART_PREFIX + _))
+          case None => save(tagged, tags)
+        }
+      }
+      checks.zipWithIndex
+        .find { case (_, i) => obs.get(s"c$i").asInstanceOf[Long] > 0L }
+        .foreach { case ((k, sql), _) =>
+          deleteRecursively(tmp)
+          throw new IllegalArgumentException(
+            s"CHECK constraint '${k.stripPrefix(PROP_CONSTRAINT_PREFIX)}' ($sql) " +
+              "violated by incoming rows")
+        }
+
+      // partition columns lead the stat fields so their exact bounds are
+      // always harvested, however wide the schema (STAT_COLS_MAX cap)
+      val statFields = pkeys.fold(dataFields) { pcols =>
+        val (p, rest) = dataFields.partition(f => pcols.contains(f.name))
+        p ++ rest
+      }
+      val entries = withBlooms(
+        moveIntoData(if (cdf) tmp.resolve(s"$CDF_COL=false") else tmp,
+          bucketSpec.isDefined, statFields),
+        StructType(dataFields))
+      val changeFiles =
+        if (cdf) parquetFilesUnder(tmp.resolve(s"$CDF_COL=true")) else Seq.empty
+      if (changeFiles.isEmpty) {
+        deleteRecursively(tmp)
+        Written(entries, None)
+      } else Written(entries, Some(StagedChanges(tmp, changeFiles)))
     }
-    // partition columns lead the stat fields so their exact bounds are
-    // always harvested, however wide the schema (STAT_COLS_MAX cap)
-    val statFields = pkeys.fold(df.schema.fields.toSeq) { pcols =>
-      val (p, rest) = df.schema.fields.toSeq.partition(f => pcols.contains(f.name))
-      p ++ rest
-    }
-    val entries = moveIntoData(tmp, bucketSpec.isDefined, statFields)
-    deleteRecursively(tmp)
-    // bloom sidecars for configured columns: one distributed job over
-    // the just-written files; entries gain their bloomPath refs before
-    // the commit publishes them (see BloomIndex)
+
+  /** Bloom sidecars for configured columns: one distributed job over
+    * the just-written files; entries gain their bloomPath refs before
+    * the commit publishes them (see BloomIndex). */
+  private def withBlooms(entries: Seq[DataFile], schema: StructType): Seq[DataFile] = {
     val bloomCols = properties.get(PROP_BLOOM_COLS)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq.empty)
-    if (bloomCols.isEmpty) entries
+    if (bloomCols.isEmpty || entries.isEmpty) entries
     else {
       val bitsPerRow = properties.get(PROP_BLOOM_BITS_PER_ROW)
         .flatMap(s => Try(s.toInt).toOption).getOrElse(10)
-      BloomIndex.attach(spark, root, entries, df.schema, bloomCols, bitsPerRow)
+      BloomIndex.attach(spark, root, entries, schema, bloomCols, bitsPerRow)
     }
   }
 
@@ -585,11 +718,7 @@ final class VersionedTable private (
       bucketed: Boolean,
       statFields: Seq[StructField]): Seq[DataFile] = {
     Files.createDirectories(dataDir)
-    val staged = Using.resource(Files.walk(stagingRoot)) { s =>
-      s.iterator.asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .toSeq
-    }
+    val staged = parquetFilesUnder(stagingRoot)
     val bucketRe = s"$BUCKET_COL=(\\d+)".r
     staged.map { p =>
       val rel = stagingRoot.relativize(p)
@@ -615,13 +744,18 @@ final class VersionedTable private (
   }
 
   /** The file-granular commit: publishes `added` files (already written
-    * via [[ingest]]) and drops `removed` ones as the next version.
+    * via [[write]]) and drops `removed` ones as the next version.
     *
-    * `changeRows` must already carry `_change_type` and read from
-    * materialized data (the merge engine stages its join once, then
-    * feeds projections here); the commit stamps `_commit_version` /
-    * `_commit_timestamp` (pre/postimages of one commit share both —
-    * demo-notebook.py:369).
+    * `changes` are the commit's change files, already written beside its
+    * data files. The CAS loop writes nothing and runs no Spark job: each
+    * attempt hard-links the staged files into `_changes/` under hidden
+    * names that carry the attempt's version and commit timestamp
+    * (`.v<version>-<commitMillis>-<part>.parquet`), publishes the
+    * manifest listing them, and unhides them. Readers derive
+    * `_commit_version` / `_commit_timestamp` from that name (pre/postimages
+    * of one commit share both — demo-notebook.py:369), so a rebase onto a
+    * newer version re-links the same files and never rewrites them. The
+    * staging directory is deleted when the call returns.
     *
     * Exactly-once: if `txn = Some(appId -> batchId)` and that batch id
     * is already recorded, the commit is skipped and `None` returned —
@@ -638,7 +772,7 @@ final class VersionedTable private (
   def commitFiles(
       added: Seq[DataFile],
       removed: Seq[String],
-      changeRows: Option[DataFrame],
+      changes: Option[StagedChanges],
       operation: String,
       txn: Option[(String, Long)] = None,
       extraTxn: Map[String, Long] = Map.empty,
@@ -648,7 +782,8 @@ final class VersionedTable private (
       newProperties: Option[Map[String, String]] = None): Option[Long] = {
     val removedSet = removed.toSet
     var attempt = 0
-    while (true) {
+    var published: Option[CommitManifest] = None
+    try while (published.isEmpty) {
       healChangeFiles()
       val prev = latestManifest
       val alreadyApplied = txn.exists { case (appId, batchId) =>
@@ -683,35 +818,25 @@ final class VersionedTable private (
       val v = prev.version + 1
       // strictly monotonic commit timestamps make TIMESTAMP AS OF unambiguous
       val ts = math.max(System.currentTimeMillis(), prev.timestampMs + 1)
+      val props = newProperties.getOrElse(prev.properties)
 
-      // Change files are staged into `_changes/` under dot-prefixed
-      // (hidden) names: invisible to the directory-tailing streaming CDF
-      // source and to vacuum until THIS commit wins the CAS — a losing
-      // or crashed attempt can never leak phantom change rows.
-      val changeNames = changeRows.filter(_ => cdfEnabled).map { ch =>
-        val tmp = root.resolve(s"$STAGING_DIR/changes-${UUID.randomUUID()}")
-        VersionedTable.labeled(spark, s"table:cdf-write ${root.getFileName}") {
-          ch.withColumn("_commit_version", lit(v))
-            .withColumn("_commit_timestamp", timestamp_millis(lit(ts)))
-            .write.mode("overwrite").parquet(tmp.toString)
-        }
-        Files.createDirectories(changesDir)
-        val names = Using.resource(Files.list(tmp)) { s =>
-          s.iterator.asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .toSeq
-        }.map { p =>
-          val name = s"v$v-${p.getFileName}"
-          Files.move(p, changesDir.resolve(s".$name"), StandardCopyOption.ATOMIC_MOVE)
+      // Hidden (dot-prefixed) links: invisible to the directory-tailing
+      // streaming CDF source and to vacuum until THIS attempt wins the
+      // CAS. A losing attempt only drops its links — the staged files
+      // stay put for the next attempt, however a concurrent healer
+      // treats the links.
+      val changeNames =
+        if (!cdfOn(props)) Seq.empty
+        else changes.toSeq.flatMap(_.files).map { p =>
+          val name = s"v$v-$ts-${p.getFileName}"
+          Files.createDirectories(changesDir)
+          Files.createLink(changesDir.resolve(s".$name"), p)
           name
         }
-        deleteRecursively(tmp)
-        names
-      }.getOrElse(Seq.empty)
 
       val m = CommitManifest(v, operation, ts,
         newSchemaJson.getOrElse(prev.schemaJson),
-        newProperties.getOrElse(prev.properties),
+        props,
         prev.txn ++ txn.toMap ++ extraTxn,
         prev.bucketKeys, prev.numBuckets,
         dataFiles = prev.dataFiles.filterNot(f => removedSet.contains(f.path)) ++ added,
@@ -728,11 +853,6 @@ final class VersionedTable private (
       try {
         publish(disk)
         manifestCache.put(v, m)
-        // post-checkpoint maintenance: fold the previous (now cold)
-        // checkpoint span's CDF scatter into one range directory —
-        // best-effort, the next checkpoint retries anything skipped
-        if (cdfEnabled && v % checkpointInterval(m.properties) == 0)
-          Try(compactChangesBefore(v - checkpointInterval(m.properties)))
         // unhide this commit's change files (crash here is healed by the
         // next commit or the next changes() read — the manifest is the
         // source of truth for what must exist; Try: a concurrent healer
@@ -741,24 +861,34 @@ final class VersionedTable private (
           Try(Files.move(changesDir.resolve(s".$n"), changesDir.resolve(n),
             StandardCopyOption.ATOMIC_MOVE))
         }
-        return Some(v)
+        published = Some(m)
       } catch {
         case _: FileAlreadyExistsException =>
-          // lost the CAS: retract exactly OUR (still hidden) change files
           changeNames.foreach(n => Files.deleteIfExists(changesDir.resolve(s".$n")))
           attempt += 1
           if (attempt > 20) throw new CommitConflictException(
             s"gave up publishing after $attempt CAS losses at $root")
       }
+    } finally changes.foreach(c => deleteRecursively(c.dir))
+
+    // post-checkpoint maintenance, after the commit: fold the previous
+    // (now cold) checkpoint span's CDF scatter into one range directory —
+    // best-effort, the next checkpoint retries anything skipped
+    published.map { m =>
+      val interval = checkpointInterval(m.properties)
+      if (cdfOn(m.properties) && m.version % interval == 0)
+        Try(compactChangesBefore(m.version - interval))
+      m.version
     }
-    None // unreachable
   }
 
   /** Repairs `_changes/` after a crash between CAS win and unhide:
     * hidden files listed by a published manifest are renamed into
-    * visibility; hidden files of superseded attempts are deleted;
-    * hidden files AHEAD of the latest version belong to an in-flight
-    * attempt and are left alone. */
+    * visibility; hidden files of superseded attempts are deleted (they
+    * are links — a live attempt still holds its staged file); hidden
+    * files AHEAD of the latest version belong to an in-flight attempt
+    * and are left alone. Hidden names are `.v<version>-<commitMillis>-
+    * <part>.parquet`, the published name behind a dot. */
   private def healChangeFiles(): Unit = {
     if (!Files.isDirectory(changesDir)) return
     val hidden = Using.resource(Files.list(changesDir)) { s =>
@@ -769,7 +899,7 @@ final class VersionedTable private (
     val latest = latestVersion
     hidden.foreach { p =>
       val finalName = p.getFileName.toString.drop(1)
-      Try(finalName.substring(1, finalName.indexOf('-')).toLong).toOption.foreach { v =>
+      changeFileVersion(finalName).foreach { v =>
         if (v <= latest) {
           val listed = Try(manifest(v).changeFiles.contains(finalName)).getOrElse(false)
           // Try: a concurrent healer/committer may win the same rename
@@ -784,10 +914,10 @@ final class VersionedTable private (
   }
 
   /** Runs `body` (a commitFiles call) and retracts `added` — freshly
-    * ingested, not yet referenced by any manifest — when the commit is
+    * written, not yet referenced by any manifest — when the commit is
     * skipped (txn replay) or fails (conflict), so conflicts never leak
     * unreachable data files. */
-  private def retractingOnFailure(added: Seq[DataFile])(
+  private[table] def retractingOnFailure(added: Seq[DataFile])(
       body: => Option[Long]): Option[Long] = {
     val res = try body catch {
       case e: Throwable =>
@@ -804,7 +934,6 @@ final class VersionedTable private (
     * large tables use [[append]] / file-level CoW [[Merge]] instead. */
   def commit(
       newSnapshot: DataFrame,
-      changeRows: Option[DataFrame],
       operation: String,
       txn: Option[(String, Long)] = None): Option[Long] = {
     val prev = latestManifest
@@ -814,7 +943,7 @@ final class VersionedTable private (
     if (alreadyApplied) return None
     val added = ingest(newSnapshot)
     retractingOnFailure(added) {
-      commitFiles(added, prev.dataFiles.map(_.path), changeRows, operation,
+      commitFiles(added, prev.dataFiles.map(_.path), None, operation,
         txn, baseVersion = Some(prev.version), conflictsWith = Some(_ => true))
     }
   }
@@ -822,19 +951,19 @@ final class VersionedTable private (
   /** Appends rows as a new version (Bronze-style append, S3; the DSv2
     * INSERT INTO path). O(batch): ONLY the incoming rows are written —
     * the commit is the new files plus the previous manifest's listing,
-    * and the CDF 'insert' rows are a re-read of those same staged files
-    * (nothing nondeterministic is computed twice). Concurrent appends
-    * rebase onto each other automatically (both only add). */
+    * and each row's data and CDF 'insert' copies come from one
+    * projection of the same write (nothing nondeterministic is computed
+    * twice). Concurrent appends rebase onto each other automatically
+    * (both only add). */
   def append(rows: DataFrame, txn: Option[(String, Long)] = None): Option[Long] = {
     require(!isBucketed,
       "append is for log-style tables; bucketed (CoW) tables are maintained by merge")
-    val aligned = align(rows)
-    enforceConstraints(aligned)
-    val added = ingest(aligned)
-    val staged = readFiles(added.map(_.path), schema)
-    retractingOnFailure(added) {
-      commitFiles(added, Seq.empty,
-        Some(staged.withColumn("_change_type", lit("insert"))), "append", txn)
+    val sch = schema
+    val w = write(expand(align(rows), sch, Seq(
+      Alt(lit(true), rowOf(sch), intro = lit(true)),
+      Alt(lit(true), rowOf(sch), Some("insert")))), ingestLabel)
+    retractingOnFailure(w.added) {
+      commitFiles(w.added, Seq.empty, w.changes, "append", txn)
     }
   }
 
@@ -872,7 +1001,7 @@ final class VersionedTable private (
     * fresh set of files — collapses the file scatter accumulated by
     * incremental appends/merges so a following [[vacuum]] can reclaim
     * every superseded file. Emits no CDF rows (no row content changes). */
-  def compact(): Option[Long] = commit(snapshot(), None, "compact")
+  def compact(): Option[Long] = commit(snapshot(), "compact")
 
   /** Bin-packing compaction (Delta's `OPTIMIZE` proper): rewrites ONLY
     * files smaller than `targetRows`, merging them into right-sized
@@ -1182,11 +1311,11 @@ final class VersionedTable private (
     if (touched.isEmpty) return None
     if (prev.properties.get(PROP_DELETE_MODE).exists(_.equalsIgnoreCase("mor")))
       return morDelete(prev, touched, hit)
-    val touchedDf = readDataFiles(touched, prev.schema)
-    val added = ingest(touchedDf.filter(!hit))
-    retractingOnFailure(added) {
-      commitFiles(added, touched.map(_.path),
-        Some(touchedDf.filter(hit).withColumn("_change_type", lit("delete"))),
+    val w = write(expand(readDataFiles(touched, prev.schema), prev.schema, Seq(
+      Alt(!hit, rowOf(prev.schema)),
+      Alt(hit, rowOf(prev.schema), Some("delete")))), ingestLabel)
+    retractingOnFailure(w.added) {
+      commitFiles(w.added, touched.map(_.path), w.changes,
         "delete", baseVersion = Some(prev.version),
         conflictsWith = Some(_ => true))
     }
@@ -1197,9 +1326,8 @@ final class VersionedTable private (
     * commits the touched manifest entries with the tombstone refs
     * attached — data files are untouched. The CDF `delete` rows are
     * derived from the staged tombstones (a semi-join), not a predicate
-    * re-evaluation, so retries and the commit-time CDF write see the
-    * identical row set. Vacuum keeps a DV file alive while any retained
-    * manifest references it. */
+    * re-evaluation, and written once before the commit. Vacuum keeps a
+    * DV file alive while any retained manifest references it. */
   private def morDelete(
       prev: CommitManifest,
       touched: Seq[DataFile],
@@ -1252,14 +1380,17 @@ final class VersionedTable private (
       else Some(f.copy(dvs = f.dvs ++ dvByFile.getOrElse(name, Seq.empty),
         dvRows = Some(f.dvRows.getOrElse(0L) + n)))
     }
-    val changes = readWithMeta(touched, prev.schema)
-      .join(dvDf, Seq("__file", "__pos"), "left_semi")
-      .select(prev.schema.fields.toIndexedSeq.map(f => col(f.name)): _*)
-      .withColumn("_change_type", lit("delete"))
     val res =
-      try commitFiles(updated, updated.map(_.path), Some(changes), "delete",
-        baseVersion = Some(prev.version), conflictsWith = Some(_ => true))
-      catch { case e: Throwable => retract(); throw e }
+      try {
+        val changes =
+          if (!cdfEnabled) None
+          else write(readWithMeta(touched, prev.schema)
+            .join(dvDf, Seq("__file", "__pos"), "left_semi")
+            .select(prev.schema.fields.toIndexedSeq.map(f => col(f.name)): _*)
+            .withColumn(CHANGE_TYPE, lit("delete")), ingestLabel).changes
+        commitFiles(updated, updated.map(_.path), changes, "delete",
+          baseVersion = Some(prev.version), conflictsWith = Some(_ => true))
+      } catch { case e: Throwable => retract(); throw e }
     if (res.isEmpty) retract()
     res
   }
@@ -1277,25 +1408,6 @@ final class VersionedTable private (
     else commitFiles(Seq.empty, Seq.empty, None, "setproperties",
       baseVersion = Some(base.version), newProperties = Some(merged))
   }
-
-  /** CHECK constraints (`graft.constraint.<name>` = boolean SQL expr)
-    * evaluated against a batch of rows about to be written; a violation
-    * fails the write LOUDLY with the constraint's name before any file
-    * is committed (Delta's write-time constraint contract). NULL
-    * evaluations count as violations (a constraint must hold, not
-    * merely not-fail). Enforced on append / overwriteWhere / the
-    * updateWhere post-image — and by [[Merge]] on the rows a merge
-    * introduces (insert + update post-images). */
-  private[table] def enforceConstraints(rows: DataFrame): Unit =
-    properties.foreach { case (k, sql) =>
-      if (k.startsWith(PROP_CONSTRAINT_PREFIX)) {
-        val name = k.stripPrefix(PROP_CONSTRAINT_PREFIX)
-        require(
-          rows.filter(!coalesce(expr(sql).cast("boolean"), lit(false)))
-            .isEmpty,
-          s"CHECK constraint '$name' ($sql) violated by incoming rows")
-      }
-    }
 
   /** Delta's `replaceWhere` / SQL `INSERT INTO … REPLACE WHERE` /
     * `INSERT OVERWRITE`: in ONE atomic commit, rows matching `cond` are
@@ -1316,21 +1428,19 @@ final class VersionedTable private (
     val newRows = align(rows)
     require(newRows.filter(!hit).isEmpty,
       "replaceWhere: every incoming row must satisfy the replaced predicate")
-    enforceConstraints(newRows)
     val touched = touchedFiles(prev, cond)
-    val touchedDf = readDataFiles(touched, prev.schema)
-    // kept (non-matching rows of touched files) and new rows stage as
-    // SEPARATE file sets so the CDF insert projection re-reads exactly
-    // the new files — nothing nondeterministic is computed twice
-    val keptAdded =
-      if (touched.isEmpty) Seq.empty else ingest(touchedDf.filter(!hit))
-    val newAdded = ingest(newRows)
-    val changes =
-      touchedDf.filter(hit).withColumn("_change_type", lit("delete"))
-        .unionByName(readFiles(newAdded.map(_.path), schema)
-          .withColumn("_change_type", lit("insert")))
-    retractingOnFailure(keptAdded ++ newAdded) {
-      commitFiles(keptAdded ++ newAdded, touched.map(_.path), Some(changes),
+    val sch = prev.schema
+    // kept rows and deleted images of the touched files, plus the new
+    // rows with their insert images: one union, one write job
+    val kept = expand(readDataFiles(touched, sch), sch, Seq(
+      Alt(!hit, rowOf(sch)),
+      Alt(hit, rowOf(sch), Some("delete"))))
+    val inserted = expand(newRows, sch, Seq(
+      Alt(lit(true), rowOf(sch), intro = lit(true)),
+      Alt(lit(true), rowOf(sch), Some("insert"))))
+    val w = write(kept.unionByName(inserted), ingestLabel)
+    retractingOnFailure(w.added) {
+      commitFiles(w.added, touched.map(_.path), w.changes,
         "overwrite", baseVersion = Some(prev.version),
         conflictsWith = Some(_ => true))
     }
@@ -1349,17 +1459,16 @@ final class VersionedTable private (
     val prev = latestManifest
     val touched = touchedFiles(prev, cond)
     if (touched.isEmpty) return None
-    val touchedDf = readDataFiles(touched, prev.schema)
-    val fields = prev.schema.fields
-    val pre = touchedDf.filter(hit)
-    val post = pre.select(fields.toIndexedSeq.map(f =>
+    val sch = prev.schema
+    val post = struct(sch.fields.toIndexedSeq.map(f =>
       set.get(f.name).map(_.cast(f.dataType)).getOrElse(col(f.name)).as(f.name)): _*)
-    enforceConstraints(post)
-    val added = ingest(touchedDf.filter(!hit).unionByName(post))
-    val changes = pre.withColumn("_change_type", lit("update_preimage"))
-      .unionByName(post.withColumn("_change_type", lit("update_postimage")))
-    retractingOnFailure(added) {
-      commitFiles(added, touched.map(_.path), Some(changes), "update",
+    val w = write(expand(readDataFiles(touched, sch), sch, Seq(
+      Alt(!hit, rowOf(sch)),
+      Alt(hit, post, intro = lit(true)),
+      Alt(hit, rowOf(sch), Some("update_preimage")),
+      Alt(hit, post, Some("update_postimage")))), ingestLabel)
+    retractingOnFailure(w.added) {
+      commitFiles(w.added, touched.map(_.path), w.changes, "update",
         baseVersion = Some(prev.version), conflictsWith = Some(_ => true))
     }
   }
@@ -1403,7 +1512,13 @@ final class VersionedTable private (
     * is recorded in `_changes/_vacuum_watermark`; CDF consumers check it
     * at start and fail loudly instead of silently skipping vacuumed
     * history ([[graft.streaming.CdcStreams.startGoldAggregate]]).
-    * Returns the versions whose manifests were removed. */
+    *
+    * Orphans — files of a writer that crashed between its write and its
+    * commit, which no manifest ever listed — are reclaimed once older
+    * than [[VersionedTable.ORPHAN_RETENTION_MS]]: unlisted files under
+    * `data/`, `_dv/` and `_bloom/`, unpublished hidden change links, and
+    * `_staging/` leftovers. The age bar keeps every in-flight writer's
+    * files. Returns the versions whose manifests were removed. */
   def vacuum(
       retainVersions: Int = 2,
       cdfLowWatermark: Option[Long] = None): Seq[Long] = {
@@ -1470,7 +1585,32 @@ final class VersionedTable private (
       manifestCache.remove(v)
       ()
     }
+    reclaimOrphans(live ++ liveDvs ++ liveBlooms)
     removed
+  }
+
+  private def reclaimOrphans(listed: Set[String]): Unit = {
+    val horizon = System.currentTimeMillis() - ORPHAN_RETENTION_MS
+    def newest(p: Path): Long =
+      Using.resource(Files.walk(p))(_.iterator.asScala
+        .map(Files.getLastModifiedTime(_).toMillis).max)
+    Seq(DATA_DIR, DV_DIR, BLOOM_DIR).map(root.resolve).filter(Files.isDirectory(_))
+      .foreach { dir =>
+        Using.resource(Files.walk(dir))(_.iterator.asScala
+          .filter(Files.isRegularFile(_)).toSeq)
+          .filter(p => !listed(root.relativize(p).toString) && newest(p) < horizon)
+          .foreach(Files.deleteIfExists)
+      }
+    // hidden change links still unpublished after a heal
+    healChangeFiles()
+    if (Files.isDirectory(changesDir))
+      Using.resource(Files.list(changesDir))(_.iterator.asScala
+        .filter(_.getFileName.toString.startsWith(".v")).toSeq)
+        .filter(newest(_) < horizon).foreach(Files.deleteIfExists)
+    val staging = root.resolve(STAGING_DIR)
+    if (Files.isDirectory(staging))
+      Using.resource(Files.list(staging))(_.iterator.asScala.toSeq)
+        .filter(newest(_) < horizon).foreach(deleteRecursively)
   }
 
   /** Highest CDF version ever deleted by [[vacuum]] — a consumer whose
@@ -1524,6 +1664,15 @@ object VersionedTable {
   /** Transient clustering column of [[VersionedTable.zorder]] rewrites;
     * dropped before the write, never lands in a file. */
   val ZORDER_COL = "__zorder"
+  /** CDF change-type column: stored in change files; in a commit's
+    * write input, null marks a data row. */
+  val CHANGE_TYPE = "_change_type"
+  /** Transient write-input flag: the data rows a commit introduces
+    * (CHECK constraints judge them). Never lands in a file. */
+  private[table] val INTRO_COL = "__intro"
+  /** Transient partition column splitting one commit write into data
+    * (`__cdf=false/`) and change (`__cdf=true/`) files. */
+  private[table] val CDF_COL = "__cdf"
   /** Property prefix of write-time CHECK constraints:
     * `graft.constraint.<name>` = a boolean SQL expression every written
     * row must satisfy. */
@@ -1563,6 +1712,10 @@ object VersionedTable {
   /** Bloom sizing: bits per row (default 10 → ~0.9% false positives
     * with k=7). Per-file bit count = nextPow2(rows * bitsPerRow). */
   val PROP_BLOOM_BITS_PER_ROW = "graft.bloom.bitsPerRow"
+  /** Age past which [[VersionedTable.vacuum]] reclaims files no
+    * manifest lists: Delta's default deleted-file retention, far beyond
+    * any writer's time between its write and its commit. */
+  val ORPHAN_RETENTION_MS: Long = 7L * 24 * 3600 * 1000
   /** Table property setting the manifest checkpoint cadence: every N-th
     * version embeds the full file listing; the versions between are
     * O(delta) manifests resolved on read. */
@@ -1576,6 +1729,34 @@ object VersionedTable {
         org.apache.spark.sql.types.LongType, nullable = false),
       StructField("_commit_timestamp",
         org.apache.spark.sql.types.TimestampType, nullable = false)))
+
+  /** Appends `_commit_version` / `_commit_timestamp` to a scan of
+    * per-commit change files, parsed from each file's name
+    * `v<version>-<commitMillis>-<part>.parquet` — the stamps a commit
+    * gives its change files by naming them, so a rebase renames and
+    * never rewrites. */
+  private def withCommitStamps(scan: DataFrame): DataFrame = {
+    val name = split(col("_metadata.file_name"), "-", 3)
+    scan.select(col("*"),
+      substring(name.getItem(0), 2, 19).cast("long").as("_commit_version"),
+      timestamp_millis(name.getItem(1).cast("long")).as("_commit_timestamp"))
+  }
+
+  /** Version of a (published or hidden-minus-dot) change file name. */
+  private def changeFileVersion(name: String): Option[Long] =
+    if (!name.startsWith("v") || !name.contains("-")) None
+    else Try(name.substring(1, name.indexOf('-')).toLong).toOption
+
+  /** The columns of `schema`, packed as one struct (an [[Alt]] row). */
+  private[table] def rowOf(schema: StructType): Column =
+    struct(schema.fields.toIndexedSeq.map(f => col(f.name)): _*)
+
+  private[table] def parquetFilesUnder(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else Using.resource(Files.walk(dir)) { s =>
+      s.iterator.asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    }
 
   def exists(path: String): Boolean =
     Files.isDirectory(Paths.get(path).resolve(COMMITS_DIR))

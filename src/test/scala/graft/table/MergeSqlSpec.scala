@@ -103,4 +103,29 @@ class MergeSqlSpec extends SparkSpec {
     }
     VersionedTable.deleteRecursively(base)
   }
+
+  test("an unqualified column resolves to the side that has it; on both sides it is ambiguous") {
+    import org.apache.spark.sql.types._
+    val base = Files.createTempDirectory("merge-sql-unq")
+    val t = VersionedTable.create(spark, s"$base/t", StructType(Seq(
+      StructField("k", LongType), StructField("total", LongType))))
+    val tables = Map("t" -> t)
+    Seq((1L, 5L), (2L, 7L)).toDF("k", "delta").createOrReplaceTempView("src_unq")
+    // `total` is a target column only, `delta` a source column only
+    val upsert = "MERGE INTO t USING src_unq s ON s.k = t.k " +
+      "WHEN MATCHED THEN UPDATE SET total = total + delta " +
+      "WHEN NOT MATCHED THEN INSERT (k, total) VALUES (s.k, delta)"
+    MergeSql.run(spark, upsert, tables)
+    MergeSql.run(spark, upsert, tables)
+    assert(t.snapshot().as[(Long, Long)].collect().toMap === Map(1L -> 10L, 2L -> 14L))
+
+    // `k` is on both sides: unqualified, it names neither
+    val e = intercept[IllegalArgumentException] {
+      MergeSql.run(spark, "MERGE INTO t USING src_unq s ON s.k = t.k " +
+        "WHEN MATCHED AND k > 1 THEN DELETE", tables)
+    }
+    assert(e.getMessage.contains("ambiguous column 'k'"), e.getMessage)
+    assert(t.latestVersion === 2L, "the rejected MERGE must not commit")
+    VersionedTable.deleteRecursively(base)
+  }
 }

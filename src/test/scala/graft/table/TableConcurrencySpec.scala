@@ -30,9 +30,29 @@ class TableConcurrencySpec extends SparkSpec {
     WhenMatchedUpdate(),
     WhenNotMatchedInsert())
 
+  /** Each of `versions` holds exactly one writer's change rows (keys
+    * from `writers`, one writer per version), stamped with that version
+    * and its manifest's commit time — however the race rebased them. */
+  private def assertOneWriterPerVersion(
+      t: VersionedTable, versions: Seq[Long], writers: Set[Set[Long]]): Unit = {
+    val seen = versions.map { v =>
+      val ch = t.changes(v, Some(v))
+        .select($"id", $"_commit_version", $"_commit_timestamp")
+        .as[(Long, Long, java.sql.Timestamp)].collect()
+      assert(ch.map(_._2).toSet === Set(v), s"v$v change rows carry other versions")
+      assert(ch.map(_._3.getTime).toSet === Set(t.manifest(v).timestampMs),
+        s"v$v change rows carry another commit time")
+      val keys = ch.map(_._1).toSet
+      assert(writers(keys), s"v$v holds keys $keys, not one writer's")
+      keys
+    }
+    assert(seen.toSet === writers, "every writer's changes must land once")
+  }
+
   test("two concurrent merges on one table: both commits land, no lost update") {
     val path = tmp("cc-merge")
     val t = VersionedTable.create(spark, path, schema,
+      Map(VersionedTable.PROP_CDF -> "true"),
       bucketBy = Some(BucketSpec(Seq("id"), 8)))
     Merge.run(t, (1L to 40L).map(i => (i, s"v$i")).toDF("id", "v"),
       Seq("id"), clauses)
@@ -57,6 +77,7 @@ class TableConcurrencySpec extends SparkSpec {
     (1L to 10L).foreach(i => assert(m(i) === s"A$i", s"writer A's update to $i lost"))
     (21L to 30L).foreach(i => assert(m(i) === s"B$i", s"writer B's update to $i lost"))
     (11L to 20L).foreach(i => assert(m(i) === s"v$i"))
+    assertOneWriterPerVersion(t, Seq(2L, 3L), Set((1L to 10L).toSet, (21L to 30L).toSet))
   }
 
   test("racing merges with OVERLAPPING keys serialize to one sequential order") {
@@ -94,7 +115,8 @@ class TableConcurrencySpec extends SparkSpec {
 
   test("two concurrent appends on one table: both land via CAS rebase") {
     val path = tmp("cc-append")
-    val t = VersionedTable.create(spark, path, schema)
+    val t = VersionedTable.create(spark, path, schema,
+      Map(VersionedTable.PROP_CDF -> "true"))
     val pool = Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
@@ -105,6 +127,7 @@ class TableConcurrencySpec extends SparkSpec {
     } finally pool.shutdown()
     assert(t.latestVersion === 2L)
     assert(t.snapshot().count() === 100L)
+    assertOneWriterPerVersion(t, Seq(1L, 2L), Set((1L to 50L).toSet, (101L to 150L).toSet))
   }
 
   test("append write-amplification is O(batch): old files are never rewritten") {

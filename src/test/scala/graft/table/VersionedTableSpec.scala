@@ -196,6 +196,83 @@ class VersionedTableSpec extends SparkSpec {
     assert(t.changes(1).count() === 3L)
   }
 
+  private val upsert = Seq(WhenMatchedUpdate(), WhenNotMatchedInsert())
+
+  private def cdfBucketed(path: String): VersionedTable = {
+    val t = VersionedTable.create(spark, path, kvSchema,
+      Map(VersionedTable.PROP_CDF -> "true"),
+      bucketBy = Some(BucketSpec(Seq("id"), 4)))
+    Merge.run(t, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"), upsert)
+    t
+  }
+
+  test("crash after the merge's write, before its CAS: readers stay on v, vacuum reclaims the orphans") {
+    import scala.jdk.CollectionConverters._
+    import scala.util.Using
+    val path = tmpDir("vt-crash-write")
+    val root = java.nio.file.Paths.get(path)
+    val t = cdfBucketed(path)
+    val before = t.snapshot().as[(Long, String)].collect().toSet
+    val cdfBefore = t.changes(0).count()
+
+    // the merge writes its data and change files, then the process dies
+    // before commitFiles runs
+    val staged = Merge.stage(t, t.latestManifest,
+      Seq((2L, "b2"), (3L, "c")).toDF("id", "v"), Seq("id"), upsert,
+      validateUniqueKeys = false, mergeSchema = false)
+    val orphans = staged.written.added.map(f => root.resolve(f.path)) ++
+      staged.written.changes.toSeq.flatMap(_.files)
+    assert(staged.written.added.nonEmpty && staged.written.changes.nonEmpty)
+    assert(orphans.forall(Files.exists(_)))
+
+    val fresh = VersionedTable.load(spark, path)
+    assert(fresh.latestVersion === 1L)
+    assert(fresh.snapshot().as[(Long, String)].collect().toSet === before)
+    assert(fresh.changes(2).isEmpty, "no change rows past v1")
+    assert(fresh.changes(0).count() === cdfBefore)
+
+    // a vacuum keeps a writer's unpublished files while the writer may
+    // still be in flight...
+    fresh.vacuum(retainVersions = 10)
+    assert(orphans.forall(Files.exists(_)))
+    // ...and reclaims them once they are older than any attempt runs
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - VersionedTable.ORPHAN_RETENTION_MS - 60000L)
+    val staging = root.resolve(VersionedTable.STAGING_DIR)
+    (staged.written.added.map(f => root.resolve(f.path)) ++
+      Using.resource(Files.walk(staging))(_.iterator.asScala.toSeq))
+      .foreach(Files.setLastModifiedTime(_, old))
+    fresh.vacuum(retainVersions = 10)
+    assert(orphans.forall(!Files.exists(_)), "orphaned data and change files must go")
+    assert(Using.resource(Files.list(staging))(_.iterator.asScala.isEmpty))
+    assert(fresh.snapshot().as[(Long, String)].collect().toSet === before,
+      "published files must survive the orphan sweep")
+    assert(fresh.manifest(1).dataFiles.forall(f => Files.exists(root.resolve(f.path))))
+  }
+
+  test("crash after the merge's CAS, before the unhide: the next read heals with derived stamps") {
+    val path = tmpDir("vt-crash-cas")
+    val t = cdfBucketed(path)
+    Merge.run(t, Seq((2L, "b2"), (3L, "c")).toDF("id", "v"), Seq("id"), upsert)
+    val m = t.manifest(2)
+    // the state a crash leaves after the manifest landed: its change
+    // files still carry their hidden names
+    val changesDir = java.nio.file.Paths.get(path).resolve(VersionedTable.CHANGES_DIR)
+    assert(m.changeFiles.nonEmpty)
+    m.changeFiles.foreach(n => Files.move(changesDir.resolve(n), changesDir.resolve(s".$n")))
+
+    val fresh = VersionedTable.load(spark, path)
+    val rows = fresh.changes(2, Some(2L))
+      .select("id", "_change_type", "_commit_version", "_commit_timestamp")
+      .as[(Long, String, Long, java.sql.Timestamp)].collect()
+    assert(rows.map(r => (r._1, r._2)).toSet === Set(
+      (2L, "update_preimage"), (2L, "update_postimage"), (3L, "insert")))
+    assert(rows.map(_._3).toSet === Set(2L))
+    assert(rows.map(_._4.getTime).toSet === Set(m.timestampMs))
+    assert(m.changeFiles.forall(n => Files.exists(changesDir.resolve(n))),
+      "the read must unhide the published files")
+  }
+
   test("catalog: database and table DDL") {
     val wh = Files.createTempDirectory("vt-cat").toString
     val cat = new GraftCatalog(spark, wh)
