@@ -20,10 +20,11 @@ import graft.table._
   *   - '''postings''' `(pkey, doc_id, tok, tf, dl)` — one row per
   *     (document, distinct token), keyed AND hash-bucketed by the
   *     composite `pkey` so the CoW merge rewrites only buckets holding
-  *     changed pairs. Maintained from the source's CDF: changed docs'
-  *     stale pairs become explicit DELETEs (anti-join of the indexed
-  *     pairs against the re-derivation), new/updated pairs UPSERT — one
-  *     three-clause [[Merge]] with the source version in its txn.
+  *     changed pairs. Maintained from the source's CDF by
+  *     [[graft.table.KeyedRefresh.rederive]]: changed docs' stale pairs
+  *     become explicit DELETEs (anti-join of the indexed pairs against
+  *     the re-derivation), new/updated pairs UPSERT — one three-clause
+  *     [[Merge]] with the source version in its txn.
   *   - '''doclens''' `(doc_id, dl, k)` — per-document length (plus the
   *     constant `k` grouping column the corpus-stats view groups by),
   *     a plain [[IncrementalIndex.refresh]] single-key derivation.
@@ -38,12 +39,12 @@ import graft.table._
   * == 100 TB design ==
   * Refresh is O(changed docs × their tokens + touched buckets): the
   * stale-pair read is key-pruned ([[VersionedTable.snapshotForKeys]],
-  * falling back to a semi-join past [[Bm25Ops.KEY_CAP]] keys), the
-  * merge rewrites only buckets holding changed doc_ids, and the stats
-  * views fold the delta alone. Scoring reads postings filtered to the
-  * |Q| query terms (parquet dictionary/stats pruning on `tok`), joins
-  * the |Q|-row broadcast df slice and the 1-row broadcast corpus
-  * stats — no corpus-scale work on the query path. A crash between
+  * falling back to a semi-join past [[VersionedTable.KEY_PRUNE_MAX]]
+  * keys), the merge rewrites only buckets holding changed doc_ids, and
+  * the stats views fold the delta alone. Scoring reads postings
+  * filtered to the |Q| query terms (parquet dictionary/stats pruning on
+  * `tok`), joins the |Q|-row broadcast df slice and the 1-row broadcast
+  * corpus stats — no corpus-scale work on the query path. A crash between
   * stages re-runs only the stage whose watermark lags; every stage is
   * idempotent under replay.
   *
@@ -57,8 +58,6 @@ final class Bm25Index private (
     val doclens: VersionedTable,
     val termStats: AggView,
     val corpusStats: AggView) {
-  import Bm25Ops.{APP, derivePostings, KEY_CAP}
-
   /** Applies all source changes not yet reflected, stage by stage:
     * postings + doclens from the source CDF, then the stats views from
     * the index tables' CDF. Returns the postings version committed, or
@@ -119,7 +118,7 @@ final class Bm25Index private (
 }
 
 object Bm25Index {
-  import Bm25Ops.{APP, derivePostings, KEY_CAP}
+  import Bm25Ops.{APP, derivePostings}
 
   private[llm] def refreshDoclens(
       doclens: VersionedTable, source: VersionedTable): Option[Long] =
@@ -130,41 +129,8 @@ object Bm25Index {
       APP)
 
   private[llm] def refreshPostings(
-      postings: VersionedTable, source: VersionedTable): Option[Long] = {
-    val latest = source.latestVersion
-    val since = postings.lastTxn(APP).getOrElse(0L) + 1
-    if (latest < since) return None
-    // net and the re-derived postings both feed multiple consumers
-    // (emptiness probe / changed-key collect / merge source / stale
-    // anti-join build) — persisted for the refresh so the CDF scan and
-    // the tokenize-explode-aggregate run once each (guide §5); both
-    // O(changed docs), bounded
-    val net = IncrementalIndex.netChanges(source.changes(since), "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (net.isEmpty) return None
-      val newPost = derivePostings(net.filter(col("__op") === "UPSERT"))
-        .withColumn("__op", lit("UPSERT"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // indexed pairs of the changed docs that the re-derivation does
-        // not re-assert (deleted docs: all of them; updated docs: tokens
-        // that left) — read key-pruned, deleted explicitly
-        val changedKeys = net.select(col("doc_id")).distinct()
-        val bounded = changedKeys.limit(KEY_CAP + 1).collect().map(_.getLong(0)).toSeq
-        val old =
-          if (bounded.length <= KEY_CAP) postings.snapshotForKeys("doc_id", bounded)
-          else postings.snapshot().join(changedKeys, Seq("doc_id"), "left_semi")
-        val stale = old.select(col("pkey"), col("doc_id"), col("tok"),
-            col("tf"), col("dl"))
-          .join(newPost.select(col("pkey")), Seq("pkey"), "left_anti")
-          .withColumn("__op", lit("DELETE"))
-        Merge.run(postings, newPost.unionByName(stale), Seq("pkey"),
-          IncrementalIndex.clauses, txn = Some(APP -> latest))
-        Some(postings.latestVersion)
-      } finally newPost.unpersist()
-    } finally net.unpersist()
-  }
+      postings: VersionedTable, source: VersionedTable): Option[Long] =
+    IncrementalIndex.refreshDerived(postings, source, derivePostings, "pkey", APP)
 
   private def postingsSchema = StructType(Seq(
     StructField("pkey", StringType),
@@ -228,10 +194,6 @@ object Bm25Ops extends QueryModule {
   import Tables._
 
   private[llm] val APP = "bm25-index"
-  /** Largest changed-doc key set read via [[VersionedTable.snapshotForKeys]]
-    * before falling back to a semi-join (the [[graft.table.JoinView]]
-    * rationale). */
-  private[llm] val KEY_CAP = 10000
 
   /** `(pkey, doc_id, tok, tf, dl)` pairs of a batch of `(doc_id, text)`
     * rows — tokenization identical to the query-path `q_bm25`

@@ -24,11 +24,11 @@ import graft.table._
   *   - '''postings''' `(pkey, doc_id, chunk_start, tok, tf, dl)` — one
   *     row per (chunk, distinct token), `pkey = doc|start|tok`,
   *     hash-bucketed by pkey so merges rewrite only buckets holding
-  *     changed pairs. Maintained from the source CDF: a changed doc's
-  *     chunks re-derive, pairs the re-derivation does not re-assert
-  *     (deleted docs: all; shortened docs: trailing chunks and
-  *     vanished tokens) become explicit DELETEs via a key-pruned
-  *     anti-join.
+  *     changed pairs. Maintained from the source CDF by
+  *     [[graft.table.KeyedRefresh.rederive]]: a changed doc's chunks
+  *     re-derive, pairs the re-derivation does not re-assert (deleted
+  *     docs: all; shortened docs: trailing chunks and vanished tokens)
+  *     become explicit DELETEs via a key-pruned anti-join.
   *   - '''chunklens''' `(ckey, doc_id, chunk_start, dl, k)` — per-chunk
   *     token length (the BM25 `dl`), same derive + anti-join shape
   *     (a document's CHUNK COUNT can shrink, so single-key upserts are
@@ -41,8 +41,8 @@ import graft.table._
   * == 100 TB design ==
   * Refresh is O(changed docs × their chunk-tokens + touched buckets);
   * the stale-pair read is key-pruned ([[VersionedTable.snapshotForKeys]]
-  * on doc_id, semi-join past [[Bm25Ops.KEY_CAP]]). Scoring reads
-  * postings filtered to the |Q| query terms, joins the |Q|-row
+  * on doc_id, semi-join past [[VersionedTable.KEY_PRUNE_MAX]]). Scoring
+  * reads postings filtered to the |Q| query terms, joins the |Q|-row
   * broadcast df slice and the 1-row broadcast stats, and takes the
   * global top-K via [[graft.operators.RankOps.topK]]
   * (TakeOrderedAndProject — never a single-partition sort). Context
@@ -64,13 +64,14 @@ final class ChunkBm25Index private (
     val chunklens: VersionedTable,
     val termStats: AggView,
     val corpusStats: AggView) {
-  import ChunkBm25Index.{refreshDerived, deriveChunkPostings, deriveChunklens}
+  import ChunkBm25Index.{APP, deriveChunkPostings, deriveChunklens}
+  import IncrementalIndex.refreshDerived
   import TextOps.{CHUNK, STRIDE, CHUNK_K}
 
   /** Applies all source changes not yet reflected, stage by stage. */
   def refresh(source: VersionedTable): Option[Long] = {
-    val committed = refreshDerived(postings, source, deriveChunkPostings, "pkey")
-    refreshDerived(chunklens, source, deriveChunklens, "ckey")
+    val committed = refreshDerived(postings, source, deriveChunkPostings, "pkey", APP)
+    refreshDerived(chunklens, source, deriveChunklens, "ckey", APP)
     termStats.refresh(postings)
     corpusStats.refresh(chunklens)
     committed
@@ -128,7 +129,6 @@ final class ChunkBm25Index private (
 }
 
 object ChunkBm25Index {
-  import Bm25Ops.KEY_CAP
   import TextOps.{CHUNK, STRIDE}
 
   private[llm] val APP = "chunk-bm25-index"
@@ -169,46 +169,6 @@ object ChunkBm25Index {
       least(col("n") - col("start"), lit(CHUNK)).cast("long").as("dl"),
       lit(0).as("k"))
 
-  /** The shared maintenance step: re-derive the changed docs' rows,
-    * UPSERT them, DELETE the previously-indexed rows the re-derivation
-    * no longer asserts (key-pruned read on doc_id, anti-join on the
-    * composite key) — one three-clause [[Merge]] carrying the source
-    * version as the stage watermark. */
-  private def refreshDerived(table: VersionedTable, source: VersionedTable,
-      derive: DataFrame => DataFrame, keyCol: String): Option[Long] = {
-    val latest = source.latestVersion
-    val since = table.lastTxn(APP).getOrElse(0L) + 1
-    if (latest < since) return None
-    // net feeds the emptiness probe, the changed-key collect, and the
-    // derive branch; fresh feeds the merge source AND the stale
-    // anti-join's build side (its chunk re-derivation is a real
-    // explode+aggregate shuffle) — both persisted for the refresh so
-    // each computes once (guide §5), both O(changed docs), bounded
-    val net = IncrementalIndex.netChanges(source.changes(since), "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (net.isEmpty) return None
-      val fresh = derive(net.filter(col("__op") === "UPSERT").drop("__op"))
-        .withColumn("__op", lit("UPSERT"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val changedKeys = net.select(col("doc_id")).distinct()
-        val bounded = changedKeys.limit(KEY_CAP + 1).collect()
-          .map(_.getLong(0)).toSeq
-        val old =
-          if (bounded.length <= KEY_CAP) table.snapshotForKeys("doc_id", bounded)
-          else table.snapshot().join(changedKeys, Seq("doc_id"), "left_semi")
-        val stale = old
-          .join(fresh.select(col(keyCol)), Seq(keyCol), "left_anti")
-          .withColumn("__op", lit("DELETE"))
-          .select(fresh.columns.map(col).toIndexedSeq: _*)
-        Merge.run(table, fresh.unionByName(stale), Seq(keyCol),
-          IncrementalIndex.clauses, txn = Some(APP -> latest))
-        Some(table.latestVersion)
-      } finally fresh.unpersist()
-    } finally net.unpersist()
-  }
-
   private def postingsSchema = StructType(Seq(
     StructField("pkey", StringType),
     StructField("doc_id", LongType),
@@ -237,13 +197,13 @@ object ChunkBm25Index {
       IncrementalIndex.indexProps("chunk-bm25", source, "text", "pkey") +
         (VersionedTable.PROP_CDF -> "true"),
       bucketBy = Some(BucketSpec(Seq("pkey"), BUCKETS)))
-    refreshDerived(post, source, deriveChunkPostings, "pkey")
+    IncrementalIndex.refreshDerived(post, source, deriveChunkPostings, "pkey", APP)
     val cls = VersionedTable.create(s, root.resolve("chunklens").toString,
       chunklensSchema,
       IncrementalIndex.indexProps("chunk-bm25-len", source, "text", "ckey") +
         (VersionedTable.PROP_CDF -> "true"),
       bucketBy = Some(BucketSpec(Seq("ckey"), BUCKETS)))
-    refreshDerived(cls, source, deriveChunklens, "ckey")
+    IncrementalIndex.refreshDerived(cls, source, deriveChunklens, "ckey", APP)
     val term = AggView.build(post, root.resolve("termstats").toString,
       Seq("tok"), sums = Seq.empty)
     val corpus = AggView.build(cls, root.resolve("corpusstats").toString,

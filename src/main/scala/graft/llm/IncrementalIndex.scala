@@ -49,12 +49,6 @@ object IncrementalIndex {
     PROP_COLUMN -> column,
     PROP_KEY -> key)
 
-  /** Clauses applying a net CDC batch: delete wins, upserts rewrite. */
-  private[llm] val clauses = Seq(
-    WhenMatchedDelete(Some(col("source.__op") === "DELETE")),
-    WhenMatchedUpdate(Some(col("source.__op") === "UPSERT")),
-    WhenNotMatchedInsert(Some(col("source.__op") =!= "DELETE")))
-
   /** Net effect per key of the source's CDF since `sinceV`: the LATEST
     * post-state per key (preimages dropped), tagged `__op` =
     * DELETE | UPSERT. */
@@ -73,7 +67,8 @@ object IncrementalIndex {
     * sees only UPSERT rows). `observe` runs on the same raw upsert
     * batch BEFORE derivation — quantized indexes compute their drift
     * metric there (O(batch), broadcast quantizer). Returns the index
-    * version committed, or None when the index was already current.
+    * version committed (a `refresh-noop` watermark commit when the span
+    * nets to no change), or None when the index was already current.
     * Requires the source to have CDF enabled. */
   def refresh(
       index: VersionedTable,
@@ -92,15 +87,46 @@ object IncrementalIndex {
     val net = netChanges(source.changes(since), key)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (net.isEmpty) return None
+      if (net.isEmpty) {
+        index.commitFiles(Seq.empty, Seq.empty, None, "refresh-noop",
+          txn = Some(appId -> latest))
+        return Some(index.latestVersion)
+      }
       val rawUps = net.filter(col("__op") === "UPSERT")
       observe(rawUps)
       val ups = derive(rawUps)
       val src = ups.unionByName(net.filter(col("__op") === "DELETE"),
         allowMissingColumns = true)
-      Merge.run(index, src, Seq(key), clauses, txn = Some(appId -> latest))
+      Merge.run(index, src, Seq(key), Merge.upsertDeleteClauses,
+        txn = Some(appId -> latest))
       Some(index.latestVersion)
     } finally net.unpersist()
+  }
+
+  /** Applies all source changes to an index holding SEVERAL rows per
+    * source document, keyed by `stateKey` and carrying `doc_id`: the
+    * changed documents' rows re-derive (`derive` sees their UPSERT
+    * rows) and the rows the re-derivation no longer asserts delete —
+    * [[KeyedRefresh.rederive]] scoped on `doc_id`, with the source
+    * version as the `appId` watermark. Returns the index version
+    * committed, or None when the index was already current. */
+  private[llm] def refreshDerived(
+      index: VersionedTable,
+      source: VersionedTable,
+      derive: DataFrame => DataFrame,
+      stateKey: String,
+      appId: String): Option[Long] = {
+    val latest = source.latestVersion
+    val since = index.lastTxn(appId).getOrElse(0L) + 1
+    if (latest < since) return None
+    // net feeds the changed-key collect and the derive branch —
+    // persisted so the CDF scan and net window run once; O(changed docs)
+    val net = netChanges(source.changes(since), "doc_id")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try KeyedRefresh.rederive(index, Seq(stateKey),
+      net.select(col("doc_id")).distinct(), appId -> latest,
+      _ => derive(net.filter(col("__op") === "UPSERT").drop("__op")))
+    finally net.unpersist()
   }
 }
 

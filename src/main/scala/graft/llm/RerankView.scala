@@ -44,8 +44,9 @@ import graft.table._
   * worst case re-scores the corpus once per slack-exhausted query, the
   * same single pass the batch query pays EVERY run. The standing set
   * is bounded by its broadcast contract ([[RerankViewOps.MAX_STANDING]]
-  * guards the per-refresh |Q|-row validity collect — the KEY_PRUNE_MAX
-  * lesson, enforced rather than assumed).
+  * guards the per-refresh |Q|-row validity collect — the
+  * [[VersionedTable.KEY_PRUNE_MAX]] lesson, enforced rather than
+  * assumed).
   *
   * == Correctness invariant (oracle + spec) ==
   * After any refresh, [[topk]] equals the declarative per-query rerank
@@ -66,7 +67,7 @@ final class RerankView private[llm] (
     // injectable ONLY so specs can drive the standing-set cap without
     // building 4096-query fixtures; production uses MAX_STANDING
     private[llm] val maxStanding: Int = RerankViewOps.MAX_STANDING) {
-  import RerankViewOps.{APP, mergeClauses, scorePairs}
+  import RerankViewOps.{APP, scorePairs}
   private val MAX_STANDING = maxStanding
   private val K = k
   private val CAND = k + slack
@@ -77,20 +78,10 @@ final class RerankView private[llm] (
 
   private def spark: SparkSession = state.spark
 
-  /** Filters a frame to rows whose `q_id` ∈ `vals`: a literal IN up to
-    * [[graft.table.JoinView.IN_LIST_MAX]] values (codegen'd, O(k)
-    * expression tree), a broadcast semi-join past it — the plan must
-    * not grow O(|standing set|) (the [[graft.table.TopKView]] rule). */
+  /** Filters a frame to rows whose `q_id` ∈ `vals` — the plan must not
+    * grow O(|standing set|). */
   private def filterQs(df: DataFrame, vals: Seq[Any]): DataFrame =
-    if (vals.length <= graft.table.JoinView.IN_LIST_MAX)
-      df.filter(col("q_id").isin(vals: _*))
-    else {
-      val keys = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          vals.map(org.apache.spark.sql.Row(_)), 1),
-        StructType(Seq(state.schema("q_id"))))
-      df.join(broadcast(keys), Seq("q_id"), "left_semi")
-    }
+    VersionedTable.filterForKeys(df, state.schema("q_id"), vals)
 
   /** Applies all corpus changes the view has not seen. `queries` is the
     * standing set fixed at [[RerankViewOps.build]] time (grown/shrunk
@@ -189,7 +180,7 @@ final class RerankView private[llm] (
         Merge.run(state,
           fresh.withColumn("__op", lit("UPSERT"))
             .unionByName(dels, allowMissingColumns = true),
-          Seq("q_id", "doc_id"), mergeClauses)
+          Seq("q_id", "doc_id"), Merge.upsertDeleteClauses)
         // folds keep validity (inserts cannot certify positions past the
         // old v — an unseen source row may sit between v and CAND);
         // derives reset it to CAND. The watermark commits HERE, after
@@ -200,7 +191,8 @@ final class RerankView private[llm] (
               .otherwise(least(col("v"), lit(CAND.toLong))))
           .select(col("q_id"), col("valid_n"))
           .withColumn("__op", lit("UPSERT"))
-        Merge.run(meta, newMeta, Seq("q_id"), mergeClauses, extraTxn = wm)
+        Merge.run(meta, newMeta, Seq("q_id"), Merge.upsertDeleteClauses,
+          extraTxn = wm)
         Some(state.latestVersion)
       } finally fresh.unpersist()
     } finally ch.unpersist()
@@ -260,35 +252,29 @@ final class RerankView private[llm] (
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= CAND).drop("__rn")
     Merge.run(state, cand.withColumn("__op", lit("UPSERT")),
-      Seq("q_id", "doc_id"), mergeClauses)
+      Seq("q_id", "doc_id"), Merge.upsertDeleteClauses)
     Merge.run(meta,
       newQueries.select(col("q_id"))
         .withColumn("valid_n", lit(CAND.toLong))
         .withColumn("__op", lit("UPSERT")),
-      Seq("q_id"), mergeClauses)
+      Seq("q_id"), Merge.upsertDeleteClauses)
   }
 
   /** Retires standing queries: deletes their buffer and meta rows.
     * Unknown ids are ignored (retiring an already-gone query is a
-    * no-op, the natural alerting-system semantics). The key set rides
-    * a broadcast semi-join against the state — never an O(|ids|)
-    * literal plan. */
+    * no-op, the natural alerting-system semantics). Both reads are
+    * key-scoped ([[VersionedTable.snapshotForKeys]]) — never an
+    * O(|ids|) literal plan. */
   def dropQueries(ids: Seq[Any]): Unit = {
     if (ids.isEmpty) return
-    val keys = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        ids.map(org.apache.spark.sql.Row(_)), 1),
-      StructType(Seq(state.schema("q_id"))))
-    val stateDels = state.snapshot()
-      .join(broadcast(keys), Seq("q_id"), "left_semi")
+    val stateDels = state.snapshotForKeys("q_id", ids)
       .select(col("q_id"), col("doc_id"))
       .withColumn("__op", lit("DELETE"))
-    Merge.run(state, stateDels, Seq("q_id", "doc_id"), mergeClauses)
-    val metaDels = meta.snapshot()
-      .join(broadcast(keys), Seq("q_id"), "left_semi")
+    Merge.run(state, stateDels, Seq("q_id", "doc_id"), Merge.upsertDeleteClauses)
+    val metaDels = meta.snapshotForKeys("q_id", ids)
       .select(col("q_id"))
       .withColumn("__op", lit("DELETE"))
-    Merge.run(meta, metaDels, Seq("q_id"), mergeClauses)
+    Merge.run(meta, metaDels, Seq("q_id"), Merge.upsertDeleteClauses)
   }
 }
 
@@ -303,11 +289,6 @@ object RerankViewOps extends QueryModule {
     * |Q|-row validity collect is capped here (never corpus-bounded). */
   val MAX_STANDING = 4096
   private val QUERY_MAX_ID = 8 // vec_id < 8 are the query vectors
-
-  private[llm] val mergeClauses = Seq(
-    WhenMatchedDelete(Some(col("source.__op") === "DELETE")),
-    WhenMatchedUpdate(Some(col("source.__op") === "UPSERT")),
-    WhenNotMatchedInsert(Some(col("source.__op") =!= "DELETE")))
 
   /** The retrieval ladder's precision-stage pair scorer over
     * (doc_id, ce, cs) × broadcast (q_id, qe, qs) — the same expression
@@ -348,14 +329,14 @@ object RerankViewOps extends QueryModule {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= cand0).drop("__rn")
     Merge.run(state, cand.withColumn("__op", lit("UPSERT")),
-      Seq("q_id", "doc_id"), mergeClauses)
+      Seq("q_id", "doc_id"), Merge.upsertDeleteClauses)
     // watermark on the LAST commit (meta) — see the crash-atomicity
     // note on [[RerankView.refresh]]
     Merge.run(meta,
       queries.select(col("q_id"))
         .withColumn("valid_n", lit(cand0.toLong))
         .withColumn("__op", lit("UPSERT")),
-      Seq("q_id"), mergeClauses, extraTxn = Map(APP -> latest))
+      Seq("q_id"), Merge.upsertDeleteClauses, extraTxn = Map(APP -> latest))
     new RerankView(state, meta, k, slack, maxStanding)
   }
 

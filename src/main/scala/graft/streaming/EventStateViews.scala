@@ -2,11 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 import graft.{QueryModule, Tables}
-import graft.table.{AggView, BucketSpec, Merge, VersionedTable,
-  WhenMatchedDelete, WhenMatchedUpdate, WhenNotMatchedInsert}
+import graft.table.{AggView, BucketSpec, KeyedRefresh, Merge, VersionedTable}
 
 /** Incrementally-maintained FUNNEL and RETENTION views over a
   * CDF-enabled events table (VERDICT r8 #8): the batch formulations
@@ -18,12 +18,12 @@ import graft.table.{AggView, BucketSpec, Merge, VersionedTable,
   *      O(new events), never a source scan;
   *   2. re-derive ONLY the changed users' per-user state
   *      ([[EventWindows.userStages]] / [[EventWindows.userCohortWeeks]])
-  *      from the events snapshot scoped to those users (stats-pruned
-  *      IN read below [[graft.table.JoinView.IN_LIST_MAX]], plan-
-  *      bounded [[VersionedTable.snapshotForKeys]] up to
-  *      KEY_PRUNE_MAX, full semi-join past it — ingest batches are
-  *      range-clustered by `user_id`, so a user's history lives in
-  *      few files);
+  *      from the events snapshot scoped to those users
+  *      ([[graft.table.KeyScope.read]]: stats-pruned
+  *      [[VersionedTable.snapshotForKeys]] up to
+  *      [[VersionedTable.KEY_PRUNE_MAX]] users, full semi-join past it —
+  *      ingest batches are range-clustered by `user_id`, so a user's
+  *      history lives in few files);
   *   3. three-clause [[Merge]] into a compact per-user STATE table
   *      (bucketed by the state key: one CoW rewrite per touched
   *      bucket), watermark riding the commit's `txn` map;
@@ -41,26 +41,9 @@ import graft.table.{AggView, BucketSpec, Merge, VersionedTable,
   * the full events snapshot.
   */
 final class FunnelView private[streaming] (
-    val state: VersionedTable, val counts: AggView) {
-  import EventStateViews._
-
-  /** Applies all events-table changes the view has not seen. Returns
-    * the state version committed (None when already current). */
-  def refresh(events: VersionedTable): Option[Long] = {
-    val latest = events.latestVersion
-    val since = state.lastTxn(FUNNEL_APP).getOrElse(0L) + 1
-    val out =
-      if (latest < since) None
-      else {
-        val users = events.changes(since).select(col("user_id")).distinct()
-        stateDelta(events, users,
-          ev => EventWindows.userStages(
-            ev.select(col("user_id"), col("t"), col("event_type"))),
-          state, Seq("user_id"), Map(FUNNEL_APP -> latest))
-      }
-    counts.refresh(state)
-    out
-  }
+    stateTable: VersionedTable, val counts: AggView)
+    extends EventStateView(stateTable, EventStateViews.FUNNEL_APP, Seq("user_id"),
+      EventStateViews.funnelDerive, Some(counts)) {
 
   /** The funnel readout `(step, step_name, n_users)`: suffix sums over
     * the maintained ≤3-row stage histogram — O(1), never an O(users)
@@ -77,27 +60,31 @@ final class FunnelView private[streaming] (
   }
 }
 
+/** The per-user state table of an events view, re-derived per changed
+  * user by [[EventStateViews.stateDelta]], plus the [[AggView]] readout
+  * chained off the state's own change feed when the view has one. */
+sealed abstract class EventStateView private[streaming] (
+    val state: VersionedTable,
+    app: String,
+    stateKeys: Seq[String],
+    derive: DataFrame => DataFrame,
+    readout: Option[AggView]) {
+
+  /** Applies all events-table changes the view has not seen. Returns
+    * the state version committed (None when already current). */
+  def refresh(events: VersionedTable): Option[Long] = {
+    val out = EventStateViews.stateDelta(events, state, app, stateKeys, derive)
+    readout.foreach(_.refresh(state))
+    out
+  }
+}
+
 /** See [[FunnelView]] — same maintenance contract for the cohort
   * retention triangle. State: one row per (user, active week). */
 final class RetentionView private[streaming] (
-    val state: VersionedTable, val counts: AggView) {
-  import EventStateViews._
-
-  def refresh(events: VersionedTable): Option[Long] = {
-    val latest = events.latestVersion
-    val since = state.lastTxn(RETENTION_APP).getOrElse(0L) + 1
-    val out =
-      if (latest < since) None
-      else {
-        val users = events.changes(since).select(col("user_id")).distinct()
-        stateDelta(events, users,
-          ev => EventWindows.userCohortWeeks(
-            ev.select(col("user_id"), col("t"))),
-          state, Seq("user_id", "week_us"), Map(RETENTION_APP -> latest))
-      }
-    counts.refresh(state)
-    out
-  }
+    stateTable: VersionedTable, val counts: AggView)
+    extends EventStateView(stateTable, EventStateViews.RETENTION_APP,
+      Seq("user_id", "week_us"), EventStateViews.retentionDerive, Some(counts)) {
 
   /** The retention triangle `(cohort_week_us, week_offset, n_users)`
     * from the maintained aggregate — O(cells). */
@@ -115,17 +102,9 @@ final class RetentionView private[streaming] (
   * [[EventWindows.sessionize]] fold (the SAME code the streaming
   * `flatMapGroupsWithState` operator runs), and stale (user, start)
   * rows delete via the recompute anti-join. */
-final class SessionView private[streaming] (val state: VersionedTable) {
-  import EventStateViews._
-
-  def refresh(events: VersionedTable): Option[Long] = {
-    val latest = events.latestVersion
-    val since = state.lastTxn(SESSION_APP).getOrElse(0L) + 1
-    if (latest < since) return None
-    val users = events.changes(since).select(col("user_id")).distinct()
-    stateDelta(events, users, sessionDerive,
-      state, Seq("user_id", "session_start_us"), Map(SESSION_APP -> latest))
-  }
+final class SessionView private[streaming] (stateTable: VersionedTable)
+    extends EventStateView(stateTable, EventStateViews.SESSION_APP,
+      Seq("user_id", "session_start_us"), EventStateViews.sessionDerive, None) {
 
   /** All current sessions — O(state), identical shape to the batch
     * `q_sessionize` rows. */
@@ -144,22 +123,9 @@ final class SessionView private[streaming] (val state: VersionedTable) {
   * travelling the path, sum_occ = occurrences) track the reporting
   * aggregate off the state table's own CDF at O(Δ). */
 final class PathsView private[streaming] (
-    val state: VersionedTable, val counts: AggView) {
-  import EventStateViews._
-
-  def refresh(events: VersionedTable): Option[Long] = {
-    val latest = events.latestVersion
-    val since = state.lastTxn(PATHS_APP).getOrElse(0L) + 1
-    val out =
-      if (latest < since) None
-      else {
-        val users = events.changes(since).select(col("user_id")).distinct()
-        stateDelta(events, users, EventWindows.userPathCounts,
-          state, Seq("user_id", "path"), Map(PATHS_APP -> latest))
-      }
-    counts.refresh(state)
-    out
-  }
+    stateTable: VersionedTable, val counts: AggView)
+    extends EventStateView(stateTable, EventStateViews.PATHS_APP,
+      Seq("user_id", "path"), EventWindows.userPathCounts, Some(counts)) {
 
   /** Top paths `(rnk, path, n_occurrences, n_users)` from the
     * maintained per-path aggregate — O(paths), identical shape to the
@@ -181,22 +147,9 @@ final class PathsView private[streaming] (
   * revenue readout is an [[AggView]] off the state's own CDF —
   * O(channels), never an O(purchases) scan. */
 final class AttributionView private[streaming] (
-    val state: VersionedTable, val counts: AggView) {
-  import EventStateViews._
-
-  def refresh(events: VersionedTable): Option[Long] = {
-    val latest = events.latestVersion
-    val since = state.lastTxn(ATTR_APP).getOrElse(0L) + 1
-    val out =
-      if (latest < since) None
-      else {
-        val users = events.changes(since).select(col("user_id")).distinct()
-        stateDelta(events, users, EventWindows.userAttribution,
-          state, Seq("user_id", "purchase_id"), Map(ATTR_APP -> latest))
-      }
-    counts.refresh(state)
-    out
-  }
+    stateTable: VersionedTable, val counts: AggView)
+    extends EventStateView(stateTable, EventStateViews.ATTR_APP,
+      Seq("user_id", "purchase_id"), EventWindows.userAttribution, Some(counts)) {
 
   /** Per-channel conversion/revenue readout `(channel, n_purchases,
     * cents)` from the maintained aggregate. */
@@ -214,155 +167,53 @@ object EventStateViews extends QueryModule {
   val ATTR_APP = "attribution-view"
   private val STATE_BUCKETS = 8
 
-  private val stateClauses = Seq(
-    WhenMatchedDelete(Some(col("source.__op") === "DELETE")),
-    WhenMatchedUpdate(Some(col("source.__op") === "UPSERT")),
-    WhenNotMatchedInsert(Some(col("source.__op") =!= "DELETE")))
-
-  /** Events snapshot scoped to the given (bounded or not) user set —
-    * the JoinView keyed-read ladder: literal IN below IN_LIST_MAX,
-    * plan-bounded snapshotForKeys to KEY_PRUNE_MAX, semi-join past. */
-  private def eventsForUsers(
-      events: VersionedTable, users: DataFrame,
-      userVals: Option[Seq[Any]]): DataFrame = userVals match {
-    case Some(Seq())  => events.snapshot().limit(0)
-    case Some(vals) if vals.length <= graft.table.JoinView.IN_LIST_MAX =>
-      events.snapshotWhere(col("user_id").isin(vals: _*))
-    case Some(vals)   => events.snapshotForKeys("user_id", vals)
-    case None         => events.snapshot().join(users, Seq("user_id"), "left_semi")
-  }
-
-  private def boundedKeys(keys: DataFrame): Option[Seq[Any]] = {
-    val rows = keys.limit(graft.table.JoinView.KEY_PRUNE_MAX + 1).collect()
-    if (rows.length > graft.table.JoinView.KEY_PRUNE_MAX) None
-    else Some(rows.toSeq.map(_.get(0)))
-  }
-
-  /** Shared refresh step 2-3: recompute `derive` for the changed users
-    * only and merge upserts + per-key deletes (rows the recompute no
-    * longer produces) into `state`. Returns the committed version, or
-    * None when the CDF span netted out to zero users (watermark still
-    * advances so the span is never rescanned). */
+  /** Shared refresh step 1-3: the changed users of the events CDF
+    * since `app`'s watermark, `derive` recomputed over their events
+    * only, and the state rows the recompute no longer produces deleted
+    * — [[KeyedRefresh.rederive]] scoped on `user_id`. Returns the
+    * committed version (a `refresh-noop` watermark commit when the span
+    * nets to zero users, so it is never rescanned), or None when the
+    * view is already current. */
   private[streaming] def stateDelta(
       events: VersionedTable,
-      users: DataFrame,
-      derive: DataFrame => DataFrame,
       state: VersionedTable,
+      app: String,
       stateKeys: Seq[String],
-      wm: Map[String, Long]): Option[Long] = {
-    val userVals = boundedKeys(users)
-    if (userVals.contains(Seq.empty)) {
-      state.commitFiles(Seq.empty, Seq.empty, None, "refresh-noop",
-        extraTxn = wm)
-      return Some(state.latestVersion)
-    }
-    val fresh = derive(eventsForUsers(events, users, userVals))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // state rows of changed users the recompute no longer produces
-      // (user vanished, or a (user, week) pair no longer active):
-      // read old rows stats-pruned by user, anti-join the fresh set
-      val oldRows = (userVals match {
-        case Some(vals) if vals.length <= graft.table.JoinView.IN_LIST_MAX =>
-          state.snapshotWhere(col("user_id").isin(vals: _*))
-        case Some(vals) => state.snapshotForKeys("user_id", vals)
-        case None => state.snapshot().join(users, Seq("user_id"), "left_semi")
-      }).select(stateKeys.map(col): _*)
-      val dels = oldRows.join(fresh, stateKeys, "left_anti")
-        .withColumn("__op", lit("DELETE"))
-      val src = fresh.withColumn("__op", lit("UPSERT"))
-        .unionByName(dels, allowMissingColumns = true)
-      Merge.run(state, src, stateKeys, stateClauses, extraTxn = wm)
-      Some(state.latestVersion)
-    } finally fresh.unpersist()
+      derive: DataFrame => DataFrame): Option[Long] = {
+    val latest = events.latestVersion
+    val since = state.lastTxn(app).getOrElse(0L) + 1
+    if (latest < since) None
+    else KeyedRefresh.rederive(state, stateKeys,
+      events.changes(since).select(col("user_id")).distinct(), app -> latest,
+      scope => derive(scope.read(events)))
   }
 
   // ---------------------------------------------------------- builders
 
-  /** Creates the state + histogram tables and computes them fully once
-    * from the events snapshot, recording the watermark. */
-  def buildFunnel(events: VersionedTable, root: String): FunnelView = {
-    val spark = events.spark
-    val stateSchema = StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("stage", IntegerType)))
-    val state = VersionedTable.create(spark, s"$root/state", stateSchema,
-      Map(VersionedTable.PROP_CDF -> "true"),
-      bucketBy = Some(BucketSpec(Seq("user_id"), STATE_BUCKETS)))
+  /** Creates a view's per-user state table (CDF on, bucketed by its
+    * keys: one CoW rewrite per touched bucket) and computes it fully
+    * once from the events snapshot, recording `app`'s watermark. */
+  private def buildState(
+      events: VersionedTable,
+      root: String,
+      fields: Seq[StructField],
+      stateKeys: Seq[String],
+      app: String,
+      derive: DataFrame => DataFrame): VersionedTable = {
+    val state = VersionedTable.create(events.spark, s"$root/state",
+      StructType(fields), Map(VersionedTable.PROP_CDF -> "true"),
+      bucketBy = Some(BucketSpec(stateKeys, STATE_BUCKETS)))
     val latest = events.latestVersion
-    Merge.run(state,
-      EventWindows.userStages(events.snapshot()
-          .select(col("user_id"), col("t"), col("event_type")))
-        .withColumn("__op", lit("UPSERT")),
-      Seq("user_id"), stateClauses, extraTxn = Map(FUNNEL_APP -> latest))
-    val counts = AggView.build(state, s"$root/counts", Seq("stage"), Seq.empty)
-    new FunnelView(state, counts)
+    Merge.run(state, derive(events.snapshot()).withColumn("__op", lit("UPSERT")),
+      stateKeys, Merge.upsertDeleteClauses, extraTxn = Map(app -> latest))
+    state
   }
 
-  def buildRetention(events: VersionedTable, root: String): RetentionView = {
-    val spark = events.spark
-    val stateSchema = StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("week_us", LongType),
-      StructField("cohort_week_us", LongType),
-      StructField("week_offset", LongType)))
-    val state = VersionedTable.create(spark, s"$root/state", stateSchema,
-      Map(VersionedTable.PROP_CDF -> "true"),
-      bucketBy = Some(BucketSpec(Seq("user_id", "week_us"), STATE_BUCKETS)))
-    val latest = events.latestVersion
-    Merge.run(state,
-      EventWindows.userCohortWeeks(
-          events.snapshot().select(col("user_id"), col("t")))
-        .withColumn("__op", lit("UPSERT")),
-      Seq("user_id", "week_us"), stateClauses,
-      extraTxn = Map(RETENTION_APP -> latest))
-    val counts = AggView.build(state, s"$root/counts",
-      Seq("cohort_week_us", "week_offset"), Seq.empty)
-    new RetentionView(state, counts)
-  }
+  private[streaming] def funnelDerive(ev: DataFrame): DataFrame =
+    EventWindows.userStages(ev.select(col("user_id"), col("t"), col("event_type")))
 
-  def buildPaths(events: VersionedTable, root: String): PathsView = {
-    val spark = events.spark
-    val stateSchema = StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("path", org.apache.spark.sql.types.StringType),
-      StructField("n_occ", LongType)))
-    val state = VersionedTable.create(spark, s"$root/state", stateSchema,
-      Map(VersionedTable.PROP_CDF -> "true"),
-      bucketBy = Some(BucketSpec(Seq("user_id", "path"), STATE_BUCKETS)))
-    val latest = events.latestVersion
-    Merge.run(state,
-      EventWindows.userPathCounts(events.snapshot())
-        .withColumn("__op", lit("UPSERT")),
-      Seq("user_id", "path"), stateClauses,
-      extraTxn = Map(PATHS_APP -> latest))
-    val counts = AggView.build(state, s"$root/counts", Seq("path"),
-      Seq(("occ", "n_occ")))
-    new PathsView(state, counts)
-  }
-
-  def buildAttribution(events: VersionedTable, root: String): AttributionView = {
-    val spark = events.spark
-    val stateSchema = StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("purchase_id", LongType),
-      StructField("channel", org.apache.spark.sql.types.StringType),
-      StructField("touch_id", LongType),
-      StructField("gap_us", LongType),
-      StructField("cents", LongType)))
-    val state = VersionedTable.create(spark, s"$root/state", stateSchema,
-      Map(VersionedTable.PROP_CDF -> "true"),
-      bucketBy = Some(BucketSpec(Seq("user_id", "purchase_id"), STATE_BUCKETS)))
-    val latest = events.latestVersion
-    Merge.run(state,
-      EventWindows.userAttribution(events.snapshot())
-        .withColumn("__op", lit("UPSERT")),
-      Seq("user_id", "purchase_id"), stateClauses,
-      extraTxn = Map(ATTR_APP -> latest))
-    val counts = AggView.build(state, s"$root/counts", Seq("channel"),
-      Seq("cents" -> "cents"))
-    new AttributionView(state, counts)
-  }
+  private[streaming] def retentionDerive(ev: DataFrame): DataFrame =
+    EventWindows.userCohortWeeks(ev.select(col("user_id"), col("t")))
 
   /** The sessionize fold over an engine-table slice: micros → ts, run
     * the one true fold, back to the state row shape. */
@@ -371,25 +222,53 @@ object EventStateViews extends QueryModule {
         timestamp_micros(col("t")).as("ts"), col("value")))
       .toDF()
 
-  def buildSessions(events: VersionedTable, root: String): SessionView = {
-    val spark = events.spark
-    val stateSchema = StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("session_start_us", LongType),
-      StructField("session_end_us", LongType),
-      StructField("n_events", LongType),
-      StructField("sum_value", org.apache.spark.sql.types.DoubleType)))
-    val state = VersionedTable.create(spark, s"$root/state", stateSchema,
-      Map(VersionedTable.PROP_CDF -> "true"),
-      bucketBy = Some(BucketSpec(Seq("user_id", "session_start_us"),
-        STATE_BUCKETS)))
-    val latest = events.latestVersion
-    Merge.run(state,
-      sessionDerive(events.snapshot()).withColumn("__op", lit("UPSERT")),
-      Seq("user_id", "session_start_us"), stateClauses,
-      extraTxn = Map(SESSION_APP -> latest))
-    new SessionView(state)
+  /** Creates the state + histogram tables and computes them fully once
+    * from the events snapshot, recording the watermark. */
+  def buildFunnel(events: VersionedTable, root: String): FunnelView = {
+    val state = buildState(events, root,
+      Seq(StructField("user_id", LongType), StructField("stage", IntegerType)),
+      Seq("user_id"), FUNNEL_APP, funnelDerive)
+    new FunnelView(state,
+      AggView.build(state, s"$root/counts", Seq("stage"), Seq.empty))
   }
+
+  def buildRetention(events: VersionedTable, root: String): RetentionView = {
+    val state = buildState(events, root,
+      Seq(StructField("user_id", LongType), StructField("week_us", LongType),
+        StructField("cohort_week_us", LongType),
+        StructField("week_offset", LongType)),
+      Seq("user_id", "week_us"), RETENTION_APP, retentionDerive)
+    new RetentionView(state, AggView.build(state, s"$root/counts",
+      Seq("cohort_week_us", "week_offset"), Seq.empty))
+  }
+
+  def buildPaths(events: VersionedTable, root: String): PathsView = {
+    val state = buildState(events, root,
+      Seq(StructField("user_id", LongType), StructField("path", StringType),
+        StructField("n_occ", LongType)),
+      Seq("user_id", "path"), PATHS_APP, EventWindows.userPathCounts)
+    new PathsView(state, AggView.build(state, s"$root/counts", Seq("path"),
+      Seq(("occ", "n_occ"))))
+  }
+
+  def buildAttribution(events: VersionedTable, root: String): AttributionView = {
+    val state = buildState(events, root,
+      Seq(StructField("user_id", LongType), StructField("purchase_id", LongType),
+        StructField("channel", StringType), StructField("touch_id", LongType),
+        StructField("gap_us", LongType), StructField("cents", LongType)),
+      Seq("user_id", "purchase_id"), ATTR_APP, EventWindows.userAttribution)
+    new AttributionView(state, AggView.build(state, s"$root/counts",
+      Seq("channel"), Seq("cents" -> "cents")))
+  }
+
+  def buildSessions(events: VersionedTable, root: String): SessionView =
+    new SessionView(buildState(events, root,
+      Seq(StructField("user_id", LongType),
+        StructField("session_start_us", LongType),
+        StructField("session_end_us", LongType),
+        StructField("n_events", LongType),
+        StructField("sum_value", DoubleType)),
+      Seq("user_id", "session_start_us"), SESSION_APP, sessionDerive))
 
   // ------------------------------------------------------ query fixtures
 

@@ -41,10 +41,11 @@ import org.apache.spark.sql.functions._
   * was. The refresh therefore recomputes min/max from the source FOR
   * EXACTLY THE GROUPS THE BATCH SHRANK (any −1-signed row) and
   * combines for everyone else — O(changed rows + source rows of shrunk
-  * groups), still never an unconditional source scan. Bounded shrunk
-  * key sets push down as an IN-list so the recompute read benefits
-  * from the source's file skipping (stats/bucket hashes/blooms), the
-  * same pruning [[JoinView]]'s refresh uses.
+  * groups), still never an unconditional source scan. A single group
+  * column's shrunk keys scope the recompute read through
+  * [[KeyScope.read]], so it benefits from the source's file skipping
+  * (stats/bucket hashes/blooms) up to [[VersionedTable.KEY_PRUNE_MAX]]
+  * keys, the same pruning [[JoinView]]'s refresh uses.
   *
   * The additive update is NOT idempotent, so — unlike
   * [[JoinView]]'s convergent recompute — exactly-once rests on the
@@ -197,17 +198,9 @@ final class AggView private (
         // replaces a removed extreme
         val shrunkKeys = dp.filter(col("__shrunk"))
           .select(groupCols.map(col): _*).distinct()
-        val block = groupCols match {
-          case Seq(g) =>
-            val vals = shrunkKeys.limit(KEY_PRUNE_MAX + 1).collect()
-            if (vals.isEmpty)
-              source.snapshot().limit(0)
-            else if (vals.length <= KEY_PRUNE_MAX)
-              source.snapshotWhere(col(g).isin(vals.toSeq.map(_.get(0)): _*))
-            else source.snapshot()
-              .join(shrunkKeys, Seq(g), "left_semi")
-          case gs => source.snapshot().join(shrunkKeys, gs, "left_semi")
-        }
+        val block =
+          if (groupCols.length == 1) KeyScope(shrunkKeys).read(source)
+          else source.snapshot().join(shrunkKeys, groupCols, "left_semi")
         val recomputed = block.groupBy(groupCols.map(col): _*)
           .agg(extremes.head match { case (alias, e, isMin) =>
             (if (isMin) min(expr(e)) else max(expr(e))).as(s"r_$alias") },
@@ -243,9 +236,6 @@ object AggView {
   val PROP_MAXS = "graft.aggview.maxs"
   val PROP_AVGS = "graft.aggview.avgs"
   val PROP_SOURCE = "graft.aggview.source"
-  /** Largest shrunk-group key set pushed as an IN-list read predicate
-    * (same rationale as [[JoinView.KEY_PRUNE_MAX]]). */
-  val KEY_PRUNE_MAX = 10000
 
   private def packProp(xs: Seq[(String, String)]) =
     xs.map { case (n, e) => s"$n:$e" }.mkString(";")

@@ -61,8 +61,9 @@ object FileSkipping {
     * `conjuncts.forall(mayMatch(_, f, schema))`; the point is cost —
     * a large IN/INSET literal list is encoded and sorted ONCE, and
     * each file is probed by binary search for [min, max] overlap, so a
-    * KEY_PRUNE_MAX-sized refresh IN-list costs O(log k) per manifest
-    * entry instead of an O(k) rescan per file (ADVICE r7). */
+    * [[VersionedTable.KEY_PRUNE_MAX]]-sized refresh IN-list costs
+    * O(log k) per manifest entry instead of an O(k) rescan per file
+    * (ADVICE r7). */
   def compile(
       conjuncts: Seq[Expression],
       schema: StructType): DataFile => Boolean = {

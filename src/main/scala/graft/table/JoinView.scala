@@ -18,13 +18,14 @@ import org.apache.spark.sql.types.StructType
   *   1. read both sources' CDF since the view's recorded watermarks —
   *      O(changed rows), never a source scan;
   *   2. affected `aKey` set = keys in ΔA ∪ keys of current A rows whose
-  *      `fk` hit a ΔB key — bounded ΔB key sets (≤ KEY_PRUNE_MAX) push
-  *      down as an IN-list so the A read opens only files whose stats /
-  *      bucket hash ranges / blooms admit one of the changed fks, never
-  *      a full fact scan;
+  *      `fk` hit a ΔB key — bounded ΔB key sets (≤
+  *      [[VersionedTable.KEY_PRUNE_MAX]]) drive
+  *      [[VersionedTable.snapshotForKeys]], so the A read opens only
+  *      files whose stats / bucket hash ranges / blooms admit one of the
+  *      changed fks, never a full fact scan;
   *   3. recompute ONLY the affected block from both CURRENT snapshots —
-  *      both sides read through [[VersionedTable.snapshotWhere]]'s file
-  *      skipping keyed on the (bounded) affected key sets;
+  *      both sides read through [[VersionedTable.snapshotForKeys]]'s
+  *      file skipping keyed on the (bounded) affected key sets;
   *   4. three-clause [[Merge]]: vanished keys delete, survivors
   *      update, new keys insert; source watermarks ride the commit's
   *      `txn` map.
@@ -48,6 +49,7 @@ final class JoinView private (
     bCols: Seq[String],
     joinType: String) {
   import JoinView._
+  import VersionedTable.{boundedKeys, KEY_PRUNE_MAX}
 
   private def spark: SparkSession = table.spark
 
@@ -89,16 +91,15 @@ final class JoinView private (
     // A rows referencing a changed B key (their fk is current state —
     // rows whose fk itself changed are already in ΔA). The ΔB key set
     // is bounded by the dimension-change batch, so up to KEY_PRUNE_MAX
-    // keys become an IN-list predicate and the A read goes through
-    // [[VersionedTable.snapshotWhere]]'s file skipping (column stats,
-    // bucket hash ranges, blooms) instead of a full fact scan — the
-    // one-updated-dimension-row refresh touches O(files holding those
-    // fks), not O(A). A dimension rewrite beyond the cap falls back to
-    // the scan-join (most of A is affected then anyway).
-    val bKeyVals = keyValues(bKeys)
-    val viaB = bKeyVals match {
+    // keys drive the A read through [[VersionedTable.snapshotForKeys]]'s
+    // file skipping (column stats, bucket hash ranges, blooms) instead
+    // of a full fact scan — the one-updated-dimension-row refresh
+    // touches O(files holding those fks), not O(A). A dimension rewrite
+    // beyond the cap falls back to the scan-join (most of A is affected
+    // then anyway).
+    val viaB = boundedKeys(bKeys, KEY_PRUNE_MAX) match {
       case Some(Seq()) => emptyKeys(spark, a.schema, aKey)
-      case Some(vals) => keyedRead(a, fk, vals).select(col(aKey))
+      case Some(vals) => a.snapshotForKeys(fk, vals).select(col(aKey))
       case None =>
         a.snapshot().join(bKeys, col(fk) === col(bKey)).select(col(aKey))
     }
@@ -109,7 +110,7 @@ final class JoinView private (
       // may net out to zero keys) — evaluating it here costs the delta
       // scans only, never the recompute plan (the old `src.isEmpty`
       // evaluated the full join block a second time)
-      val affVals = keyValues(affected)
+      val affVals = boundedKeys(affected, KEY_PRUNE_MAX)
       if (affVals.contains(Seq.empty)) {
         // nothing to change, still advance the watermarks so the next
         // refresh does not rescan this CDF span
@@ -121,7 +122,7 @@ final class JoinView private (
       // is bounded (bucket hash ranges make this O(affected buckets) on
       // a bucketed A), else the full-scan semi-join
       val aBlock = affVals match {
-        case Some(vals) => keyedRead(a, aKey, vals)
+        case Some(vals) => a.snapshotForKeys(aKey, vals)
         case None => a.snapshot().join(affected, Seq(aKey), "left_semi")
       }
       // B side of the recompute: the affected block references a
@@ -131,9 +132,9 @@ final class JoinView private (
       val aBlockP = aBlock
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val bSide = keyValues(aBlockP.select(col(fk)).distinct()) match {
+        val bSide = boundedKeys(aBlockP.select(col(fk)).distinct(), KEY_PRUNE_MAX) match {
           case Some(Seq()) => b.snapshot().limit(0)
-          case Some(fks) => keyedRead(b, bKey, fks)
+          case Some(fks) => b.snapshotForKeys(bKey, fks)
           case None => b.snapshot()
         }
         val recomputed = joined(aBlockP, bSide)
@@ -144,32 +145,11 @@ final class JoinView private (
           .join(recomputed.select(col(aKey)), Seq(aKey), "left_anti")
           .withColumn("__op", lit("DELETE"))
         val src = ups.unionByName(dels, allowMissingColumns = true)
-        Merge.run(table, src, Seq(aKey), clauses, extraTxn = wm)
+        Merge.run(table, src, Seq(aKey), Merge.upsertDeleteClauses, extraTxn = wm)
         Some(table.latestVersion)
       } finally aBlockP.unpersist()
     } finally affected.unpersist()
   }
-
-  /** The single-column key set of `keys` as literal values, when it is
-    * small enough to drive file skipping (Some(values), complete), or
-    * None past KEY_PRUNE_MAX (callers fall back to a scan-join). */
-  private def keyValues(keys: DataFrame): Option[Seq[Any]] = {
-    val rows = keys.limit(KEY_PRUNE_MAX + 1).collect()
-    if (rows.length > KEY_PRUNE_MAX) None else Some(rows.toSeq.map(_.get(0)))
-  }
-
-  /** Key-pruned snapshot read for a bounded key set (VERDICT r8 #7):
-    * up to IN_LIST_MAX values go in as a literal IN — file skipping
-    * plus parquet row-group pushdown, the best plan for incremental
-    * batches — while larger (but still ≤ KEY_PRUNE_MAX) sets switch to
-    * [[VersionedTable.snapshotForKeys]], whose plan size stays O(1) in
-    * the key count: the same three file-skipping stages driven by a
-    * driver-side conjunct, with a broadcast semi-join as the row
-    * filter instead of a k-literal expression tree. */
-  private def keyedRead(
-      t: VersionedTable, keyCol: String, vals: Seq[Any]): DataFrame =
-    if (vals.length <= IN_LIST_MAX) t.snapshotWhere(col(keyCol).isin(vals: _*))
-    else t.snapshotForKeys(keyCol, vals)
 }
 
 object JoinView {
@@ -178,17 +158,6 @@ object JoinView {
   /** Buckets on `aKey`: a refresh CoW-rewrites only buckets holding
     * affected keys. */
   val BUCKETS = 8
-  /** Largest key set that drives file skipping (stats + bucket hash
-    * ranges + blooms). Incremental batches sit far below this; past it
-    * a refresh is a near-rebuild and the full-scan join is the better
-    * plan anyway. */
-  val KEY_PRUNE_MAX = 10000
-  /** Largest key set pushed as a LITERAL IN-list into the row filter —
-    * beyond it the analyzed/codegen'd expression tree grows O(k), so
-    * bigger (≤ KEY_PRUNE_MAX) sets read via
-    * [[VersionedTable.snapshotForKeys]]'s broadcast semi-join instead
-    * (VERDICT r8 #7). */
-  val IN_LIST_MAX = 1000
 
   /** View-definition properties — the view is self-describing, so
     * `load(path)` / `REFRESH MATERIALIZED VIEW` need no parameters. */
@@ -199,11 +168,6 @@ object JoinView {
   val PROP_JOIN_TYPE = "graft.view.joinType"
   val PROP_SOURCE_A = "graft.view.sourceA"
   val PROP_SOURCE_B = "graft.view.sourceB"
-
-  private val clauses = Seq(
-    WhenMatchedDelete(Some(col("source.__op") === "DELETE")),
-    WhenMatchedUpdate(Some(col("source.__op") === "UPSERT")),
-    WhenNotMatchedInsert(Some(col("source.__op") =!= "DELETE")))
 
   private def emptyKeys(
       spark: SparkSession, schema: StructType, key: String): DataFrame =
@@ -247,7 +211,7 @@ object JoinView {
     val v = new JoinView(t, aKey, fk, bKey, bCols, joinType)
     val full = v.joined(a.snapshot(), b.snapshot())
       .withColumn("__op", lit("UPSERT"))
-    Merge.run(t, full, Seq(aKey), clauses,
+    Merge.run(t, full, Seq(aKey), Merge.upsertDeleteClauses,
       extraTxn = Map(APP_A -> a.latestVersion, APP_B -> b.latestVersion))
     v
   }

@@ -26,16 +26,6 @@ final case class WhenMatchedUpdate(
 final case class WhenNotMatchedInsert(
     condition: Option[Column] = None,
     values: Map[String, Column] = Map.empty) extends MergeClause
-/** `WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET ...` — fires
-  * for TARGET rows with no source match (the sync-mirror direction SQL
-  * MERGE otherwise can't express). There is no source row, so `set` must
-  * be explicit and may reference only `target.*` columns. */
-final case class WhenNotMatchedBySourceUpdate(
-    condition: Option[Column],
-    set: Map[String, Column]) extends MergeClause
-/** `WHEN NOT MATCHED BY SOURCE [AND cond] THEN DELETE`. */
-final case class WhenNotMatchedBySourceDelete(
-    condition: Option[Column] = None) extends MergeClause
 
 final case class MergeStats(
     version: Option[Long],
@@ -69,8 +59,7 @@ final case class MergeStats(
   *     audit columns) are computed exactly once, nothing is re-read, and
   *     the commit's CAS loop only links files.
   *
-  * Unmatched target rows pass through untouched unless a
-  * NOT-MATCHED-BY-SOURCE clause claims them; matched rows matching
+  * Unmatched target rows pass through untouched; matched rows matching
   * no clause are kept (that is how the `data_hash` guard suppresses
   * inter-batch duplicates: the UPDATE clause's condition fails and no
   * CDF row is emitted, demo-notebook.py:273-277); source rows matching
@@ -100,13 +89,6 @@ final case class MergeStats(
   * Unbucketed tables keep the simple full-snapshot rewrite (right for
   * small aggregates like Gold).
   *
-  * NOT-MATCHED-BY-SOURCE merges disable candidate-file pruning: the
-  * clause's semantics require evaluating EVERY target row (a row in a
-  * file no source key hashes into may still be unmatched-by-source), so
-  * the merge reads and rewrites the full table — the same full-scan
-  * contract Delta's own `whenNotMatchedBySource` carries. Use them for
-  * periodic mirror-syncs, not per-batch CDC upserts.
-  *
   * == Concurrency ==
   * Merges are optimistic: the commit CAS detects a concurrent winner,
   * rebases when file sets are disjoint (the common case for merges over
@@ -129,6 +111,14 @@ object Merge {
     * cluster deployments tune it to executor memory headroom. */
   val BROADCAST_SOURCE_MAX_BYTES = "spark.graft.merge.broadcastSourceMaxBytes"
   val DEFAULT_BROADCAST_SOURCE_MAX_BYTES: Long = 64L << 20
+
+  /** Clauses applying a keyed batch tagged `__op` = DELETE | UPSERT:
+    * delete wins, upserts rewrite or insert. A DELETE row needs only its
+    * key columns. */
+  val upsertDeleteClauses: Seq[MergeClause] = Seq(
+    WhenMatchedDelete(Some(col("source.__op") === "DELETE")),
+    WhenMatchedUpdate(Some(col("source.__op") === "UPSERT")),
+    WhenNotMatchedInsert(Some(col("source.__op") =!= "DELETE")))
 
   def run(
       table: VersionedTable,
@@ -251,13 +241,7 @@ object Merge {
       // conflict scope (left join: a touched bucket with no candidate
       // file still conflicts with concurrent adds there). Files without
       // stats (e.g. the create-time empty file) are always candidates.
-      // by-source clauses must see every target row — candidate-file
-      // pruning would hide prunable files' rows from them (scaladoc)
-      val hasBySource = clauses.exists {
-        case _: WhenNotMatchedBySourceUpdate | _: WhenNotMatchedBySourceDelete => true
-        case _ => false
-      }
-      val bucketed = (if (hasBySource) None else table.bucketSpec).map {
+      val bucketed = table.bucketSpec.map {
         case BucketSpec(bkeys, n) =>
         require(bkeys == onKeys,
           s"merge keys $onKeys must equal the table's bucket keys $bkeys")
@@ -367,10 +351,6 @@ object Merge {
         .map(_.toLong).getOrElse(DEFAULT_BROADCAST_SOURCE_MAX_BYTES)
       val srcSmall = bucketed.isDefined &&
         src.queryExecution.optimizedPlan.stats.sizeInBytes <= broadcastBytes
-      if (sys.env.contains("GRAFT_MERGE_DEBUG"))
-        System.err.println(s"[merge-debug] bucketed=${bucketed.isDefined} " +
-          s"srcBytes=${src.queryExecution.optimizedPlan.stats.sizeInBytes} " +
-          s"budget=$broadcastBytes srcSmall=$srcSmall")
       val joined =
         if (srcSmall) {
           val matchedAndKept = t.join(broadcast(s), joinCond, "left_outer")

@@ -31,7 +31,7 @@ import graft.{QueryModule, Tables}
   *     the new top-(v−d) was within the old top-v). Only when a
   *     group's validity would drop under K does the view RE-DERIVE
   *     that one group from the source — a stats-pruned per-group read
-  *     (the [[JoinView]] keyed ladder), never a full scan. SLACK
+  *     ([[VersionedTable.snapshotForKeys]]), never a full scan. SLACK
   *     deletions per group amortize between re-derives.
   *
   * Refresh therefore costs O(Δ + touched-group buffers) in the steady
@@ -47,8 +47,8 @@ final class TopKView private[table] (
     val meta: VersionedTable,    // (grp, valid_n)
     grpCol: String, idCol: String, ordCol: String,
     val k: Int, slack: Int,
-    keyPruneMax: Int = JoinView.KEY_PRUNE_MAX) {
-  import TopKViewOps.{APP, mergeClauses}
+    keyPruneMax: Int = VersionedTable.KEY_PRUNE_MAX) {
+  import TopKViewOps.APP
   private val K = k
   private val CAND = k + slack
 
@@ -59,37 +59,10 @@ final class TopKView private[table] (
 
   private def spark: SparkSession = state.spark
 
-  /** Candidate rows of `grps`, read stats-pruned (state batches are
-    * written range-clustered by group, so file min/max stats skip). */
-  private def stateFor(grps: Seq[Any]): DataFrame =
-    if (grps.length <= JoinView.IN_LIST_MAX)
-      state.snapshotWhere(col(grpCol).isin(grps: _*))
-    else state.snapshotForKeys(grpCol, grps)
-
-  private def metaFor(grps: Seq[Any]): DataFrame =
-    if (grps.length <= JoinView.IN_LIST_MAX)
-      meta.snapshotWhere(col(grpCol).isin(grps: _*))
-    else meta.snapshotForKeys(grpCol, grps)
-
-  private def sourceFor(src: VersionedTable, grps: Seq[Any]): DataFrame =
-    if (grps.length <= JoinView.IN_LIST_MAX)
-      src.snapshotWhere(col(grpCol).isin(grps: _*))
-    else src.snapshotForKeys(grpCol, grps)
-
-  /** Filters an in-memory frame to rows whose `grpCol` ∈ `vals`: a
-    * literal IN up to [[JoinView.IN_LIST_MAX]] values (codegen'd,
-    * O(k) expression tree), a broadcast semi-join past it — the
+  /** Filters an in-memory frame to rows whose `grpCol` ∈ `vals` — the
     * expression tree must not grow with the touched-group count. */
   private def filterGrps(df: DataFrame, vals: Seq[Any]): DataFrame =
-    if (vals.length <= JoinView.IN_LIST_MAX) df.filter(col(grpCol).isin(vals: _*))
-    else {
-      val keys = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          vals.map(org.apache.spark.sql.Row(_)), 1),
-        StructType(Seq(state.schema(grpCol))))
-      df.join(org.apache.spark.sql.functions.broadcast(keys),
-        Seq(grpCol), "left_semi")
-    }
+    VersionedTable.filterForKeys(df, state.schema(grpCol), vals)
 
   /** Refreshes from the source recorded at build time (the SQL
     * `REFRESH MATERIALIZED VIEW` path — the view is self-describing). */
@@ -154,21 +127,23 @@ final class TopKView private[table] (
       // the key set: a delta touching >10k groups is a near-rebuild,
       // where one full re-derive from the source beats 10k-literal
       // plans anyway.
-      val grpRows = ch.select(col(grpCol)).distinct()
-        .limit(keyPruneMax + 1).collect()
-      if (grpRows.length > keyPruneMax) {
-        lastRefreshFull = true
-        return Some(fullRederive(src, wm))
+      val grps = VersionedTable.boundedKeys(
+          ch.select(col(grpCol)).distinct(), keyPruneMax) match {
+        case Some(g) => g
+        case None =>
+          lastRefreshFull = true
+          return Some(fullRederive(src, wm))
       }
       lastRefreshFull = false
-      val grps = grpRows.map(_.get(0)).toSeq
       if (grps.isEmpty) {
         meta.commitFiles(Seq.empty, Seq.empty, None, "refresh-noop",
           extraTxn = wm)
         return Some(state.latestVersion)
       }
-      val oldCand = stateFor(grps)
-      val oldMeta = metaFor(grps)
+      // stats-pruned (state batches are written range-clustered by
+      // group, so file min/max stats skip)
+      val oldCand = state.snapshotForKeys(grpCol, grps)
+      val oldMeta = meta.snapshotForKeys(grpCol, grps)
       // validity after deletes: valid_n - (candidate rows deleted);
       // groups with no meta row are NEW and must derive
       val lost = oldCand.join(changed, Seq(grpCol, idCol), "left_semi")
@@ -196,7 +171,7 @@ final class TopKView private[table] (
       // DERIVE path: exact top-(K+SLACK) from a per-group source read
       val deriveCand =
         if (deriveGrps.isEmpty) None
-        else Some(sourceFor(src, deriveGrps)
+        else Some(src.snapshotForKeys(grpCol, deriveGrps)
           .select(col(grpCol), col(idCol), col(ordCol)))
       val unioned = (foldCand, deriveCand) match {
         case (Some(a), Some(b)) => a.unionByName(b)
@@ -217,7 +192,7 @@ final class TopKView private[table] (
         Merge.run(state,
           fresh.withColumn("__op", lit("UPSERT"))
             .unionByName(dels, allowMissingColumns = true),
-          Seq(grpCol, idCol), mergeClauses)
+          Seq(grpCol, idCol), Merge.upsertDeleteClauses)
         // meta: folds keep v (capped at CAND), derives reset to CAND;
         // the watermark commits HERE, after the state merge — see the
         // crash-atomicity note on [[refresh]]
@@ -227,7 +202,8 @@ final class TopKView private[table] (
               .otherwise(least(col("v"), lit(CAND.toLong))))
           .select(col(grpCol), col("valid_n"))
           .withColumn("__op", lit("UPSERT"))
-        Merge.run(meta, newMeta, Seq(grpCol), mergeClauses, extraTxn = wm)
+        Merge.run(meta, newMeta, Seq(grpCol), Merge.upsertDeleteClauses,
+          extraTxn = wm)
         Some(state.latestVersion)
       } finally fresh.unpersist()
     } finally ch.unpersist()
@@ -255,7 +231,7 @@ final class TopKView private[table] (
       Merge.run(state,
         fresh.withColumn("__op", lit("UPSERT"))
           .unionByName(dels, allowMissingColumns = true),
-        Seq(grpCol, idCol), mergeClauses)
+        Seq(grpCol, idCol), Merge.upsertDeleteClauses)
       val grpsNow = fresh.select(col(grpCol)).distinct()
       val metaDels = meta.snapshot().select(col(grpCol))
         .join(grpsNow, Seq(grpCol), "left_anti")
@@ -265,7 +241,7 @@ final class TopKView private[table] (
         grpsNow.withColumn("valid_n", lit(CAND.toLong))
           .withColumn("__op", lit("UPSERT"))
           .unionByName(metaDels, allowMissingColumns = true),
-        Seq(grpCol), mergeClauses, extraTxn = wm)
+        Seq(grpCol), Merge.upsertDeleteClauses, extraTxn = wm)
       state.latestVersion
     } finally fresh.unpersist()
   }
@@ -300,11 +276,6 @@ object TopKViewOps extends QueryModule {
   val PROP_SLACK = "graft.topk.slack"
   val PROP_SOURCE = "graft.topk.source"
 
-  private[table] val mergeClauses = Seq(
-    WhenMatchedDelete(Some(col("source.__op") === "DELETE")),
-    WhenMatchedUpdate(Some(col("source.__op") === "UPSERT")),
-    WhenNotMatchedInsert(Some(col("source.__op") =!= "DELETE")))
-
   /** Builds the view (full derive of every group) over `src`. */
   def build(src: VersionedTable, root: String,
       grpCol: String, idCol: String, ordCol: String,
@@ -330,13 +301,13 @@ object TopKViewOps extends QueryModule {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= cand0).drop("__rn")
     Merge.run(state, cand.withColumn("__op", lit("UPSERT")),
-      Seq(grpCol, idCol), mergeClauses)
+      Seq(grpCol, idCol), Merge.upsertDeleteClauses)
     // watermark on the last commit — crash-atomicity note on [[refresh]]
     Merge.run(meta,
       cand.select(col(grpCol)).distinct()
         .withColumn("valid_n", lit(cand0.toLong))
         .withColumn("__op", lit("UPSERT")),
-      Seq(grpCol), mergeClauses, extraTxn = Map(APP -> latest))
+      Seq(grpCol), Merge.upsertDeleteClauses, extraTxn = Map(APP -> latest))
     new TopKView(state, meta, grpCol, idCol, ordCol, k, slack)
   }
 

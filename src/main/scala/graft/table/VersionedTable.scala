@@ -1158,24 +1158,25 @@ final class VersionedTable private (
     else hashPruned.filter(f => BloomIndex.mayMatch(root, f, probes))
   }
 
-  /** Snapshot read scoped to `keyCol ∈ values` for a bounded but LARGE
-    * key set (ADVICE r7 / VERDICT r8 #7): semantically
-    * `snapshot().filter(col(keyCol).isin(values…))`, but the plan stays
-    * O(1) in the key count —
+  /** Snapshot read scoped to `keyCol ∈ values` for a bounded key set
+    * (the values collected by [[VersionedTable.boundedKeys]]):
+    * semantically `snapshot().filter(col(keyCol).isin(values…))`, and
+    * the one place that picks its plan —
     *
-    *   - file pruning gets ONE driver-side `In(keyCol, literals)`
-    *     conjunct built directly from the pre-collected values, so all
-    *     three skipping stages fire (sorted-stats binary search, bucket
-    *     hash ranges, bloom sidecars) without a k-literal Column ever
-    *     entering analysis;
-    *   - the residual row filter is a broadcast LEFT SEMI join against
-    *     the same values, not a k-literal IN expression — no k-node
+    *   - up to [[VersionedTable.IN_LIST_MAX]] values: that literal IN
+    *     through [[snapshotWhere]] — file skipping plus parquet
+    *     row-group pushdown, the best plan for incremental batches;
+    *   - past it (ADVICE r7 / VERDICT r8 #7) the plan stays O(1) in the
+    *     key count: file pruning gets ONE driver-side
+    *     `In(keyCol, literals)` conjunct built directly from the values,
+    *     so all three skipping stages fire (sorted-stats binary search,
+    *     bucket hash ranges, bloom sidecars) without a k-literal Column
+    *     ever entering analysis, and the residual row filter is a
+    *     broadcast LEFT SEMI join against the same values — no k-node
     *     expression tree to analyze/codegen, and a hashed lookup per
     *     row at execution.
     *
-    * Null values never match (IN semantics). Callers with SMALL key
-    * sets should keep `snapshotWhere(isin)` — a literal IN pushes into
-    * parquet row-group filtering, which the semi-join cannot. */
+    * Null values never match (IN semantics). */
   def snapshotForKeys(keyCol: String, values: Seq[Any]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, Literal}
     val m = latestManifest
@@ -1184,6 +1185,8 @@ final class VersionedTable private (
     val nonNull = values.filter(_ != null)
     if (nonNull.isEmpty)
       return readDataFiles(Seq.empty, m.schema)
+    if (values.length <= VersionedTable.IN_LIST_MAX)
+      return snapshotWhere(col(keyCol).isin(values: _*))
     val lits = nonNull.map(v => Literal.create(v, field.dataType))
     val conjunct = In(
       AttributeReference(field.name, field.dataType, field.nullable)(), lits)
@@ -1645,6 +1648,39 @@ object VersionedTable {
     sc.setJobDescription(desc)
     try body finally sc.setJobDescription(prev)
   }
+
+  /** Largest key set [[VersionedTable.snapshotForKeys]] pushes as a
+    * LITERAL IN-list into the row filter — beyond it the analyzed/
+    * codegen'd expression tree grows O(k), so bigger sets read via its
+    * broadcast semi-join instead (VERDICT r8 #7). */
+  val IN_LIST_MAX = 1000
+  /** Largest key set a refresh collects to drive file skipping (stats +
+    * bucket hash ranges + blooms). Incremental batches sit far below
+    * this; past it a refresh is a near-rebuild and a semi-join against
+    * the full snapshot is the better plan anyway. */
+  val KEY_PRUNE_MAX = 10000
+
+  /** The single-column key set `keys` as driver-side values when it
+    * holds at most `cap` rows (complete), else None — one capped
+    * collect, never an unbounded one. */
+  def boundedKeys(keys: DataFrame, cap: Int): Option[Seq[Any]] = {
+    val rows = keys.limit(cap + 1).collect()
+    if (rows.length > cap) None else Some(rows.toSeq.map(_.get(0)))
+  }
+
+  /** The in-memory twin of [[VersionedTable.snapshotForKeys]]: `df`'s
+    * rows whose `key` column is in `values` — a literal IN up to
+    * [[IN_LIST_MAX]] values, a broadcast semi-join past it, so the plan
+    * does not grow with the key count. `key` types the values. */
+  def filterForKeys(df: DataFrame, key: StructField, values: Seq[Any]): DataFrame =
+    if (values.length <= IN_LIST_MAX) df.filter(col(key.name).isin(values: _*))
+    else {
+      val spark = df.sparkSession
+      val keys = spark.createDataFrame(
+        spark.sparkContext.parallelize(values.map(org.apache.spark.sql.Row(_)), 1),
+        StructType(Seq(key)))
+      df.join(broadcast(keys), Seq(key.name), "left_semi")
+    }
 
   val COMMITS_DIR = "_commits"
   val CHANGES_DIR = "_changes"

@@ -73,6 +73,16 @@ class Bm25IndexSpec extends SparkSpec {
     assert(idx.refresh(src).isEmpty)
     assert(idx.postings.latestVersion === v)
 
+    // a source commit with no change rows still advances every index
+    // table's watermark, so no later refresh rescans its span
+    src.commitFiles(Seq.empty, Seq.empty, None, "metadata-only")
+    assert(idx.refresh(src).isDefined)
+    assert(idx.postings.lastTxn(Bm25Ops.APP) === Some(src.latestVersion),
+      "postings watermark must reach the change-less source version")
+    assert(idx.doclens.lastTxn(Bm25Ops.APP) === Some(src.latestVersion),
+      "doclens watermark must reach the change-less source version")
+    assert(idx.refresh(src).isEmpty)
+
     // UPDATE shrinking token sets: stale pairs must leave the postings
     src.deleteWhere($"doc_id" % 5 === 0)
     src.append(docs.filter($"doc_id" % 5 === 0).withColumn("text",

@@ -88,6 +88,16 @@ class ChunkBm25IndexSpec extends SparkSpec {
     assert(idx.refresh(src).isEmpty)
     assert(idx.postings.latestVersion === v)
 
+    // a source commit with no change rows still advances every index
+    // table's watermark, so no later refresh rescans its span
+    src.commitFiles(Seq.empty, Seq.empty, None, "metadata-only")
+    assert(idx.refresh(src).isDefined)
+    assert(idx.postings.lastTxn(ChunkBm25Index.APP) === Some(src.latestVersion),
+      "postings watermark must reach the change-less source version")
+    assert(idx.chunklens.lastTxn(ChunkBm25Index.APP) === Some(src.latestVersion),
+      "chunklens watermark must reach the change-less source version")
+    assert(idx.refresh(src).isEmpty)
+
     // UPDATE shrinking docs to 5 tokens: chunk COUNTS collapse to one
     // chunk per doc — trailing chunk rows must leave BOTH index tables
     src.deleteWhere($"doc_id" % 5 === 0)

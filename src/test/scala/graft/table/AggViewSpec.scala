@@ -140,6 +140,81 @@ class AggViewSpec extends SparkSpec {
     assert(asMmSet(v.table.snapshot()) === asMmSet(expected()))
   }
 
+  test("MIN/MAX recompute of more than IN_LIST_MAX shrunk groups ≡ recompute, plan-bounded") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = graft.Scratch.dir("graft-aggv-wide")
+    val t = VersionedTable.create(spark, root.resolve("src").toString, schema,
+      Map(VersionedTable.PROP_CDF -> "true"))
+    // 1500 single-column groups of two rows each
+    Merge.run(t,
+      spark.range(0, 3000).select($"id",
+        concat(lit("g"), ($"id" % 1500).cast("string")).as("grp"),
+        ($"id" * 10).as("cents"), lit("UPSERT").as("__op")),
+      Seq("id"), upsert)
+    val v = AggView.build(t, root.resolve("v").toString, Seq("grp"),
+      Seq("cents" -> "cents"),
+      mins = Seq("cents" -> "cents"), maxs = Seq("cents" -> "cents"))
+    // delete the max row of 1200 groups: every one of them shrinks
+    val shrunk = 1200
+    assert(shrunk > VersionedTable.IN_LIST_MAX)
+    t.deleteWhere($"id" >= 1500L && $"id" < 1500L + shrunk)
+
+    // the widest IN/INSET of every plan the refresh executes, cached
+    // and adaptive sub-plans included
+    def widest(p: QueryPlan[_]): Int = {
+      val nested = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.inputPlan, a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case s: InMemoryTableScanExec => Seq(s.relation)
+        case _ => Nil
+      }
+      (p.expressions.flatMap(_.collect {
+        case i: In    => i.list.size
+        case i: InSet => i.hset.size
+      }) ++ (p.children ++ p.innerChildren ++ nested).collect {
+        case q: QueryPlan[_] => widest(q)
+      }).maxOption.getOrElse(0)
+    }
+    val widths = new ConcurrentLinkedQueue[Int]()
+    @volatile var markerSeen = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "__plan_marker")) markerSeen = true
+        else widths.add(widest(qe.optimizedPlan))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(v.refresh(t).isDefined)
+      // listener events arrive in order: once the marker's is in, so
+      // are the refresh's
+      spark.range(1).select($"id".as("__plan_marker")).collect()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(markerSeen, "query listener events did not arrive")
+    } finally spark.listenerManager.unregister(listener)
+    val planWidest = widths.toArray.map(_.asInstanceOf[Int]).maxOption.getOrElse(0)
+    assert(planWidest <= VersionedTable.IN_LIST_MAX,
+      s"refresh plan carries a $planWidest-element IN — the shrunk-key count " +
+        "leaked into the expression tree")
+
+    val expected = t.snapshot().groupBy($"grp")
+      .agg(count(lit(1)).as("n_rows"), sum($"cents").as("sum_cents"),
+        min($"cents").as("min_cents"), max($"cents").as("max_cents"))
+    def asMmSet(df: DataFrame) = df
+      .select($"grp", $"n_rows".cast("long"), $"sum_cents",
+        $"min_cents", $"max_cents")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4))).toSet
+    assert(asMmSet(v.table.snapshot()) === asMmSet(expected))
+  }
+
   test("unsupported aggregates fail with a clear boundary error") {
     val (t, root) = fresh()
     val e = intercept[IllegalArgumentException] {

@@ -104,6 +104,23 @@ class MergeSqlSpec extends SparkSpec {
     VersionedTable.deleteRecursively(base)
   }
 
+  test("WHEN NOT MATCHED BY SOURCE is rejected before anything commits") {
+    val base = Files.createTempDirectory("merge-sql-bysrc")
+    val silver = CdcPipeline.createSilver(spark, s"$base/silver")
+    val v0 = silver.latestVersion
+    Seq((1L, "x")).toDF("id", "v").createOrReplaceTempView("src_bysrc")
+    val e = intercept[IllegalArgumentException] {
+      MergeSql.run(spark,
+        "MERGE INTO silver t USING src_bysrc s ON s.id = t.id " +
+          "WHEN MATCHED THEN DELETE " +
+          "WHEN NOT MATCHED BY SOURCE THEN DELETE", Map("silver" -> silver))
+    }
+    assert(e.getMessage.contains("WHEN NOT MATCHED BY SOURCE is not supported"),
+      e.getMessage)
+    assert(silver.latestVersion === v0, "the rejected MERGE must not commit")
+    VersionedTable.deleteRecursively(base)
+  }
+
   test("an unqualified column resolves to the side that has it; on both sides it is ambiguous") {
     import org.apache.spark.sql.types._
     val base = Files.createTempDirectory("merge-sql-unq")

@@ -133,7 +133,7 @@ class TopKViewSpec extends SparkSpec {
     val built = TopKViewOps.build(src, graft.Scratch.dir("topk-cap-v").toString,
       "lang", "doc_id", "ord")
     // same state/meta, tiny cap: the spec drives the fallback without a
-    // 10k-group fixture (the production default is JoinView.KEY_PRUNE_MAX)
+    // 10k-group fixture (the production default is VersionedTable.KEY_PRUNE_MAX)
     val v = new TopKView(built.state, built.meta, "lang", "doc_id", "ord",
       TopKViewOps.K, TopKViewOps.SLACK, keyPruneMax = 8)
     // churn EVERY group (30 > 8): inserts AND deletes in one delta
