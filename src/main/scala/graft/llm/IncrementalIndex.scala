@@ -78,29 +78,28 @@ object IncrementalIndex {
       appId: String,
       observe: DataFrame => Unit = _ => ()): Option[Long] = {
     val latest = source.latestVersion
-    val since = index.lastTxn(appId).getOrElse(0L) + 1
-    if (latest < since) return None
-    // `net` feeds the emptiness probe, the drift observer, the derive
-    // branch AND the delete branch — unpersisted, each consumer re-ran
-    // the CDF scan + net-effect window (guide §5: persist reused
-    // intermediates, release when done); O(changed rows), bounded
-    val net = netChanges(source.changes(since), key)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (net.isEmpty) {
-        index.commitFiles(Seq.empty, Seq.empty, None, "refresh-noop",
-          txn = Some(appId -> latest))
-        return Some(index.latestVersion)
-      }
-      val rawUps = net.filter(col("__op") === "UPSERT")
-      observe(rawUps)
-      val ups = derive(rawUps)
-      val src = ups.unionByName(net.filter(col("__op") === "DELETE"),
-        allowMissingColumns = true)
-      Merge.run(index, src, Seq(key), Merge.upsertDeleteClauses,
-        txn = Some(appId -> latest))
-      Some(index.latestVersion)
-    } finally net.unpersist()
+    KeyedRefresh.since(latest, appId, index).map { since =>
+      // `net` feeds the emptiness probe, the drift observer, the derive
+      // branch AND the delete branch — unpersisted, each consumer re-ran
+      // the CDF scan + net-effect window (guide §5: persist reused
+      // intermediates, release when done); O(changed rows), bounded
+      val net = netChanges(source.changes(since), key)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        if (net.isEmpty)
+          index.commitFiles(Seq.empty, Seq.empty, None, "refresh-noop",
+            txn = Some(appId -> latest))
+        else {
+          val rawUps = net.filter(col("__op") === "UPSERT")
+          observe(rawUps)
+          val src = derive(rawUps).unionByName(
+            net.filter(col("__op") === "DELETE"), allowMissingColumns = true)
+          Merge.run(index, src, Seq(key), Merge.upsertDeleteClauses,
+            txn = Some(appId -> latest))
+        }
+        index.latestVersion
+      } finally net.unpersist()
+    }
   }
 
   /** Applies all source changes to an index holding SEVERAL rows per
@@ -117,16 +116,16 @@ object IncrementalIndex {
       stateKey: String,
       appId: String): Option[Long] = {
     val latest = source.latestVersion
-    val since = index.lastTxn(appId).getOrElse(0L) + 1
-    if (latest < since) return None
-    // net feeds the changed-key collect and the derive branch —
-    // persisted so the CDF scan and net window run once; O(changed docs)
-    val net = netChanges(source.changes(since), "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try KeyedRefresh.rederive(index, Seq(stateKey),
-      net.select(col("doc_id")).distinct(), appId -> latest,
-      _ => derive(net.filter(col("__op") === "UPSERT").drop("__op")))
-    finally net.unpersist()
+    KeyedRefresh.since(latest, appId, index).flatMap { since =>
+      // net feeds the changed-key collect and the derive branch —
+      // persisted so the CDF scan and net window run once; O(changed docs)
+      val net = netChanges(source.changes(since), "doc_id")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try KeyedRefresh.rederive(index, Seq(stateKey),
+        net.select(col("doc_id")).distinct(), appId -> latest,
+        _ => derive(net.filter(col("__op") === "UPSERT").drop("__op")))
+      finally net.unpersist()
+    }
   }
 }
 

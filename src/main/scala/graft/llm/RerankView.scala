@@ -23,19 +23,18 @@ import graft.table._
   * ladder's stage-1 RRF ranks (global per-query positions) are not:
   * a document's score never depends on any other document.
   *
-  * State per standing query is a candidate buffer of the top
-  * `K + SLACK` docs plus a validity counter — the [[TopKView]]
-  * buffer-with-slack contract, specialised to a DERIVED ordering
-  * column:
+  * State per standing query is a [[graft.table.CandidateBuffer]] — the
+  * top `K + SLACK` docs plus a validity counter, refreshed by the shared
+  * candidate-buffer step — over a DERIVED ordering column. This class
+  * supplies only what differs:
   *
+  *   - a changed doc has no group: it may sit in any buffer, so every
+  *     standing query is in scope, capped at [[RerankViewOps.MAX_STANDING]];
   *   - corpus INSERTS fold at O(Δ·|Q|): the change batch is scored
   *     against the broadcast standing-query set and trimmed into the
   *     buffers — the source snapshot is never read;
-  *   - corpus DELETES spend slack: only buffered hits decrement
-  *     validity, and only a query whose validity would drop under K
-  *     RE-SCORES the corpus — for THAT query alone (the others keep
-  *     folding). SLACK buffered deletions per query amortise between
-  *     re-scores.
+  *   - a query whose validity drops under K RE-SCORES the corpus — for
+  *     THAT query alone (the others keep folding).
   *
   * == 100 TB design ==
   * The maintained state is O(|Q|·(K+SLACK)) rows — kilobytes per
@@ -69,14 +68,12 @@ final class RerankView private[llm] (
     private[llm] val maxStanding: Int = RerankViewOps.MAX_STANDING) {
   import RerankViewOps.{APP, scorePairs}
   private val MAX_STANDING = maxStanding
-  private val K = k
-  private val CAND = k + slack
+  private[llm] val buffer = new CandidateBuffer(state, meta,
+    "q_id", "doc_id", "rerank", k, slack, APP)
 
   /** How many standing queries the last [[refresh]] re-scored against
     * the full corpus (0 = pure fold) — spec observability. */
-  @volatile private[llm] var lastDerived: Int = 0
-
-  private def spark: SparkSession = state.spark
+  private[llm] def lastDerived: Int = buffer.lastDerived
 
   /** Filters a frame to rows whose `q_id` ∈ `vals` — the plan must not
     * grow O(|standing set|). */
@@ -85,131 +82,38 @@ final class RerankView private[llm] (
 
   /** Applies all corpus changes the view has not seen. `queries` is the
     * standing set fixed at [[RerankViewOps.build]] time (grown/shrunk
-    * via [[addQueries]]/[[dropQueries]]): (q_id, qe, qs).
-    *
-    * == Crash atomicity (ADVICE r12) ==
-    * A refresh commits state first, meta second, and the APP watermark
-    * rides the LAST commit (meta) — so a crash between the two leaves
-    * the watermark un-advanced and the next refresh REPLAYS the same
-    * change batch. The replay is output-idempotent (netted changes
-    * purge-then-refold to the identical trimmed buffer); its only cost
-    * is a conservatively double-spent validity decrement for replayed
-    * upserts, which can trigger a spurious re-derive — never a stale
-    * top-K. Were the watermark on the state commit instead, that crash
-    * would advance it with valid_n still inflated, under-counting
-    * later buffered deletes and silently skipping a required
-    * re-derive. */
-  def refresh(src: VersionedTable, queries: DataFrame): Option[Long] = {
-    val latest = src.latestVersion
-    // Watermark = max over BOTH tables (ADVICE r13): views persisted
-    // before the watermark moved to the meta commit carry it only on
-    // state — without the fallback their first refresh would replay
-    // the source's ENTIRE CDF history (or fail outright if early
-    // versions were vacuumed). max() is safe: meta commits last, so
-    // meta ≤ state always, and equal once a post-migration refresh
-    // lands.
-    val since = math.max(meta.lastTxn(APP).getOrElse(0L),
-      state.lastTxn(APP).getOrElse(0L)) + 1
-    if (latest < since) return None
-    val wm = Map(APP -> latest)
-    // NET the batch per key first ([[IncrementalIndex.netChanges]]): a
-    // doc inserted AND deleted between two refreshes must not re-enter
-    // through the insert leg, and an UPDATED doc's stale buffered score
-    // must purge before its re-scored row folds back in.
-    val ch = IncrementalIndex.netChanges(
+    * via [[addQueries]]/[[dropQueries]]): (q_id, qe, qs). */
+  def refresh(src: VersionedTable, queries: DataFrame): Option[Long] =
+    buffer.refresh(src, delta(src, queries))
+
+  private[llm] def delta(src: VersionedTable, queries: DataFrame): CandidateBuffer.Delta =
+    new CandidateBuffer.Delta {
+      // NET the batch per doc first ([[IncrementalIndex.netChanges]]): a
+      // doc inserted AND deleted between two refreshes must not re-enter
+      // through the insert leg, and an UPDATED doc's stale buffered score
+      // must purge before its re-scored row folds back in
+      def net(since: Long): DataFrame = IncrementalIndex.netChanges(
         src.changes(since).select(col("doc_id"), col("ce"), col("cs"),
           col("_change_type"), col("_commit_version")), "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val insertDocs = ch.filter(col("__op") === "UPSERT").drop("__op")
-      // EVERY net-changed key purges its (possibly stale) buffer rows;
-      // upserts then fold their fresh score back through the trim
-      val changedIds = ch.select(col("doc_id"))
-      val oldCand = state.snapshot()
-      // validity: only BUFFERED hits spend slack — a changed doc below
-      // every buffer cannot move any top-k (an update is conservatively
-      // a delete here; its re-entry is not provable without a re-score)
-      val lost = oldCand.join(changedIds, Seq("doc_id"), "left_semi")
-        .groupBy(col("q_id")).agg(count(lit(1)).as("lost"))
-      val validity = meta.snapshot()
-        .join(lost, Seq("q_id"), "left")
-        .select(col("q_id"),
-          (col("valid_n") - coalesce(col("lost"), lit(0L))).as("v"))
-      // one row per STANDING query — bounded by the same contract that
-      // lets the query set broadcast, and enforced, not assumed
-      val vRows = validity.limit(MAX_STANDING + 1).collect()
-      require(vRows.length <= MAX_STANDING,
+      // one validity row per STANDING query is collected — bounded by
+      // the same contract that lets the query set broadcast, and
+      // enforced, not assumed
+      def maxGroups: Int = MAX_STANDING
+      def all(): DataFrame = throw new IllegalArgumentException(
         s"standing-query set exceeds MAX_STANDING=$MAX_STANDING — " +
           "a set this large no longer broadcasts; shard the view")
-      val deriveQs = vRows.filter(_.getLong(1) < K).map(_.get(0)).toSeq
-      val foldQs = vRows.filter(_.getLong(1) >= K).map(_.get(0)).toSeq
-      lastDerived = deriveQs.length
-
-      // FOLD: (buffer survivors ∪ scored inserts) trimmed per query
-      val foldCand =
-        if (foldQs.isEmpty) None
-        else {
-          val surv = filterQs(oldCand, foldQs)
-            .join(changedIds, Seq("doc_id"), "left_anti")
-          Some(surv.unionByName(
-            scorePairs(insertDocs, filterQs(queries, foldQs))))
-        }
-      // DERIVE: full corpus re-scored for the slack-exhausted queries ONLY
-      val deriveCand =
-        if (deriveQs.isEmpty) None
-        else Some(scorePairs(src.snapshot(), filterQs(queries, deriveQs)))
-      val unioned = (foldCand, deriveCand) match {
-        case (Some(a), Some(b)) => a.unionByName(b)
-        case (Some(a), None)    => a
-        case (None, Some(b))    => b
-        case _ =>
-          meta.commitFiles(Seq.empty, Seq.empty, None, "refresh-noop",
-            extraTxn = wm)
-          return Some(state.latestVersion)
-      }
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("rerank").desc, col("doc_id").asc)
-      val fresh = unioned
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= CAND).drop("__rn")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val dels = oldCand.select(col("q_id"), col("doc_id"))
-          .join(fresh, Seq("q_id", "doc_id"), "left_anti")
-          .withColumn("__op", lit("DELETE"))
-        Merge.run(state,
-          fresh.withColumn("__op", lit("UPSERT"))
-            .unionByName(dels, allowMissingColumns = true),
-          Seq("q_id", "doc_id"), Merge.upsertDeleteClauses)
-        // folds keep validity (inserts cannot certify positions past the
-        // old v — an unseen source row may sit between v and CAND);
-        // derives reset it to CAND. The watermark commits HERE, after
-        // the state merge — see the crash-atomicity note on [[refresh]]
-        val newMeta = validity
-          .withColumn("valid_n",
-            when(col("v") < K, lit(CAND.toLong))
-              .otherwise(least(col("v"), lit(CAND.toLong))))
-          .select(col("q_id"), col("valid_n"))
-          .withColumn("__op", lit("UPSERT"))
-        Merge.run(meta, newMeta, Seq("q_id"), Merge.upsertDeleteClauses,
-          extraTxn = wm)
-        Some(state.latestVersion)
-      } finally fresh.unpersist()
-    } finally ch.unpersist()
-  }
+      def fold(upserts: DataFrame, qs: Seq[Any]): DataFrame =
+        scorePairs(upserts, filterQs(queries, qs))
+      def derive(qs: Seq[Any]): DataFrame =
+        scorePairs(src.snapshot(), filterQs(queries, qs))
+    }
 
   /** The maintained readout `(q_id, doc_id, rnk, rerank)` — a window
     * over the compact buffer state, never the corpus. The score is
     * rounded to 6dp for display only; ranking uses the full double. */
-  def topk(): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("rerank").desc, col("doc_id").asc)
-    state.snapshot()
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
-      .select(col("q_id"), col("doc_id"), col("rnk"),
-        round(col("rerank"), 6).as("rerank"))
-  }
+  def topk(): DataFrame =
+    buffer.topk().select(col("q_id"), col("doc_id"), col("rnk"),
+      round(col("rerank"), 6).as("rerank"))
 
   // ------------------------------------------- standing-set churn
   // A real standing-query system (saved searches, alerting) adds and
@@ -246,36 +150,15 @@ final class RerankView private[llm] (
     require(existing.size + newRows.length <= MAX_STANDING,
       s"standing-query set would exceed MAX_STANDING=$MAX_STANDING — " +
         "a set this large no longer broadcasts; shard the view")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("rerank").desc, col("doc_id").asc)
-    val cand = scorePairs(src.snapshot(), newQueries)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= CAND).drop("__rn")
-    Merge.run(state, cand.withColumn("__op", lit("UPSERT")),
-      Seq("q_id", "doc_id"), Merge.upsertDeleteClauses)
-    Merge.run(meta,
-      newQueries.select(col("q_id"))
-        .withColumn("valid_n", lit(CAND.toLong))
-        .withColumn("__op", lit("UPSERT")),
-      Seq("q_id"), Merge.upsertDeleteClauses)
+    buffer.seed(scorePairs(src.snapshot(), newQueries),
+      Some(newQueries.select(col("q_id"))), None)
   }
 
   /** Retires standing queries: deletes their buffer and meta rows.
     * Unknown ids are ignored (retiring an already-gone query is a
-    * no-op, the natural alerting-system semantics). Both reads are
-    * key-scoped ([[VersionedTable.snapshotForKeys]]) — never an
-    * O(|ids|) literal plan. */
-  def dropQueries(ids: Seq[Any]): Unit = {
-    if (ids.isEmpty) return
-    val stateDels = state.snapshotForKeys("q_id", ids)
-      .select(col("q_id"), col("doc_id"))
-      .withColumn("__op", lit("DELETE"))
-    Merge.run(state, stateDels, Seq("q_id", "doc_id"), Merge.upsertDeleteClauses)
-    val metaDels = meta.snapshotForKeys("q_id", ids)
-      .select(col("q_id"))
-      .withColumn("__op", lit("DELETE"))
-    Merge.run(meta, metaDels, Seq("q_id"), Merge.upsertDeleteClauses)
-  }
+    * no-op, the natural alerting-system semantics). */
+  def dropQueries(ids: Seq[Any]): Unit =
+    if (ids.nonEmpty) buffer.retire(ids)
 }
 
 object RerankViewOps extends QueryModule {
@@ -312,7 +195,6 @@ object RerankViewOps extends QueryModule {
       k: Int = K, slack: Int = SLACK,
       maxStanding: Int = MAX_STANDING): RerankView = {
     val spark = src.spark
-    val cand0 = k + slack
     val state = VersionedTable.create(spark, s"$root/state",
       StructType(Seq(
         StructField("q_id", LongType),
@@ -322,22 +204,11 @@ object RerankViewOps extends QueryModule {
       StructType(Seq(
         StructField("q_id", LongType),
         StructField("valid_n", LongType))))
+    val v = new RerankView(state, meta, k, slack, maxStanding)
     val latest = src.latestVersion
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("rerank").desc, col("doc_id").asc)
-    val cand = scorePairs(src.snapshot(), queries)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= cand0).drop("__rn")
-    Merge.run(state, cand.withColumn("__op", lit("UPSERT")),
-      Seq("q_id", "doc_id"), Merge.upsertDeleteClauses)
-    // watermark on the LAST commit (meta) — see the crash-atomicity
-    // note on [[RerankView.refresh]]
-    Merge.run(meta,
-      queries.select(col("q_id"))
-        .withColumn("valid_n", lit(cand0.toLong))
-        .withColumn("__op", lit("UPSERT")),
-      Seq("q_id"), Merge.upsertDeleteClauses, extraTxn = Map(APP -> latest))
-    new RerankView(state, meta, k, slack, maxStanding)
+    v.buffer.seed(scorePairs(src.snapshot(), queries),
+      Some(queries.select(col("q_id"))), Some(latest))
+    v
   }
 
   // ------------------------------------------------------ query fixtures

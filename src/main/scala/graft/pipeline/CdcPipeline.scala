@@ -177,8 +177,7 @@ object CdcPipeline {
     * carries one row per (country, partition). */
   def goldDeltas(changes: DataFrame): DataFrame = changes
     .select(col("country"),
-      when(col("_change_type").isin("update_preimage", "delete"),
-        -col("num_visitors"))
+      when(VersionedTable.RETRACTION, -col("num_visitors"))
         .otherwise(col("num_visitors"))
         .as("delta_visitors"))
     .groupBy(col("country"))

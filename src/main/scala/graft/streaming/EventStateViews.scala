@@ -181,11 +181,10 @@ object EventStateViews extends QueryModule {
       stateKeys: Seq[String],
       derive: DataFrame => DataFrame): Option[Long] = {
     val latest = events.latestVersion
-    val since = state.lastTxn(app).getOrElse(0L) + 1
-    if (latest < since) None
-    else KeyedRefresh.rederive(state, stateKeys,
-      events.changes(since).select(col("user_id")).distinct(), app -> latest,
-      scope => derive(scope.read(events)))
+    KeyedRefresh.since(latest, app, state).flatMap(since =>
+      KeyedRefresh.rederive(state, stateKeys,
+        events.changes(since).select(col("user_id")).distinct(), app -> latest,
+        scope => derive(scope.read(events))))
   }
 
   // ---------------------------------------------------------- builders

@@ -77,23 +77,12 @@ final class AggView private (
     mins.map { case (n, e) => (s"min_$n", e, true) } ++
       maxs.map { case (n, e) => (s"max_$n", e, false) }
 
-  /** `avg_<name>` from its exact numerator/denominator, null for an
-    * empty denominator (no non-null source values). Both operands are
-    * BIGINT so the one double division happens identically in any
-    * engine — the stored avg is portable even though doubles are not
-    * additively maintainable. */
-  private def avgExpr(name: String): Column =
-    when(col(s"acnt_$name") === 0L, lit(null))
-      .otherwise(col(s"asum_$name").cast("double") / col(s"acnt_$name"))
-
   /** Per-group deltas of one change batch (`sums` exprs evaluate
     * against source-shaped change rows). For extremes: the batch's
     * grown-side min/max plus a `__shrunk` flag marking groups whose
     * true extreme needs a source recompute. */
   private def deltas(changes: DataFrame): DataFrame = {
-    val sign = when(
-      col("_change_type").isin("update_preimage", "delete"), lit(-1L))
-      .otherwise(lit(1L))
+    val sign = when(VersionedTable.RETRACTION, lit(-1L)).otherwise(lit(1L))
     changes
       .withColumn("__sign", sign)
       .groupBy(groupCols.map(col): _*)
@@ -138,8 +127,7 @@ final class AggView private (
           avgs.flatMap { case (name, _) =>
             Seq(s"asum_$name" -> upAsum(name),
               s"acnt_$name" -> upAcnt(name),
-              s"avg_$name" -> when(upAcnt(name) === 0L, lit(null))
-                .otherwise(upAsum(name).cast("double") / upAcnt(name)))
+              s"avg_$name" -> avgOf(upAsum(name), upAcnt(name)))
           } ++
           extremes.map { case (alias, _, isMin) =>
             // shrunk groups carry the recomputed absolute value; grown
@@ -162,13 +150,10 @@ final class AggView private (
               s"sum_$name" -> col(s"source.d_$name")
             } ++
             avgs.flatMap { case (name, _) =>
-              Seq(s"asum_$name" -> coalesce(col(s"source.d_asum_$name"), lit(0L)),
-                s"acnt_$name" -> coalesce(col(s"source.d_acnt_$name"), lit(0L)),
-                s"avg_$name" ->
-                  when(coalesce(col(s"source.d_acnt_$name"), lit(0L)) === 0L,
-                    lit(null))
-                    .otherwise(col(s"source.d_asum_$name").cast("double") /
-                      col(s"source.d_acnt_$name")))
+              val asum = coalesce(col(s"source.d_asum_$name"), lit(0L))
+              val acnt = coalesce(col(s"source.d_acnt_$name"), lit(0L))
+              Seq(s"asum_$name" -> asum, s"acnt_$name" -> acnt,
+                s"avg_$name" -> avgOf(asum, acnt))
             } ++
             extremes.map { case (alias, _, _) =>
               alias -> col(s"source.b_$alias")
@@ -179,8 +164,10 @@ final class AggView private (
     * refresh (crash + rerun) is a no-op via the txn guard. */
   def refresh(source: VersionedTable): Option[Long] = {
     val latest = source.latestVersion
-    val since = table.lastTxn(APP).getOrElse(0L) + 1
-    if (latest < since) return None
+    val since = KeyedRefresh.since(latest, APP, table) match {
+      case Some(s) => s
+      case None => return None
+    }
     val d = deltas(source.changes(since))
     if (extremes.isEmpty) {
       Merge.run(table, d, groupCols, clauses, txn = Some(APP -> latest))
@@ -237,6 +224,14 @@ object AggView {
   val PROP_AVGS = "graft.aggview.avgs"
   val PROP_SOURCE = "graft.aggview.source"
 
+  /** `avg_<name>` from its exact numerator and non-null count, null for
+    * a zero count (no non-null source values). Both operands are BIGINT
+    * so the one double division happens identically in any engine — the
+    * stored avg is portable even though doubles are not additively
+    * maintainable. */
+  private def avgOf(asum: Column, acnt: Column): Column =
+    when(acnt === 0L, lit(null)).otherwise(asum.cast("double") / acnt)
+
   private def packProp(xs: Seq[(String, String)]) =
     xs.map { case (n, e) => s"$n:$e" }.mkString(";")
   private def unpackProp(s: String): Seq[(String, String)] =
@@ -276,9 +271,7 @@ object AggView {
         mins.map { case (name, e) => min(expr(e)).as(s"min_$name") } ++
         maxs.map { case (name, e) => max(expr(e)).as(s"max_$name") }: _*)
     val full = avgs.foldLeft(full0) { case (df, (name, _)) =>
-      df.withColumn(s"avg_$name",
-        when(col(s"acnt_$name") === 0L, lit(null))
-          .otherwise(col(s"asum_$name").cast("double") / col(s"acnt_$name")))
+      df.withColumn(s"avg_$name", avgOf(col(s"asum_$name"), col(s"acnt_$name")))
     }
     // all-nullable view schema: count(*) infers NOT NULL, which the
     // merge's conditional action struct (nullable by construction)

@@ -76,17 +76,15 @@ final class JoinView private (
   def refresh(a: VersionedTable, b: VersionedTable): Option[Long] = {
     val latestA = a.latestVersion
     val latestB = b.latestVersion
-    val sinceA = table.lastTxn(APP_A).getOrElse(0L) + 1
-    val sinceB = table.lastTxn(APP_B).getOrElse(0L) + 1
-    if (latestA < sinceA && latestB < sinceB) return None
+    val sinceA = KeyedRefresh.since(latestA, APP_A, table)
+    val sinceB = KeyedRefresh.since(latestB, APP_B, table)
+    if (sinceA.isEmpty && sinceB.isEmpty) return None
     val wm = Map(APP_A -> latestA, APP_B -> latestB)
 
-    val aKeys =
-      if (latestA >= sinceA) a.changes(sinceA).select(col(aKey)).distinct()
-      else emptyKeys(spark, a.schema, aKey)
-    val bKeys =
-      if (latestB >= sinceB) b.changes(sinceB).select(col(bKey)).distinct()
-      else emptyKeys(spark, b.schema, bKey)
+    val aKeys = sinceA.fold(emptyKeys(spark, a.schema, aKey))(
+      a.changes(_).select(col(aKey)).distinct())
+    val bKeys = sinceB.fold(emptyKeys(spark, b.schema, bKey))(
+      b.changes(_).select(col(bKey)).distinct())
 
     // A rows referencing a changed B key (their fk is current state —
     // rows whose fk itself changed are already in ΔA). The ΔB key set
@@ -110,8 +108,8 @@ final class JoinView private (
       // may net out to zero keys) — evaluating it here costs the delta
       // scans only, never the recompute plan (the old `src.isEmpty`
       // evaluated the full join block a second time)
-      val affVals = boundedKeys(affected, KEY_PRUNE_MAX)
-      if (affVals.contains(Seq.empty)) {
+      val scope = KeyScope(affected)
+      if (scope.isEmpty) {
         // nothing to change, still advance the watermarks so the next
         // refresh does not rescan this CDF span
         table.commitFiles(Seq.empty, Seq.empty, None, "refresh-noop",
@@ -121,10 +119,7 @@ final class JoinView private (
       // the affected A block: an IN-list pruned read when the key set
       // is bounded (bucket hash ranges make this O(affected buckets) on
       // a bucketed A), else the full-scan semi-join
-      val aBlock = affVals match {
-        case Some(vals) => a.snapshotForKeys(aKey, vals)
-        case None => a.snapshot().join(affected, Seq(aKey), "left_semi")
-      }
+      val aBlock = scope.read(a)
       // B side of the recompute: the affected block references a
       // bounded fk set whenever the affected keys are bounded — prune
       // B's read the same way (ΔB alone doesn't cover it: ΔA rows join

@@ -36,6 +36,14 @@ object KeyScope {
   * refresh convergent. */
 object KeyedRefresh {
 
+  /** The first source version `app` has not consumed: one past the
+    * largest `app` watermark any of `tables` carries (0 when none does),
+    * or None when that is past `latest` — the refresh has nothing to do. */
+  def since(latest: Long, app: String, tables: VersionedTable*): Option[Long] = {
+    val next = tables.map(_.lastTxn(app).getOrElse(0L)).max + 1
+    if (latest < next) None else Some(next)
+  }
+
   /** Re-derives `target`'s rows for the keys in `changedKeys` (one
     * column, distinct; `target` must have that column) and commits them
     * with `watermark` as the merge txn:

@@ -48,15 +48,16 @@ object TableDiff {
     val grp = groupCol.map(col).getOrElse(lit("all"))
     val ch = changes.select(col(keyCol).as("k"), grp.as("g"),
       md5(to_json(struct(hashCols.map(col): _*))).as("h"),
-      col("_change_type").as("ct"),
-      (col("_commit_version") * 2 + when(
-        col("_change_type").isin("update_preimage", "delete"), 0)
+      VersionedTable.RETRACTION.as("r"),
+      (col("_commit_version") * 2 + when(VersionedTable.RETRACTION, 0)
         .otherwise(1)).as("ord"))
     val net = ch.groupBy(col("k")).agg(
-      min_by(struct(col("ct"), col("h"), col("g")), col("ord")).as("fst"),
-      max_by(struct(col("ct"), col("h"), col("g")), col("ord")).as("lst"))
-    val before = col("fst.ct").isin("update_preimage", "delete")
-    val after = col("lst.ct").isin("insert", "update_postimage")
+      min_by(struct(col("r"), col("h"), col("g")), col("ord")).as("fst"),
+      max_by(struct(col("r"), col("h"), col("g")), col("ord")).as("lst"))
+    // the first row retracts an image: the key existed before the span;
+    // the last asserts one: it exists after
+    val before = col("fst.r")
+    val after = !col("lst.r")
     net
       .withColumn("cls",
         when(!before && after, "added")

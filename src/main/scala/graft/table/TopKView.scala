@@ -14,25 +14,18 @@ import graft.{QueryModule, Tables}
   * best-documents-per-language / hottest-keys view every curation
   * dashboard maintains).
   *
-  * A top-k is NOT incrementally foldable from deltas alone: deleting a
-  * top row must PROMOTE the (k+1)-th — information a plain fold has
-  * already discarded. The classic fix (maintained here) is a CANDIDATE
-  * BUFFER with slack: the view stores the top `K + SLACK` rows per
-  * group plus a per-group VALIDITY counter `valid_n` = how many
-  * leading positions of that buffer are provably the true source
-  * top-n.
+  * The view is a [[CandidateBuffer]] over a stored ordering column: the
+  * top `K + SLACK` rows per group plus a per-group validity, refreshed
+  * by the shared candidate-buffer step (inserts fold without touching
+  * the source; deletes spend slack; a group whose validity drops under
+  * K re-derives). This class supplies only its changed rows and reads:
   *
-  *   - INSERTS fold without touching the source: the new true top-v of
-  *     a group is contained in (old candidates ∪ inserted rows), so a
-  *     per-group trim of that union to K+SLACK maintains the invariant
-  *     at O(candidates + Δ) cost — validity is unchanged.
-  *   - DELETES spend slack: removing `d` rows of a group leaves the
-  *     buffer's leading `valid_n − d` positions exact (every row of
-  *     the new top-(v−d) was within the old top-v). Only when a
-  *     group's validity would drop under K does the view RE-DERIVE
-  *     that one group from the source — a stats-pruned per-group read
-  *     ([[VersionedTable.snapshotForKeys]]), never a full scan. SLACK
-  *     deletions per group amortize between re-derives.
+  *   - the net change batch per (grp, id), whose groups put the buffers
+  *     in scope — capped at `keyPruneMax`, past which the step
+  *     re-derives every group from the source;
+  *   - fold inserts are the net rows themselves;
+  *   - a derive group is a stats-pruned per-group source read
+  *     ([[VersionedTable.snapshotForKeys]]), never a full scan.
   *
   * Refresh therefore costs O(Δ + touched-group buffers) in the steady
   * insert-heavy case and O(re-derived group) worst case, with the
@@ -48,213 +41,61 @@ final class TopKView private[table] (
     grpCol: String, idCol: String, ordCol: String,
     val k: Int, slack: Int,
     keyPruneMax: Int = VersionedTable.KEY_PRUNE_MAX) {
-  import TopKViewOps.APP
-  private val K = k
-  private val CAND = k + slack
+  private[table] val buffer = new CandidateBuffer(state, meta,
+    grpCol, idCol, ordCol, k, slack, TopKViewOps.APP)
 
   /** Which path the last [[refresh]] took — spec observability for the
     * key-prune cap (true = the touched-group set exceeded
     * `keyPruneMax` and the refresh fell back to a full re-derive). */
-  @volatile private[table] var lastRefreshFull: Boolean = false
+  private[table] def lastRefreshFull: Boolean = buffer.lastFull
 
-  private def spark: SparkSession = state.spark
-
-  /** Filters an in-memory frame to rows whose `grpCol` ∈ `vals` — the
-    * expression tree must not grow with the touched-group count. */
-  private def filterGrps(df: DataFrame, vals: Seq[Any]): DataFrame =
-    VersionedTable.filterForKeys(df, state.schema(grpCol), vals)
+  private def cols = Seq(col(grpCol), col(idCol), col(ordCol))
 
   /** Refreshes from the source recorded at build time (the SQL
     * `REFRESH MATERIALIZED VIEW` path — the view is self-describing). */
   def refresh(): Option[Long] =
-    refresh(VersionedTable.load(spark,
+    refresh(VersionedTable.load(state.spark,
       state.latestManifest.properties(TopKViewOps.PROP_SOURCE)))
 
-  /** Applies all source changes the view has not seen.
-    *
-    * == Crash atomicity (ADVICE r12) ==
-    * State commits first, meta second, and the APP watermark rides the
-    * LAST commit (meta): a crash between the two leaves the watermark
-    * un-advanced, so the next refresh replays the same change batch —
-    * output-idempotent (netted purge-then-refold), at worst a
-    * conservatively double-spent validity decrement that triggers a
-    * spurious re-derive, never a silently-stale top-k (the failure
-    * mode when the watermark rode the state commit: valid_n stayed
-    * inflated and a required re-derive could be skipped). */
-  def refresh(src: VersionedTable): Option[Long] = {
-    val latest = src.latestVersion
-    // max over BOTH tables (ADVICE r13): pre-migration views carry the
-    // watermark on the state commit only — without the fallback their
-    // first refresh replays the entire CDF history (or fails if early
-    // versions were vacuumed). meta commits last, so meta ≤ state
-    // always; current-code commits put the txn on meta alone.
-    val since = math.max(meta.lastTxn(APP).getOrElse(0L),
-      state.lastTxn(APP).getOrElse(0L)) + 1
-    if (latest < since) return None
-    val wm = Map(APP -> latest)
-    // NET the batch per (grp, id) key FIRST: a row inserted AND deleted
-    // between two refreshes must not re-enter through the insert leg,
-    // and an in-window ord update must fold its latest image exactly
-    // once. Latest commit wins; within one commit an update's postimage
-    // outranks its preimage. Preimages are KEPT as net keys (unlike the
-    // single-key [[graft.llm.IncrementalIndex.netChanges]]) because a
-    // group-moving update's old (grp, id) has ONLY a preimage — that is
-    // what purges the old group's buffer row.
-    val netW = Window.partitionBy(col(grpCol), col(idCol))
-      .orderBy(col("_commit_version").desc,
-        when(col("_change_type").isin("insert", "update_postimage"), 1)
-          .otherwise(0).desc)
-    val ch = src.changes(since)
-      .select(col(grpCol), col(idCol), col(ordCol),
-        col("_change_type"), col("_commit_version"))
-      .withColumn("__rnk", row_number().over(netW))
-      .filter(col("__rnk") === 1)
-      .withColumn("__op",
-        when(col("_change_type").isin("delete", "update_preimage"), "DELETE")
-          .otherwise("UPSERT"))
-      .drop("__rnk", "_change_type", "_commit_version")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val inserts = ch.filter(col("__op") === "UPSERT").drop("__op")
-      // EVERY net-changed key purges its buffer row and (when buffered)
-      // spends a validity position — conservatively including upserts
-      // of buffered rows, whose re-entry rank is not provable without a
-      // re-derive; the fold then re-admits the fresh image via the trim
-      val changed = ch.select(col(grpCol), col(idCol))
-      // touched groups: bounded by the delta AND capped at
-      // `keyPruneMax` (VERDICT r11 #2 — the JoinView/AggView
-      // limit+fallback pattern). Past the cap the driver never holds
-      // the key set: a delta touching >10k groups is a near-rebuild,
-      // where one full re-derive from the source beats 10k-literal
-      // plans anyway.
-      val grps = VersionedTable.boundedKeys(
-          ch.select(col(grpCol)).distinct(), keyPruneMax) match {
-        case Some(g) => g
-        case None =>
-          lastRefreshFull = true
-          return Some(fullRederive(src, wm))
-      }
-      lastRefreshFull = false
-      if (grps.isEmpty) {
-        meta.commitFiles(Seq.empty, Seq.empty, None, "refresh-noop",
-          extraTxn = wm)
-        return Some(state.latestVersion)
-      }
-      // stats-pruned (state batches are written range-clustered by
-      // group, so file min/max stats skip)
-      val oldCand = state.snapshotForKeys(grpCol, grps)
-      val oldMeta = meta.snapshotForKeys(grpCol, grps)
-      // validity after deletes: valid_n - (candidate rows deleted);
-      // groups with no meta row are NEW and must derive
-      val lost = oldCand.join(changed, Seq(grpCol, idCol), "left_semi")
-        .groupBy(col(grpCol)).agg(count(lit(1)).as("lost"))
-      val validity = spark.createDataFrame(
-          spark.sparkContext.parallelize(grps.map(org.apache.spark.sql.Row(_)), 1),
-          StructType(Seq(state.schema(grpCol))))
-        .join(oldMeta, Seq(grpCol), "left")
-        .join(lost, Seq(grpCol), "left")
-        .select(col(grpCol),
-          (coalesce(col("valid_n"), lit(-1L)) - coalesce(col("lost"), lit(0L)))
-            .as("v"))
-      val validRows = validity.collect()
-      val deriveGrps = validRows.filter(_.getLong(1) < K).map(_.get(0)).toSeq
-      val foldGrps = validRows.filter(_.getLong(1) >= K).map(_.get(0)).toSeq
+  /** Applies all source changes the view has not seen. */
+  def refresh(src: VersionedTable): Option[Long] = buffer.refresh(src, delta(src))
 
-      // FOLD path: (survivors ∪ inserts) trimmed per group to K+SLACK
-      val foldCand =
-        if (foldGrps.isEmpty) None
-        else {
-          val surv = filterGrps(oldCand, foldGrps)
-            .join(changed, Seq(grpCol, idCol), "left_anti")
-          Some(surv.unionByName(filterGrps(inserts, foldGrps)))
-        }
-      // DERIVE path: exact top-(K+SLACK) from a per-group source read
-      val deriveCand =
-        if (deriveGrps.isEmpty) None
-        else Some(src.snapshotForKeys(grpCol, deriveGrps)
-          .select(col(grpCol), col(idCol), col(ordCol)))
-      val unioned = (foldCand, deriveCand) match {
-        case (Some(a), Some(b)) => a.unionByName(b)
-        case (Some(a), None)    => a
-        case (None, Some(b))    => b
-        case _                  => return Some(state.latestVersion)
+  private[table] def delta(src: VersionedTable): CandidateBuffer.Delta =
+    new CandidateBuffer.Delta {
+      // NET the batch per (grp, id) key: a row inserted AND deleted
+      // between two refreshes must not re-enter through the insert leg,
+      // and an in-window ord update must fold its latest image exactly
+      // once. Latest commit wins; within one commit an update's
+      // postimage outranks its preimage. Preimages are KEPT as net keys
+      // (unlike the single-key [[graft.llm.IncrementalIndex.netChanges]])
+      // because a group-moving update's old (grp, id) has ONLY a
+      // preimage — that is what purges the old group's buffer row.
+      def net(since: Long): DataFrame = {
+        val netW = Window.partitionBy(col(grpCol), col(idCol))
+          .orderBy(col("_commit_version").desc,
+            when(VersionedTable.RETRACTION, 0).otherwise(1).desc)
+        src.changes(since)
+          .select(cols :+ col("_change_type") :+ col("_commit_version"): _*)
+          .withColumn("__rnk", row_number().over(netW))
+          .filter(col("__rnk") === 1)
+          .withColumn("__op",
+            when(VersionedTable.RETRACTION, "DELETE").otherwise("UPSERT"))
+          .drop("__rnk", "_change_type", "_commit_version")
       }
-      val w = Window.partitionBy(col(grpCol))
-        .orderBy(col(ordCol).desc, col(idCol).asc)
-      val fresh = unioned
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= CAND).drop("__rn")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val dels = oldCand.select(col(grpCol), col(idCol))
-          .join(fresh, Seq(grpCol, idCol), "left_anti")
-          .withColumn("__op", lit("DELETE"))
-        Merge.run(state,
-          fresh.withColumn("__op", lit("UPSERT"))
-            .unionByName(dels, allowMissingColumns = true),
-          Seq(grpCol, idCol), Merge.upsertDeleteClauses)
-        // meta: folds keep v (capped at CAND), derives reset to CAND;
-        // the watermark commits HERE, after the state merge — see the
-        // crash-atomicity note on [[refresh]]
-        val newMeta = validity
-          .withColumn("valid_n",
-            when(col("v") < K, lit(CAND.toLong))
-              .otherwise(least(col("v"), lit(CAND.toLong))))
-          .select(col(grpCol), col("valid_n"))
-          .withColumn("__op", lit("UPSERT"))
-        Merge.run(meta, newMeta, Seq(grpCol), Merge.upsertDeleteClauses,
-          extraTxn = wm)
-        Some(state.latestVersion)
-      } finally fresh.unpersist()
-    } finally ch.unpersist()
-  }
-
-  /** Fallback past the key-prune cap: one exact re-derive of EVERY
-    * group's top-(K+SLACK) buffer from the current source snapshot —
-    * a single window pass (shuffle on `grpCol`, nothing driver-side),
-    * merged against the state so unchanged buffer rows rewrite only
-    * their files, with vanished groups deleted and every validity
-    * reset to CAND. Same cost shape as [[TopKViewOps.build]], which
-    * is the point: a >keyPruneMax-group delta IS a rebuild. */
-  private def fullRederive(src: VersionedTable, wm: Map[String, Long]): Long = {
-    val w = Window.partitionBy(col(grpCol))
-      .orderBy(col(ordCol).desc, col(idCol).asc)
-    val fresh = src.snapshot()
-      .select(col(grpCol), col(idCol), col(ordCol))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= CAND).drop("__rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dels = state.snapshot().select(col(grpCol), col(idCol))
-        .join(fresh, Seq(grpCol, idCol), "left_anti")
-        .withColumn("__op", lit("DELETE"))
-      Merge.run(state,
-        fresh.withColumn("__op", lit("UPSERT"))
-          .unionByName(dels, allowMissingColumns = true),
-        Seq(grpCol, idCol), Merge.upsertDeleteClauses)
-      val grpsNow = fresh.select(col(grpCol)).distinct()
-      val metaDels = meta.snapshot().select(col(grpCol))
-        .join(grpsNow, Seq(grpCol), "left_anti")
-        .withColumn("__op", lit("DELETE"))
-      // watermark on the last commit — crash-atomicity note on [[refresh]]
-      Merge.run(meta,
-        grpsNow.withColumn("valid_n", lit(CAND.toLong))
-          .withColumn("__op", lit("UPSERT"))
-          .unionByName(metaDels, allowMissingColumns = true),
-        Seq(grpCol), Merge.upsertDeleteClauses, extraTxn = wm)
-      state.latestVersion
-    } finally fresh.unpersist()
-  }
+      // past the cap the driver never holds the key set: a delta
+      // touching >10k groups is a near-rebuild, where one full
+      // re-derive beats 10k-literal plans anyway (VERDICT r11 #2)
+      def maxGroups: Int = keyPruneMax
+      def all(): DataFrame = src.snapshot().select(cols: _*)
+      def fold(upserts: DataFrame, groups: Seq[Any]): DataFrame =
+        VersionedTable.filterForKeys(upserts, state.schema(grpCol), groups)
+      def derive(groups: Seq[Any]): DataFrame =
+        src.snapshotForKeys(grpCol, groups).select(cols: _*)
+    }
 
   /** The maintained top-k readout `(grp, id, ord, rnk)` — a window
     * over the compact candidate state, never the source. */
-  def topk(): DataFrame = {
-    val w = Window.partitionBy(col(grpCol))
-      .orderBy(col(ordCol).desc, col(idCol).asc)
-    state.snapshot()
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
-  }
+  def topk(): DataFrame = buffer.topk()
 }
 
 object TopKViewOps extends QueryModule {
@@ -282,7 +123,6 @@ object TopKViewOps extends QueryModule {
       k: Int = K, slack: Int = SLACK): TopKView = {
     val spark = src.spark
     val srcSchema = src.schema
-    val cand0 = k + slack
     def f(n: String) = srcSchema(n)
     // the state is compact (|groups|·(k+slack) rows) — a plain CoW
     // table whose merges rewrite only files containing touched keys
@@ -293,22 +133,11 @@ object TopKViewOps extends QueryModule {
         PROP_SOURCE -> src.root.toString))
     val meta = VersionedTable.create(spark, s"$root/meta",
       StructType(Seq(f(grpCol), StructField("valid_n", LongType))))
+    val v = new TopKView(state, meta, grpCol, idCol, ordCol, k, slack)
     val latest = src.latestVersion
-    val w = Window.partitionBy(col(grpCol))
-      .orderBy(col(ordCol).desc, col(idCol).asc)
-    val cand = src.snapshot()
-      .select(col(grpCol), col(idCol), col(ordCol))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= cand0).drop("__rn")
-    Merge.run(state, cand.withColumn("__op", lit("UPSERT")),
-      Seq(grpCol, idCol), Merge.upsertDeleteClauses)
-    // watermark on the last commit — crash-atomicity note on [[refresh]]
-    Merge.run(meta,
-      cand.select(col(grpCol)).distinct()
-        .withColumn("valid_n", lit(cand0.toLong))
-        .withColumn("__op", lit("UPSERT")),
-      Seq(grpCol), Merge.upsertDeleteClauses, extraTxn = Map(APP -> latest))
-    new TopKView(state, meta, grpCol, idCol, ordCol, k, slack)
+    v.buffer.seed(src.snapshot().select(col(grpCol), col(idCol), col(ordCol)),
+      None, Some(latest))
+    v
   }
 
   /** Loads a built view from its recorded definition. */

@@ -1703,6 +1703,9 @@ object VersionedTable {
   /** CDF change-type column: stored in change files; in a commit's
     * write input, null marks a data row. */
   val CHANGE_TYPE = "_change_type"
+  /** True on the CDF rows that retract an image — update preimages and
+    * deletes; inserts and update postimages assert one. */
+  val RETRACTION: Column = col(CHANGE_TYPE).isin("update_preimage", "delete")
   /** Transient write-input flag: the data rows a commit introduces
     * (CHECK constraints judge them). Never lands in a file. */
   private[table] val INTRO_COL = "__intro"

@@ -183,6 +183,36 @@ class RerankViewChurnSpec extends SparkSpec {
       "a state-side watermark at latest must be honored — no replay")
   }
 
+  test("a torn refresh (state committed, meta not) converges on the next refresh") {
+    val src = VersionedTable.create(spark,
+      graft.Scratch.dir("rrv-torn").resolve("t").toString,
+      srcSchema, Map(VersionedTable.PROP_CDF -> "true"))
+    src.append(docRows(600L to 640L))
+    val q = qFrame(Seq(5000L, 5001L))
+    val v = build(src, graft.Scratch.dir("rrv-torn-v").toString, q)
+    val wm = v.meta.lastTxn(RerankViewOps.APP)
+    // a batch that spends slack: three of one query's leaders
+    val leaders = got(v).filter(_._1 == 5000L).take(3).map(_._2)
+    src.deleteWhere(col("doc_id").isin(leaders: _*))
+    // the state commit lands, the meta commit it owes is dropped
+    assert(v.buffer.refreshState(src, v.delta(src, q)).isDefined)
+    assert(v.meta.lastTxn(RerankViewOps.APP) === wm,
+      "a torn refresh must leave the watermark where it was")
+    // retiring a query between the tear and the rerun must not hide it
+    v.dropQueries(Seq(5001L))
+    val q0 = qFrame(Seq(5000L))
+    v.refresh(src, q0)
+    assert(v.lastDerived === 1, "the rerun must re-derive the torn buffers")
+    assert(got(v) === expected(src, q0))
+    // the replayed validity must not overstate the buffer: each further
+    // leader delete must still read the true top-K
+    for (i <- 1 to 3) {
+      src.deleteWhere(col("doc_id") === got(v).filter(_._1 == 5000L).head._2)
+      v.refresh(src, q0)
+      assert(got(v) === expected(src, q0), s"delete $i after the torn refresh")
+    }
+  }
+
   test("the refresh watermark rides the META commit (crash atomicity)") {
     // ADVICE r12: with the watermark on the state commit, a crash
     // between the state and meta merges advanced it while valid_n

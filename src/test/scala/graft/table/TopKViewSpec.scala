@@ -80,6 +80,31 @@ class TopKViewSpec extends SparkSpec {
     assert(got(v) === expected(src))
   }
 
+  test("a torn refresh (state committed, meta not) converges on the next refresh") {
+    val src = mkSource("topk-torn")
+    src.append(rows(docs(30, "en") ++ docs(30, "fr", 1000): _*))
+    val v = TopKViewOps.build(src, graft.Scratch.dir("topk-torn-v").toString,
+      "lang", "doc_id", "ord")
+    val wm = v.meta.lastTxn(TopKViewOps.APP)
+    // a batch that spends en slack and folds fr inserts
+    val leaders = got(v).filter(_._1 == "en").take(3).map(_._2)
+    src.deleteWhere(col("doc_id").isin(leaders: _*))
+    src.append(rows(docs(2, "fr", 5000): _*))
+    // the state commit lands, the meta commit it owes is dropped
+    assert(v.buffer.refreshState(src, v.delta(src)).isDefined)
+    assert(v.meta.lastTxn(TopKViewOps.APP) === wm,
+      "a torn refresh must leave the watermark where it was")
+    v.refresh(src)
+    assert(got(v) === expected(src))
+    // the replayed validity must not overstate the buffer: each further
+    // leader delete must still read the true top-k
+    for (i <- 1 to 3) {
+      src.deleteWhere(col("doc_id") === got(v).filter(_._1 == "en").head._2)
+      v.refresh(src)
+      assert(got(v) === expected(src), s"delete $i after the torn refresh")
+    }
+  }
+
   test("deletes: slack absorbs small ones, storms force exact re-derive") {
     val src = mkSource("topk-del")
     src.append(rows(docs(40, "en") ++ docs(40, "fr", 1000): _*))
