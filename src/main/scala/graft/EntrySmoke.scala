@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-contract smoke: `SparkEntry.entry` must return rows on
   * sf0.001. Exits non-zero when it doesn't (used by the verify skill —
   * piping into `sbt console` is not reliable in this environment). */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")

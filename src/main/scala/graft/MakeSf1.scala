@@ -35,14 +35,8 @@ object MakeSf1 {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.drop(1).headOption.getOrElse(DefaultOut)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     build(spark, src, out)
     spark.stop()

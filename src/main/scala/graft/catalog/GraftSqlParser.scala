@@ -101,15 +101,19 @@ class GraftSqlParser(
     ("""(?is)\s*CREATE\s+TOPK\s+VIEW\s+(\S+?)\s+ON\s+(\S+?)\s+GROUP\s+BY\s+""" +
       """`?(\w+)`?\s+ORDER\s+BY\s+`?(\w+)`?\s+DESC\s+KEY\s+`?(\w+)`?\s+""" +
       """LIMIT\s+(\d+)\s*;?\s*""").r
-  // CREATE VECTOR INDEX <i> ON <t> (embedding) USING IVF|PQ|SQ8
+  // CREATE VECTOR INDEX <i> ON <t> (embedding) USING IVF|IVFPQ|PQ|SQ8
   // CREATE SIGNATURE INDEX <i> ON <t> (text) USING MINHASH|PHASH|AFP
   // CREATE TEXT INDEX <i> ON <t> (text) USING BM25
-  // — persisted incremental indexes (graft.llm.IncrementalIndex);
-  // REFRESH/DESCRIBE/REINDEX resolve everything from the index's own
-  // recorded properties, like the materialized views
-  private val CreateIndex =
-    ("""(?is)\s*CREATE\s+(VECTOR|SIGNATURE|TEXT)\s+INDEX\s+(\S+?)\s+ON\s+(\S+?)""" +
-      """\s*\(\s*`?(\w+)`?\s*\)\s+USING\s+(IVFPQ|IVF|PQ|SQ8|MINHASH|PHASH|AFP|BM25)\s*;?\s*""").r
+  // — persisted incremental indexes, one graft.llm.IndexMethod each (the
+  // kinds and methods below are read from that table); REFRESH/DESCRIBE/
+  // REINDEX resolve everything from the index's own recorded
+  // properties, like the materialized views
+  private val CreateIndex = {
+    val methods = graft.llm.IndexMethod.all
+    ("""(?is)\s*CREATE\s+(""" + methods.map(_.kind).distinct.mkString("|") +
+      """)\s+INDEX\s+(\S+?)\s+ON\s+(\S+?)\s*\(\s*`?(\w+)`?\s*\)\s+USING\s+(""" +
+      methods.map(_.name.toUpperCase).mkString("|") + """)\s*;?\s*""").r
+  }
   private val RefreshIndex =
     """(?is)\s*REFRESH\s+INDEX\s+(\S+?)\s*;?\s*""".r
   private val DescribeIndex =
@@ -742,6 +746,12 @@ private[catalog] object IndexDdl {
   def sourceOf(spark: SparkSession, t: VersionedTable): VersionedTable =
     VersionedTable.load(spark, t.latestManifest.properties(PROP_SOURCE))
 
+  /** The index at `path`, opened by its recorded method; `t` is its
+    * properties table ([[loadIndexTable]]). */
+  def open(spark: SparkSession, path: String,
+      t: VersionedTable): graft.llm.MaintainedIndex =
+    graft.llm.IndexMethod.named(methodOf(t)).load(spark, path)
+
   /** The table carrying an index's recorded properties. Simple indexes
     * ARE one table at the index path; composite roots (BM25: postings +
     * doclens + stats views under one directory) record theirs on the
@@ -763,33 +773,15 @@ case class CreateIndexCommand(
   override val output: Seq[Attribute] =
     Seq(AttributeReference("version", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    val expectKind = method match {
-      case "minhash" | "phash" | "afp" => "SIGNATURE"
-      case "bm25" => "TEXT"
-      case _ => "VECTOR"
-    }
-    require(kind == expectKind,
-      s"USING ${method.toUpperCase} requires CREATE $expectKind INDEX")
-    // derivations are fixed-schema in this engine revision: vector
-    // methods index (vec_id, embedding), text methods (doc_id, text)
-    val expectCol =
-      if (Set("minhash", "phash", "afp", "bm25")(method)) "text" else "embedding"
-    require(colName == expectCol,
-      s"USING ${method.toUpperCase} indexes the '$expectCol' column; " +
+    val m = graft.llm.IndexMethod.named(method)
+    require(kind == m.kind,
+      s"USING ${method.toUpperCase} requires CREATE ${m.kind} INDEX")
+    require(colName == m.column,
+      s"USING ${method.toUpperCase} indexes the '${m.column}' column; " +
         s"got '$colName'")
-    val source = GraftSqlParser.resolve(spark, tbl)
     val path = GraftSqlParser.cleanName(name)
-    val t = method match {
-      case "ivf" => graft.llm.VectorIndex.build(source, path).table
-      case "ivfpq" => graft.llm.IvfPqIndex.build(source, path).table
-      case "pq" => graft.llm.PqIndex.build(source, path).table
-      case "sq8" => graft.llm.Sq8Index.build(source, path).table
-      case "minhash" => graft.llm.SignatureIndex.build(source, path).table
-      case "phash" => graft.llm.ImageHashIndex.build(source, path).table
-      case "afp" => graft.llm.AudioHashIndex.build(source, path).table
-      case "bm25" => graft.llm.Bm25Index.build(source, path).postings
-    }
-    Seq(Row(t.latestVersion))
+    m.build(GraftSqlParser.resolve(spark, tbl), path)
+    Seq(Row(IndexDdl.loadIndexTable(spark, path).latestVersion))
   }
 }
 
@@ -803,20 +795,7 @@ case class RefreshIndexCommand(name: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val path = GraftSqlParser.cleanName(name)
     val t = IndexDdl.loadIndexTable(spark, path)
-    val source = IndexDdl.sourceOf(spark, t)
-    val v = IndexDdl.methodOf(t) match {
-      case "ivf" => graft.llm.VectorIndex.load(spark, path).refresh(source)
-      case "ivfpq" => graft.llm.IvfPqIndex.load(spark, path).refresh(source)
-      case "pq" => graft.llm.PqIndex.load(spark, path).refresh(source)
-      case "sq8" => graft.llm.Sq8Index.load(spark, path).refresh(source)
-      case "minhash" =>
-        graft.llm.SignatureIndex.load(spark, path).refresh(source)
-      case "phash" =>
-        graft.llm.ImageHashIndex.load(spark, path).refresh(source)
-      case "afp" =>
-        graft.llm.AudioHashIndex.load(spark, path).refresh(source)
-      case "bm25" => graft.llm.Bm25Index.load(spark, path).refresh(source)
-    }
+    val v = IndexDdl.open(spark, path, t).refresh(IndexDdl.sourceOf(spark, t))
     Seq(Row(v.getOrElse(t.latestVersion)))
   }
 }
@@ -830,21 +809,7 @@ case class ReindexCommand(name: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val path = GraftSqlParser.cleanName(name)
     val t = IndexDdl.loadIndexTable(spark, path)
-    val source = IndexDdl.sourceOf(spark, t)
-    val v = IndexDdl.methodOf(t) match {
-      case "ivf" => graft.llm.VectorIndex.load(spark, path).reindex(source)
-      case "ivfpq" => graft.llm.IvfPqIndex.load(spark, path).reindex(source)
-      case "pq" => graft.llm.PqIndex.load(spark, path).reindex(source)
-      case "sq8" => graft.llm.Sq8Index.load(spark, path).reindex(source)
-      case "minhash" =>
-        graft.llm.SignatureIndex.load(spark, path).reindex(source)
-      case "phash" =>
-        graft.llm.ImageHashIndex.load(spark, path).reindex(source)
-      case "afp" =>
-        graft.llm.AudioHashIndex.load(spark, path).reindex(source)
-      case "bm25" => graft.llm.Bm25Index.load(spark, path).reindex(source)
-    }
-    Seq(Row(v))
+    Seq(Row(IndexDdl.open(spark, path, t).reindex(IndexDdl.sourceOf(spark, t))))
   }
 }
 

@@ -57,7 +57,7 @@ final class Bm25Index private (
     val postings: VersionedTable,
     val doclens: VersionedTable,
     val termStats: AggView,
-    val corpusStats: AggView) {
+    val corpusStats: AggView) extends MaintainedIndex {
   /** Applies all source changes not yet reflected, stage by stage:
     * postings + doclens from the source CDF, then the stats views from
     * the index tables' CDF. Returns the postings version committed, or
@@ -78,14 +78,10 @@ final class Bm25Index private (
   def reindex(source: VersionedTable): Long = {
     val latest = source.latestVersion
     val snap = source.snapshot()
-    postings.overwriteWhere(lit(true), Bm25Ops.derivePostings(snap))
-    postings.commitFiles(Seq.empty, Seq.empty, None, "reindex-watermark",
-      extraTxn = Map(Bm25Ops.APP -> latest))
-    doclens.overwriteWhere(lit(true), snap.select(col("doc_id"),
-      size(split(lower(col("text")), " ")).cast("long").as("dl"),
-      lit(0).as("k")))
-    doclens.commitFiles(Seq.empty, Seq.empty, None, "reindex-watermark",
-      extraTxn = Map(Bm25Ops.APP -> latest))
+    IncrementalIndex.rederiveAll(postings, snap, Bm25Ops.derivePostings,
+      Bm25Ops.APP, latest)
+    IncrementalIndex.rederiveAll(doclens, snap, Bm25Index.deriveDoclens,
+      Bm25Ops.APP, latest)
     termStats.refresh(postings)
     corpusStats.refresh(doclens)
     postings.latestVersion
@@ -120,13 +116,15 @@ final class Bm25Index private (
 object Bm25Index {
   import Bm25Ops.{APP, derivePostings}
 
+  /** `(doc_id, dl, k, __op)` of a batch of `(doc_id, text, __op)` rows. */
+  private def deriveDoclens(rows: DataFrame): DataFrame =
+    rows.select(col("doc_id"),
+      size(split(lower(col("text")), " ")).cast("long").as("dl"),
+      lit(0).as("k"), col("__op"))
+
   private[llm] def refreshDoclens(
       doclens: VersionedTable, source: VersionedTable): Option[Long] =
-    IncrementalIndex.refresh(doclens, source, "doc_id",
-      rows => rows.select(col("doc_id"),
-        size(split(lower(col("text")), " ")).cast("long").as("dl"),
-        lit(0).as("k"), col("__op")),
-      APP)
+    IncrementalIndex.refresh(doclens, source, "doc_id", deriveDoclens, APP)
 
   private[llm] def refreshPostings(
       postings: VersionedTable, source: VersionedTable): Option[Long] =
@@ -144,8 +142,6 @@ object Bm25Index {
     StructField("dl", LongType),
     StructField("k", IntegerType)))
 
-  val BUCKETS = 8
-
   /** Indexes the source's current snapshot (full derivation — the bulk
     * path; [[Bm25Index.refresh]] handles deltas only) and builds the
     * chained stats views off the freshly-seeded index tables. Source
@@ -161,14 +157,14 @@ object Bm25Index {
       postingsSchema,
       IncrementalIndex.indexProps("bm25", source, "text", "pkey") +
         (VersionedTable.PROP_CDF -> "true"),
-      bucketBy = Some(BucketSpec(Seq("pkey"), BUCKETS)))
+      bucketBy = Some(BucketSpec(Seq("pkey"), IncrementalIndex.BUCKETS)))
     refreshPostings(post, source)
 
     val dls = VersionedTable.create(s, root.resolve("doclens").toString,
       doclensSchema,
       IncrementalIndex.indexProps("bm25-doclen", source, "text", "doc_id") +
         (VersionedTable.PROP_CDF -> "true"),
-      bucketBy = Some(BucketSpec(Seq("doc_id"), BUCKETS)))
+      bucketBy = Some(BucketSpec(Seq("doc_id"), IncrementalIndex.BUCKETS)))
     refreshDoclens(dls, source)
 
     val term = AggView.build(post, root.resolve("termstats").toString,

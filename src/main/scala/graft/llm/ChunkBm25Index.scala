@@ -184,8 +184,6 @@ object ChunkBm25Index {
     StructField("dl", LongType),
     StructField("k", IntegerType)))
 
-  val BUCKETS = 8
-
   /** Indexes the source's current snapshot through the same refresh
     * path that maintains it (the [[Bm25Index]]/[[SignatureIndex]]
     * contract) and builds the chained stats views. Source needs CDF. */
@@ -196,13 +194,13 @@ object ChunkBm25Index {
       postingsSchema,
       IncrementalIndex.indexProps("chunk-bm25", source, "text", "pkey") +
         (VersionedTable.PROP_CDF -> "true"),
-      bucketBy = Some(BucketSpec(Seq("pkey"), BUCKETS)))
+      bucketBy = Some(BucketSpec(Seq("pkey"), IncrementalIndex.BUCKETS)))
     IncrementalIndex.refreshDerived(post, source, deriveChunkPostings, "pkey", APP)
     val cls = VersionedTable.create(s, root.resolve("chunklens").toString,
       chunklensSchema,
       IncrementalIndex.indexProps("chunk-bm25-len", source, "text", "ckey") +
         (VersionedTable.PROP_CDF -> "true"),
-      bucketBy = Some(BucketSpec(Seq("ckey"), BUCKETS)))
+      bucketBy = Some(BucketSpec(Seq("ckey"), IncrementalIndex.BUCKETS)))
     IncrementalIndex.refreshDerived(cls, source, deriveChunklens, "ckey", APP)
     val term = AggView.build(post, root.resolve("termstats").toString,
       Seq("tok"), sums = Seq.empty)

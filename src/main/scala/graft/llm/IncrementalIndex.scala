@@ -41,6 +41,10 @@ object IncrementalIndex {
   val PROP_COLUMN = "graft.index.column"
   val PROP_KEY = "graft.index.key"
 
+  /** Buckets of every index table: refreshes CoW-rewrite only buckets
+    * holding changed keys. */
+  val BUCKETS = 8
+
   private[llm] def indexProps(
       method: String, source: VersionedTable,
       column: String, key: String): Map[String, String] = Map(
@@ -102,6 +106,23 @@ object IncrementalIndex {
     }
   }
 
+  /** Replaces every row of `index` with `derive` of the source snapshot
+    * `snap` (which, as in a refresh, sees the rows as UPSERTs) and
+    * records source version `latest` as the `appId` watermark — the
+    * rebuild behind `REINDEX INDEX`. The overwrite emits delete+insert
+    * CDF, so views chained on the index fold it like any other change. */
+  private[llm] def rederiveAll(
+      index: VersionedTable,
+      snap: DataFrame,
+      derive: DataFrame => DataFrame,
+      appId: String,
+      latest: Long): Unit = {
+    index.overwriteWhere(lit(true),
+      derive(snap.withColumn("__op", lit("UPSERT"))).drop("__op"))
+    index.commitFiles(Seq.empty, Seq.empty, None, "reindex-watermark",
+      extraTxn = Map(appId -> latest))
+  }
+
   /** Applies all source changes to an index holding SEVERAL rows per
     * source document, keyed by `stateKey` and carrying `doc_id`: the
     * changed documents' rows re-derive (`derive` sees their UPSERT
@@ -127,6 +148,30 @@ object IncrementalIndex {
       finally net.unpersist()
     }
   }
+
+  /** Band signatures of the (`doc_id`, `text`) rows through a media
+    * codec (`bands`, `grid` per renderable row). Total derivation:
+    * documents with no renderable payload (empty text) index a NULL
+    * signature — they can never band-match, and an update shrinking a
+    * document to empty still overwrites its stale signature. `rows` are
+    * UPSERTs only ([[refresh]]), so the op column is re-attached as a
+    * literal after the codec pass drops it. */
+  private[llm] def bandSignatures(
+      rows: DataFrame, codec: DataFrame => DataFrame): DataFrame = {
+    val renderable = coalesce(length(col("text")), lit(0)) >= 1
+    codec(rows.filter(renderable))
+      .withColumn("__op", lit("UPSERT"))
+      .unionByName(rows.filter(!renderable)
+        .select(col("doc_id"),
+          lit(null).cast("array<bigint>").as("bands"),
+          lit(null).cast("array<bigint>").as("grid"),
+          lit("UPSERT").as("__op")))
+  }
+
+  private[llm] def bandSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("bands", ArrayType(LongType)),
+    StructField("grid", ArrayType(LongType))))
 }
 
 /** Append-only quantizer-drift log under `<index>/_drift`: a FROZEN
@@ -146,10 +191,13 @@ object IndexDrift {
       atVersion: Long, baseline: Boolean): Unit = {
     val s = t.spark
     import s.implicits._
-    // seq orders the log by WRITE time: a REINDEX baseline lands at the
+    // seq orders the log by WRITE order: a REINDEX baseline lands at the
     // same source version as the refresh preceding it, so at_version
-    // alone cannot order epochs
-    Seq((System.nanoTime(), atVersion, metric, value, nRows, baseline))
+    // alone cannot order epochs. One past the log's largest seq orders
+    // rows written by any process; a clock reading orders only the
+    // rows of the JVM that took it.
+    val seq = history(t).fold(0L)(_.agg(max(col("seq"))).head().getLong(0) + 1)
+    Seq((seq, atVersion, metric, value, nRows, baseline))
       .toDF("seq", "at_version", "metric", "value", "n_rows", "baseline")
       .coalesce(1).write.mode("append").parquet(dirPath(t).toString)
   }
@@ -174,88 +222,197 @@ object IndexDrift {
     }
 }
 
-/** A persisted IVF (inverted-file) vector index over a source table
-  * with (`vec_id: long`, `embedding: array<float>`):
+/** The maintenance protocol of an index holding ONE row per source key
+  * ([[VectorIndex]], [[IvfPqIndex]], [[PqIndex]], [[Sq8Index]],
+  * [[SignatureIndex]], [[ImageHashIndex]], [[AudioHashIndex]]). A
+  * subclass supplies its key, app id and `derive`, and — when it
+  * quantizes — `train` and `drift`:
   *
-  *   - '''build''' trains a Lloyd codebook on the source's CURRENT
-  *     snapshot ([[SimilarityOps.lloydCodebook]] — the same
-  *     deterministic training the oracle replays), freezes it under
-  *     `<index>/_codebook`, and indexes the snapshot;
-  *   - '''refresh''' assigns only NEW/CHANGED vectors to cells with the
-  *     frozen codebook and merges them in (deletes propagate) — the
-  *     standard IVF maintenance contract (append to cells, retrain by
-  *     rebuilding when drift warrants);
-  *   - '''search''' probes the frozen codebook and verifies exactly
-  *     within the probed cells, reading assignments from the index —
-  *     queries never pay training or assignment again.
-  */
-final class VectorIndex private (val table: VersionedTable) {
-  import VectorIndex._
+  *   - '''build''' ([[SingleKeyIndex.create]]) creates the key-bucketed
+  *     index table with its self-description properties, trains on the
+  *     source's current snapshot, and seeds through the refresh path;
+  *     the seed batch's drift is the BASELINE;
+  *   - '''refresh''' applies source changes since the last refresh
+  *     ([[IncrementalIndex.refresh]]) with the quantizer FROZEN, logging
+  *     each batch's drift — the standard frozen-quantizer maintenance
+  *     contract (append, retrain by rebuilding when drift warrants);
+  *   - '''reindex''' retrains on the CURRENT snapshot, re-derives every
+  *     row and starts a new drift-baseline epoch. O(corpus) by design —
+  *     the rebuild the drift metric calls for, not maintenance. For an
+  *     exact derivation (no quantizer) it reproduces the refreshed rows:
+  *     `REINDEX INDEX` uniformity and corrupted-table recovery.
+  *
+  * Training is deterministic on a snapshot, so a REINDEX of an
+  * unchanged source reproduces the built rows and sidecars. */
+abstract class SingleKeyIndex(
+    val table: VersionedTable, key: String, appId: String)
+    extends MaintainedIndex {
 
-  private def spark: SparkSession = table.spark
-  private def codebookDir: String = table.root.resolve(CODEBOOK_DIR).toString
+  /** Adds the index columns to a batch of source-shaped UPSERT rows
+    * carrying `__op`, against the frozen sidecars. */
+  protected def derive(rows: DataFrame): DataFrame
 
-  /** The frozen codebook: (c_id, cent). */
-  def codebook: DataFrame = spark.read.parquet(codebookDir)
+  /** Trains the quantizer on `snapshot` and freezes it in the index's
+    * sidecar(s); exact derivations have none. */
+  protected def train(snapshot: DataFrame): Unit = ()
 
-  /** Assign rows to their nearest frozen cell. */
-  private def assign(rows: DataFrame): DataFrame =
+  /** A batch's quantizer-fit metric (name, value, rows) for the
+    * [[IndexDrift]] log; None for exact derivations and empty batches. */
+  protected def drift(batch: DataFrame): Option[(String, Double, Long)] = None
+
+  protected def spark: SparkSession = table.spark
+  protected def sidecar(dir: String): String = table.root.resolve(dir).toString
+
+  def refresh(source: VersionedTable): Option[Long] =
+    refreshObserved(source, baseline = false)
+
+  def reindex(source: VersionedTable): Long = {
+    val latest = source.latestVersion
+    val snap = source.snapshot()
+    train(snap)
+    IncrementalIndex.rederiveAll(table, snap, derive, appId, latest)
+    observe(snap, latest, baseline = true)
+    table.latestVersion
+  }
+
+  /** Trains on the source's current snapshot, then applies its whole
+    * change feed as one refresh batch whose drift is the baseline. */
+  private[llm] def seed(source: VersionedTable): Unit = {
+    train(source.snapshot())
+    refreshObserved(source, baseline = true)
+  }
+
+  private def refreshObserved(
+      source: VersionedTable, baseline: Boolean): Option[Long] = {
+    val latest = source.latestVersion
+    IncrementalIndex.refresh(table, source, key, derive, appId,
+      observe(_, latest, baseline))
+  }
+
+  private def observe(batch: DataFrame, atVersion: Long, baseline: Boolean): Unit =
+    drift(batch).foreach { case (metric, value, n) =>
+      IndexDrift.append(table, metric, value, n, atVersion, baseline)
+    }
+}
+
+object SingleKeyIndex {
+  /** Creates the index table at `path` (bucketed on `key`, recording
+    * `method`/source/`column`/`key`), opens it with `open` and seeds
+    * it from the source, which must have CDF enabled. */
+  private[llm] def create[I <: SingleKeyIndex](
+      source: VersionedTable, path: String, method: String, column: String,
+      key: String, schema: StructType)(open: VersionedTable => I): I = {
+    val idx = open(VersionedTable.create(source.spark, path, schema,
+      IncrementalIndex.indexProps(method, source, column, key),
+      bucketBy = Some(BucketSpec(Seq(key), IncrementalIndex.BUCKETS))))
+    idx.seed(source)
+    idx
+  }
+}
+
+/** The IVF cell quantizer of [[VectorIndex]] and [[IvfPqIndex]]: a
+  * Lloyd codebook (c_id, cent) of ~√N cells
+  * ([[SimilarityOps.adaptiveCells]]) trained by
+  * [[SimilarityOps.lloydCodebook]] — the same deterministic training the
+  * oracle replays. */
+private[llm] object IvfCells {
+  def train(snapshot: DataFrame, dir: String): Unit = {
+    graft.functions.GraftFunctions.register(snapshot.sparkSession)
+    val k = SimilarityOps.adaptiveCells(snapshot.count())
+    SimilarityOps.lloydCodebook(
+        snapshot.select(col("vec_id").as("__vid"), col("embedding").as("ce")),
+        k, SimilarityOps.adaptiveTrainLimit(k))
+      .write.mode("overwrite").parquet(dir)
+  }
+
+  /** Rows' nearest frozen cell: (vec_id, embedding, c_id, __op). */
+  def assign(rows: DataFrame, codebook: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(rows.sparkSession)
     SimilarityOps.nearest(
         rows.withColumnRenamed("vec_id", "__vid")
           .withColumn("ce", col("embedding")),
         codebook, "ce", 1, "__arnk")
       .select(col("__vid").as("vec_id"), col("embedding"),
         col("c_id"), col("__op"))
+  }
 
   /** Batch mean assigned-centroid distance (1 − best cosine) — rises
     * as new vectors land far from the frozen centroids. O(batch) with
-    * the codebook broadcast; appended to the [[IndexDrift]] log. */
-  private def observeDrift(
-      raw: DataFrame, atVersion: Long, baseline: Boolean): Unit = {
-    val r = raw.select(col("vec_id"), col("embedding"))
+    * the codebook broadcast. */
+  def drift(batch: DataFrame, codebook: DataFrame): Option[(String, Double, Long)] = {
+    graft.functions.GraftFunctions.register(batch.sparkSession)
+    val r = batch.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(codebook))
       .withColumn("__c", expr("cosine_sim(embedding, cent)"))
       .groupBy(col("vec_id")).agg(max(col("__c")).as("best"))
       .agg(avg(lit(1.0) - col("best")).as("d"), count(lit(1)).as("n"))
       .collect()(0)
-    if (r.getLong(1) > 0 && !r.isNullAt(0))
-      IndexDrift.append(table, "mean_assign_dist", r.getDouble(0),
-        r.getLong(1), atVersion, baseline)
+    Option.when(r.getLong(1) > 0 && !r.isNullAt(0))(
+      ("mean_assign_dist", r.getDouble(0), r.getLong(1)))
   }
+}
 
-  private def refreshObserved(
-      source: VersionedTable, baseline: Boolean): Option[Long] = {
-    graft.functions.GraftFunctions.register(spark)
-    val latest = source.latestVersion
-    IncrementalIndex.refresh(table, source, "vec_id", assign, APP_ID,
-      observeDrift(_, latest, baseline))
+/** The PQ quantizer of [[PqIndex]] and [[IvfPqIndex]]: per-subspace
+  * codebooks (m, c_id, cent, cc) trained by [[SimilarityOps.pqCodebooks]]
+  * (sample-bounded Lloyd per subspace). */
+private[llm] object PqCodes {
+  private def subvecs(rows: DataFrame): DataFrame = SimilarityOps.subvecs(
+    rows.select(col("vec_id"), col("embedding")), "vec_id", "embedding")
+
+  def train(snapshot: DataFrame, dir: String): Unit =
+    SimilarityOps.pqCodebooks(subvecs(snapshot))
+      .withColumn("cc", expr(SimilarityOps.subDot("cent", "cent")))
+      .write.mode("overwrite").parquet(dir)
+
+  /** (vec_id, codes): per-subspace nearest frozen centroid, codes
+    * packed in subspace order. */
+  def encode(rows: DataFrame, codebook: DataFrame): DataFrame =
+    SimilarityOps.pqAssign(subvecs(rows), codebook.select("m", "c_id", "cent"))
+      .groupBy(col("vec_id"))
+      .agg(expr("transform(sort_array(collect_list(struct(m, c_id)))," +
+        " x -> x.c_id)").as("codes"))
+
+  /** Batch mean per-subspace L2 to the assigned sub-centroid — the PQ
+    * quantization error; rises as the corpus drifts from the frozen
+    * codebooks. */
+  def drift(batch: DataFrame, codebook: DataFrame): Option[(String, Double, Long)] = {
+    val r = subvecs(batch)
+      .join(broadcast(codebook.select("m", "c_id", "cent")), "m")
+      .withColumn("__l2", expr(SimilarityOps.subL2("sv", "cent")))
+      .groupBy(col("vec_id"), col("m")).agg(min(col("__l2")).as("best"))
+      .agg(avg(col("best")).as("d"), count(lit(1)).as("n"))
+      .collect()(0)
+    Option.when(r.getLong(1) > 0 && !r.isNullAt(0))(
+      ("mean_subspace_l2", r.getDouble(0), r.getLong(1)))
   }
+}
 
-  /** Apply source changes since the last refresh (frozen codebook). */
-  def refresh(source: VersionedTable): Option[Long] =
-    refreshObserved(source, baseline = false)
+/** A persisted IVF (inverted-file) vector index over a source table
+  * with (`vec_id: long`, `embedding: array<float>`):
+  *
+  *   - '''build''' trains a Lloyd codebook on the source's CURRENT
+  *     snapshot ([[IvfCells]]), freezes it under `<index>/_codebook`,
+  *     and indexes the snapshot;
+  *   - '''refresh''' assigns only NEW/CHANGED vectors to cells with the
+  *     frozen codebook and merges them in (deletes propagate);
+  *   - '''search''' probes the frozen codebook and verifies exactly
+  *     within the probed cells, reading assignments from the index —
+  *     queries never pay training or assignment again.
+  *
+  * Drift metric: the batch mean assigned-centroid distance. */
+final class VectorIndex private (t: VersionedTable)
+    extends SingleKeyIndex(t, "vec_id", VectorIndex.APP_ID) {
+  import VectorIndex._
 
-  /** Retrain against the CURRENT corpus and re-encode everything: new
-    * frozen codebook (adaptive cell count for the corpus as it now
-    * is), full re-assignment, new drift-baseline epoch. O(corpus) by
-    * design — this is the rebuild the drift metric calls for, not
-    * maintenance. */
-  def reindex(source: VersionedTable): Long = {
-    graft.functions.GraftFunctions.register(spark)
-    val latest = source.latestVersion
-    val snap = source.snapshot()
-    val corpus = snap
-      .select(col("vec_id").as("__vid"), col("embedding").as("ce"))
-    val k = SimilarityOps.adaptiveCells(snap.count())
-    SimilarityOps.lloydCodebook(corpus, k, SimilarityOps.adaptiveTrainLimit(k))
-      .write.mode("overwrite").parquet(codebookDir)
-    table.overwriteWhere(lit(true),
-      assign(snap.withColumn("__op", lit("UPSERT"))).drop("__op"))
-    table.commitFiles(Seq.empty, Seq.empty, None, "reindex-watermark",
-      extraTxn = Map(APP_ID -> latest))
-    observeDrift(snap, latest, baseline = true)
-    table.latestVersion
-  }
+  /** The frozen codebook: (c_id, cent). */
+  def codebook: DataFrame = spark.read.parquet(sidecar(CODEBOOK_DIR))
+
+  protected def derive(rows: DataFrame): DataFrame =
+    IvfCells.assign(rows, codebook)
+  override protected def train(snapshot: DataFrame): Unit =
+    IvfCells.train(snapshot, sidecar(CODEBOOK_DIR))
+  override protected def drift(batch: DataFrame) =
+    IvfCells.drift(batch, codebook)
 
   /** Top-`k` per query vector over the indexed corpus, probing the
     * `nprobe` nearest cells — `nprobe <= 0` (the default) probes ~1/4
@@ -285,6 +442,28 @@ final class VectorIndex private (val table: VersionedTable) {
   }
 }
 
+object VectorIndex {
+  val APP_ID = "vector-index"
+  val CODEBOOK_DIR = "_codebook"
+
+  private def indexSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("c_id", LongType)))
+
+  /** Train on the source's current snapshot (cell count ~√N, clamped —
+    * [[SimilarityOps.adaptiveCells]]), freeze the codebook, and index
+    * the snapshot; the initial whole-corpus assignment records the
+    * drift BASELINE. The source must have CDF enabled (refresh reads
+    * it). */
+  def build(source: VersionedTable, path: String): VectorIndex =
+    SingleKeyIndex.create(source, path, "ivf", "embedding", "vec_id",
+      indexSchema)(new VectorIndex(_))
+
+  def load(spark: SparkSession, path: String): VectorIndex =
+    new VectorIndex(VersionedTable.load(spark, path))
+}
+
 /** A persisted MinHash signature index over a source table with
   * (`doc_id: long`, `text: string`): signatures are pure per-row
   * derivations ([[DedupOps.withMinhashes]]), so incremental maintenance
@@ -292,37 +471,20 @@ final class VectorIndex private (val table: VersionedTable) {
   * [[pairs]] runs the banded-LSH candidate join over the PERSISTED
   * signatures: near-dup queries stop paying the md5-per-shingle pass on
   * the whole corpus (the dominant cost of the query-path operator). */
-final class SignatureIndex private (val table: VersionedTable) {
-  import SignatureIndex._
+final class SignatureIndex private (t: VersionedTable)
+    extends SingleKeyIndex(t, "doc_id", SignatureIndex.APP_ID) {
 
   /** Total derivation: documents too short to shingle index a NULL
     * signature (they can never band-match, so they produce no pairs) —
     * an update shrinking a document below the shingle threshold still
     * overwrites its stale signature. */
-  private def derive(rows: DataFrame): DataFrame = {
+  protected def derive(rows: DataFrame): DataFrame = {
     val nTokens = size(split(lower(col("text")), " "))
     DedupOps.withMinhashes(rows.filter(nTokens >= 3))
       .select(col("doc_id"), col("mhs"), col("__op"))
       .unionByName(rows.filter(nTokens < 3)
         .select(col("doc_id"),
           lit(null).cast("array<string>").as("mhs"), col("__op")))
-  }
-
-  def refresh(source: VersionedTable): Option[Long] =
-    IncrementalIndex.refresh(table, source, "doc_id", derive, APP_ID)
-
-  /** Full re-derivation of the current snapshot. Signatures are exact
-    * per-row derivations, so this reproduces incremental state — it
-    * exists for `REINDEX INDEX` uniformity (there is no quantizer to
-    * drift), and as the recovery path for a corrupted index table. */
-  def reindex(source: VersionedTable): Long = {
-    val latest = source.latestVersion
-    table.overwriteWhere(lit(true),
-      derive(source.snapshot().withColumn("__op", lit("UPSERT")))
-        .drop("__op"))
-    table.commitFiles(Seq.empty, Seq.empty, None, "reindex-watermark",
-      extraTxn = Map(APP_ID -> latest))
-    table.latestVersion
   }
 
   /** All near-dup candidate pairs (doc_a, doc_b, est_sim) at the LSH
@@ -342,21 +504,15 @@ final class SignatureIndex private (val table: VersionedTable) {
 
 object SignatureIndex {
   val APP_ID = "signature-index"
-  val BUCKETS = 8
 
   private def indexSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("mhs", ArrayType(StringType))))
 
   /** Index the source's current snapshot. Source needs CDF enabled. */
-  def build(source: VersionedTable, path: String): SignatureIndex = {
-    val t = VersionedTable.create(source.spark, path, indexSchema,
-      IncrementalIndex.indexProps("minhash", source, "text", "doc_id"),
-      bucketBy = Some(BucketSpec(Seq("doc_id"), BUCKETS)))
-    val idx = new SignatureIndex(t)
-    idx.refresh(source)
-    idx
-  }
+  def build(source: VersionedTable, path: String): SignatureIndex =
+    SingleKeyIndex.create(source, path, "minhash", "text", "doc_id",
+      indexSchema)(new SignatureIndex(_))
 
   def load(spark: SparkSession, path: String): SignatureIndex =
     new SignatureIndex(VersionedTable.load(spark, path))
@@ -385,41 +541,11 @@ object SignatureIndex {
   * bytes they stand for. Candidates stay complete at Hamming ≤ 7 by
   * the pigeonhole band split, and the index table is doc_id-bucketed
   * so refresh merges rewrite only touched buckets. */
-final class ImageHashIndex private (val table: VersionedTable) {
-  import ImageHashIndex._
+final class ImageHashIndex private (t: VersionedTable)
+    extends SingleKeyIndex(t, "doc_id", ImageHashIndex.APP_ID) {
 
-  /** Total derivation: documents with no renderable payload (empty
-    * text → zero-byte image) index a NULL signature — they can never
-    * band-match, and an update shrinking a document to empty still
-    * overwrites its stale signature. `derive` sees only UPSERT rows
-    * ([[IncrementalIndex.refresh]]), so the op column is re-attached
-    * as a literal after the codec pass drops it. */
-  private def derive(rows: DataFrame): DataFrame = {
-    val renderable = coalesce(length(col("text")), lit(0)) >= 1
-    Multimodal.perceptualHashes(rows.filter(renderable))
-      .withColumn("__op", lit("UPSERT"))
-      .unionByName(rows.filter(!renderable)
-        .select(col("doc_id"),
-          lit(null).cast("array<bigint>").as("bands"),
-          lit(null).cast("array<bigint>").as("grid"),
-          lit("UPSERT").as("__op")))
-  }
-
-  def refresh(source: VersionedTable): Option[Long] =
-    IncrementalIndex.refresh(table, source, "doc_id", derive, APP_ID)
-
-  /** Full re-derivation of the current snapshot — `REINDEX INDEX`
-    * uniformity and corrupted-table recovery, as for
-    * [[SignatureIndex.reindex]] (no quantizer to drift). */
-  def reindex(source: VersionedTable): Long = {
-    val latest = source.latestVersion
-    table.overwriteWhere(lit(true),
-      derive(source.snapshot().withColumn("__op", lit("UPSERT")))
-        .drop("__op"))
-    table.commitFiles(Seq.empty, Seq.empty, None, "reindex-watermark",
-      extraTxn = Map(APP_ID -> latest))
-    table.latestVersion
-  }
+  protected def derive(rows: DataFrame): DataFrame =
+    IncrementalIndex.bandSignatures(rows, Multimodal.perceptualHashes(_))
 
   /** All near-dup image pairs (doc_a, doc_b, hamming, grid_sad) from
     * the persisted signatures. */
@@ -437,22 +563,11 @@ final class ImageHashIndex private (val table: VersionedTable) {
 
 object ImageHashIndex {
   val APP_ID = "image-hash-index"
-  val BUCKETS = 8
-
-  private def indexSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("bands", ArrayType(LongType)),
-    StructField("grid", ArrayType(LongType))))
 
   /** Index the source's current snapshot. Source needs CDF enabled. */
-  def build(source: VersionedTable, path: String): ImageHashIndex = {
-    val t = VersionedTable.create(source.spark, path, indexSchema,
-      IncrementalIndex.indexProps("phash", source, "text", "doc_id"),
-      bucketBy = Some(BucketSpec(Seq("doc_id"), BUCKETS)))
-    val idx = new ImageHashIndex(t)
-    idx.refresh(source)
-    idx
-  }
+  def build(source: VersionedTable, path: String): ImageHashIndex =
+    SingleKeyIndex.create(source, path, "phash", "text", "doc_id",
+      IncrementalIndex.bandSchema)(new ImageHashIndex(_))
 
   def load(spark: SparkSession, path: String): ImageHashIndex =
     new ImageHashIndex(VersionedTable.load(spark, path))
@@ -482,38 +597,11 @@ object ImageHashIndex {
   * for arbitrarily large audio payloads. Candidates stay complete at
   * Hamming ≤ 7 by the pigeonhole band split, and the index table is
   * doc_id-bucketed so refresh merges rewrite only touched buckets. */
-final class AudioHashIndex private (val table: VersionedTable) {
-  import AudioHashIndex._
+final class AudioHashIndex private (t: VersionedTable)
+    extends SingleKeyIndex(t, "doc_id", AudioHashIndex.APP_ID) {
 
-  /** Total derivation: documents with no synthesizable payload (empty
-    * text) index a NULL signature — they can never band-match, and an
-    * update shrinking a document to empty still overwrites its stale
-    * signature. */
-  private def derive(rows: DataFrame): DataFrame = {
-    val renderable = coalesce(length(col("text")), lit(0)) >= 1
-    AudioOps.audioFingerprints(rows.filter(renderable))
-      .withColumn("__op", lit("UPSERT"))
-      .unionByName(rows.filter(!renderable)
-        .select(col("doc_id"),
-          lit(null).cast("array<bigint>").as("bands"),
-          lit(null).cast("array<bigint>").as("grid"),
-          lit("UPSERT").as("__op")))
-  }
-
-  def refresh(source: VersionedTable): Option[Long] =
-    IncrementalIndex.refresh(table, source, "doc_id", derive, APP_ID)
-
-  /** Full re-derivation of the current snapshot — `REINDEX INDEX`
-    * uniformity (no quantizer to drift). */
-  def reindex(source: VersionedTable): Long = {
-    val latest = source.latestVersion
-    table.overwriteWhere(lit(true),
-      derive(source.snapshot().withColumn("__op", lit("UPSERT")))
-        .drop("__op"))
-    table.commitFiles(Seq.empty, Seq.empty, None, "reindex-watermark",
-      extraTxn = Map(APP_ID -> latest))
-    table.latestVersion
-  }
+  protected def derive(rows: DataFrame): DataFrame =
+    IncrementalIndex.bandSignatures(rows, AudioOps.audioFingerprints(_))
 
   /** All near-dup audio pairs (doc_a, doc_b, hamming, energy_sad)
     * from the persisted signatures. */
@@ -531,22 +619,11 @@ final class AudioHashIndex private (val table: VersionedTable) {
 
 object AudioHashIndex {
   val APP_ID = "audio-hash-index"
-  val BUCKETS = 8
-
-  private def indexSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("bands", ArrayType(LongType)),
-    StructField("grid", ArrayType(LongType))))
 
   /** Index the source's current snapshot. Source needs CDF enabled. */
-  def build(source: VersionedTable, path: String): AudioHashIndex = {
-    val t = VersionedTable.create(source.spark, path, indexSchema,
-      IncrementalIndex.indexProps("afp", source, "text", "doc_id"),
-      bucketBy = Some(BucketSpec(Seq("doc_id"), BUCKETS)))
-    val idx = new AudioHashIndex(t)
-    idx.refresh(source)
-    idx
-  }
+  def build(source: VersionedTable, path: String): AudioHashIndex =
+    SingleKeyIndex.create(source, path, "afp", "text", "doc_id",
+      IncrementalIndex.bandSchema)(new AudioHashIndex(_))
 
   def load(spark: SparkSession, path: String): AudioHashIndex =
     new AudioHashIndex(VersionedTable.load(spark, path))
@@ -554,87 +631,34 @@ object AudioHashIndex {
 
 /** A persisted product-quantization index over a source table with
   * (`vec_id: long`, `embedding: array<float>`): the PQ codebooks
-  * ([[SimilarityOps.pqCodebooks]], sample-bounded Lloyd per subspace)
-  * freeze at build under `<index>/_codebook`, and the index table rows
-  * carry each vector's PQ_M nibble codes (plus the raw vector, which
-  * the exact-rerank stage reads for shortlist members only — FAISS's
-  * IVF-PQ + refine storage layout). Refresh encodes only CDF-changed
-  * vectors against the frozen codebooks; search runs the ADC LUT join
-  * over the PERSISTED codes — queries never pay training or encoding.
+  * ([[PqCodes]]) freeze at build under `<index>/_codebook`, and the
+  * index table rows carry each vector's PQ_M nibble codes (plus the raw
+  * vector, which the exact-rerank stage reads for shortlist members
+  * only — FAISS's IVF-PQ + refine storage layout). Refresh encodes only
+  * CDF-changed vectors against the frozen codebooks; search runs the
+  * ADC LUT join over the PERSISTED codes — queries never pay training
+  * or encoding. Drift metric: the batch mean per-subspace L2 to the
+  * assigned sub-centroid.
   *
   * == 100 TB design ==
   * The codes column is 4 bytes/vector: the ADC scan touches ~1/64 of
   * the raw-vector bytes and the rerank reads PQ_SHORTLIST raw vectors
   * per query. Encode cost on refresh is O(changed rows); the merge
   * rewrites only buckets holding changed vec_ids. */
-final class PqIndex private (val table: VersionedTable) {
+final class PqIndex private (t: VersionedTable)
+    extends SingleKeyIndex(t, "vec_id", PqIndex.APP_ID) {
   import PqIndex._
 
-  private def spark: SparkSession = table.spark
-  private def codebookDir: String = table.root.resolve(CODEBOOK_DIR).toString
-
   /** The frozen per-subspace codebooks: (m, c_id, cent, cc). */
-  def codebook: DataFrame = spark.read.parquet(codebookDir)
+  def codebook: DataFrame = spark.read.parquet(sidecar(CODEBOOK_DIR))
 
-  /** Encode rows against the frozen codebooks: per-subspace nearest
-    * centroid, codes packed in subspace order. */
-  private def encode(rows: DataFrame): DataFrame = {
-    val sub = SimilarityOps.subvecs(
-      rows.select(col("vec_id"), col("embedding")), "vec_id", "embedding")
-    val codes = SimilarityOps.pqAssign(sub, codebook.select("m", "c_id", "cent"))
-      .groupBy(col("vec_id"))
-      .agg(expr("transform(sort_array(collect_list(struct(m, c_id)))," +
-        " x -> x.c_id)").as("codes"))
-    rows.join(codes, Seq("vec_id"))
+  protected def derive(rows: DataFrame): DataFrame =
+    rows.join(PqCodes.encode(rows, codebook), Seq("vec_id"))
       .select(col("vec_id"), col("embedding"), col("codes"), col("__op"))
-  }
-
-  /** Batch mean per-subspace L2 to the assigned sub-centroid — the PQ
-    * quantization error; rises as the corpus drifts from the frozen
-    * codebooks. */
-  private def observeDrift(
-      raw: DataFrame, atVersion: Long, baseline: Boolean): Unit = {
-    val sub = SimilarityOps.subvecs(
-      raw.select(col("vec_id"), col("embedding")), "vec_id", "embedding")
-    val r = sub.join(broadcast(codebook.select("m", "c_id", "cent")), "m")
-      .withColumn("__l2", expr(SimilarityOps.subL2("sv", "cent")))
-      .groupBy(col("vec_id"), col("m")).agg(min(col("__l2")).as("best"))
-      .agg(avg(col("best")).as("d"), count(lit(1)).as("n"))
-      .collect()(0)
-    if (r.getLong(1) > 0 && !r.isNullAt(0))
-      IndexDrift.append(table, "mean_subspace_l2", r.getDouble(0),
-        r.getLong(1), atVersion, baseline)
-  }
-
-  private def refreshObserved(
-      source: VersionedTable, baseline: Boolean): Option[Long] = {
-    val latest = source.latestVersion
-    IncrementalIndex.refresh(table, source, "vec_id", encode, APP_ID,
-      observeDrift(_, latest, baseline))
-  }
-
-  /** Apply source changes since the last refresh (frozen codebooks). */
-  def refresh(source: VersionedTable): Option[Long] =
-    refreshObserved(source, baseline = false)
-
-  /** Retrain the subspace codebooks on the CURRENT corpus (sample-
-    * bounded) and re-encode everything; starts a new drift-baseline
-    * epoch. O(corpus) by design. */
-  def reindex(source: VersionedTable): Long = {
-    val latest = source.latestVersion
-    val snap = source.snapshot()
-    val corpusSub = SimilarityOps.subvecs(
-      snap.select(col("vec_id"), col("embedding")), "vec_id", "embedding")
-    SimilarityOps.pqCodebooks(corpusSub)
-      .withColumn("cc", expr(SimilarityOps.subDot("cent", "cent")))
-      .write.mode("overwrite").parquet(codebookDir)
-    table.overwriteWhere(lit(true),
-      encode(snap.withColumn("__op", lit("UPSERT"))).drop("__op"))
-    table.commitFiles(Seq.empty, Seq.empty, None, "reindex-watermark",
-      extraTxn = Map(APP_ID -> latest))
-    observeDrift(snap, latest, baseline = true)
-    table.latestVersion
-  }
+  override protected def train(snapshot: DataFrame): Unit =
+    PqCodes.train(snapshot, sidecar(CODEBOOK_DIR))
+  override protected def drift(batch: DataFrame) =
+    PqCodes.drift(batch, codebook)
 
   /** Top-`k` per query vector via ADC over the persisted codes + exact
     * rerank over the persisted raw vectors. `queries`: (q_id, qe). */
@@ -652,7 +676,6 @@ final class PqIndex private (val table: VersionedTable) {
 object PqIndex {
   val APP_ID = "pq-index"
   val CODEBOOK_DIR = "_codebook"
-  val BUCKETS = 8
 
   private def indexSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
@@ -661,21 +684,9 @@ object PqIndex {
 
   /** Train on the source's current snapshot, freeze the codebooks, and
     * encode the snapshot. The source must have CDF enabled. */
-  def build(source: VersionedTable, path: String): PqIndex = {
-    val spark = source.spark
-    val t = VersionedTable.create(spark, path, indexSchema,
-      IncrementalIndex.indexProps("pq", source, "embedding", "vec_id"),
-      bucketBy = Some(BucketSpec(Seq("vec_id"), BUCKETS)))
-    val idx = new PqIndex(t)
-    val corpusSub = SimilarityOps.subvecs(
-      source.snapshot().select(col("vec_id"), col("embedding")),
-      "vec_id", "embedding")
-    SimilarityOps.pqCodebooks(corpusSub)
-      .withColumn("cc", expr(SimilarityOps.subDot("cent", "cent")))
-      .write.mode("overwrite").parquet(idx.codebookDir)
-    idx.refreshObserved(source, baseline = true)
-    idx
-  }
+  def build(source: VersionedTable, path: String): PqIndex =
+    SingleKeyIndex.create(source, path, "pq", "embedding", "vec_id",
+      indexSchema)(new PqIndex(_))
 
   def load(spark: SparkSession, path: String): PqIndex =
     new PqIndex(VersionedTable.load(spark, path))
@@ -688,15 +699,14 @@ object PqIndex {
   * frozen stats (values outside the frozen range clamp to the edge
   * buckets — the standard frozen-quantizer behavior), and search
   * scores queries against reconstructed bucket-midpoint vectors read
-  * from the PERSISTED codes. */
-final class Sq8Index private (val table: VersionedTable) {
+  * from the PERSISTED codes. A REINDEX recomputes the stats, so its
+  * baseline clamp rate is 0 by construction. */
+final class Sq8Index private (t: VersionedTable)
+    extends SingleKeyIndex(t, "vec_id", Sq8Index.APP_ID) {
   import Sq8Index._
 
-  private def spark: SparkSession = table.spark
-  private def statsDir: String = table.root.resolve(STATS_DIR).toString
-
   /** The frozen per-dimension bounds: (i, mn, mx), i 1-based. */
-  def stats: DataFrame = spark.read.parquet(statsDir)
+  def stats: DataFrame = spark.read.parquet(sidecar(STATS_DIR))
 
   /** (mins, maxs) literal columns from the frozen stats. */
   private def bounds: (Column, Column) = {
@@ -705,54 +715,29 @@ final class Sq8Index private (val table: VersionedTable) {
       typedLit(rows.map(_.getDouble(2)).toSeq))
   }
 
-  private def encode(rows: DataFrame): DataFrame = {
+  protected def derive(rows: DataFrame): DataFrame = {
     val (mins, maxs) = bounds
     rows.withColumn("mins", mins).withColumn("maxs", maxs)
       .withColumn("codes", expr(encodeExpr("embedding")))
       .select(col("vec_id"), col("codes"), col("__op"))
   }
 
+  override protected def train(snapshot: DataFrame): Unit =
+    writeStats(snapshot, sidecar(STATS_DIR))
+
   /** Batch CLAMP RATE — the fraction of (vector, dimension) values
     * falling outside the frozen per-dim [min, max]: such values clamp
     * to the edge buckets and lose resolution, so a rising rate means
     * the frozen stats no longer cover the corpus. */
-  private def observeDrift(
-      raw: DataFrame, atVersion: Long, baseline: Boolean): Unit = {
+  override protected def drift(batch: DataFrame) = {
     val (mins, maxs) = bounds
-    val r = raw.select(col("vec_id"), col("embedding"))
+    val r = batch.select(col("vec_id"), col("embedding"))
       .withColumn("mins", mins).withColumn("maxs", maxs)
       .withColumn("__oor", expr(oorExpr("embedding")))
       .agg(sum(col("__oor")).as("oor"), count(lit(1)).as("n"))
       .collect()(0)
-    if (r.getLong(1) > 0 && !r.isNullAt(0))
-      IndexDrift.append(table, "clamp_rate",
-        r.getLong(0).toDouble / (r.getLong(1).toDouble * DIMS),
-        r.getLong(1), atVersion, baseline)
-  }
-
-  private def refreshObserved(
-      source: VersionedTable, baseline: Boolean): Option[Long] = {
-    val latest = source.latestVersion
-    IncrementalIndex.refresh(table, source, "vec_id", encode, APP_ID,
-      observeDrift(_, latest, baseline))
-  }
-
-  def refresh(source: VersionedTable): Option[Long] =
-    refreshObserved(source, baseline = false)
-
-  /** Recompute the per-dim stats over the CURRENT corpus and re-encode
-    * everything; starts a new drift-baseline epoch (whose clamp rate
-    * is 0 by construction — fresh stats cover the corpus). */
-  def reindex(source: VersionedTable): Long = {
-    val latest = source.latestVersion
-    val snap = source.snapshot()
-    Sq8Index.writeStats(snap, statsDir)
-    table.overwriteWhere(lit(true),
-      encode(snap.withColumn("__op", lit("UPSERT"))).drop("__op"))
-    table.commitFiles(Seq.empty, Seq.empty, None, "reindex-watermark",
-      extraTxn = Map(APP_ID -> latest))
-    observeDrift(snap, latest, baseline = true)
-    table.latestVersion
+    Option.when(r.getLong(1) > 0 && !r.isNullAt(0))(("clamp_rate",
+      r.getLong(0).toDouble / (r.getLong(1).toDouble * DIMS), r.getLong(1)))
   }
 
   /** Top-`k` per query vector over reconstructed codes (asymmetric
@@ -782,7 +767,6 @@ final class Sq8Index private (val table: VersionedTable) {
 object Sq8Index {
   val APP_ID = "sq8-index"
   val STATS_DIR = "_stats"
-  val BUCKETS = 8
   private val DIMS = 64
 
   private def fold(e: String) =
@@ -833,57 +817,12 @@ object Sq8Index {
 
   /** Compute + freeze per-dimension stats over the source's current
     * snapshot, then encode it. The source must have CDF enabled. */
-  def build(source: VersionedTable, path: String): Sq8Index = {
-    val spark = source.spark
-    val t = VersionedTable.create(spark, path, indexSchema,
-      IncrementalIndex.indexProps("sq8", source, "embedding", "vec_id"),
-      bucketBy = Some(BucketSpec(Seq("vec_id"), BUCKETS)))
-    val idx = new Sq8Index(t)
-    writeStats(source.snapshot(), idx.statsDir)
-    idx.refreshObserved(source, baseline = true)
-    idx
-  }
+  def build(source: VersionedTable, path: String): Sq8Index =
+    SingleKeyIndex.create(source, path, "sq8", "embedding", "vec_id",
+      indexSchema)(new Sq8Index(_))
 
   def load(spark: SparkSession, path: String): Sq8Index =
     new Sq8Index(VersionedTable.load(spark, path))
-}
-
-object VectorIndex {
-  val APP_ID = "vector-index"
-  val CODEBOOK_DIR = "_codebook"
-  /** Buckets for the index table: refreshes CoW-rewrite only buckets
-    * holding changed vec_ids. */
-  val BUCKETS = 8
-
-  private def indexSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("c_id", LongType)))
-
-  /** Train on the source's current snapshot (cell count ~√N, clamped —
-    * [[SimilarityOps.adaptiveCells]]), freeze the codebook, and index
-    * the snapshot; the initial whole-corpus assignment records the
-    * drift BASELINE. The source must have CDF enabled (refresh reads
-    * it). */
-  def build(source: VersionedTable, path: String): VectorIndex = {
-    val spark = source.spark
-    graft.functions.GraftFunctions.register(spark)
-    val t = VersionedTable.create(spark, path, indexSchema,
-      IncrementalIndex.indexProps("ivf", source, "embedding", "vec_id"),
-      bucketBy = Some(BucketSpec(Seq("vec_id"), BUCKETS)))
-    val idx = new VectorIndex(t)
-    val snap = source.snapshot()
-    val corpus = snap
-      .select(col("vec_id").as("__vid"), col("embedding").as("ce"))
-    val k = SimilarityOps.adaptiveCells(snap.count())
-    SimilarityOps.lloydCodebook(corpus, k, SimilarityOps.adaptiveTrainLimit(k))
-      .write.mode("overwrite").parquet(idx.codebookDir)
-    idx.refreshObserved(source, baseline = true)
-    idx
-  }
-
-  def load(spark: SparkSession, path: String): VectorIndex =
-    new VectorIndex(VersionedTable.load(spark, path))
 }
 
 /** The COMPOSED billion-scale ANN index (VERDICT r13 missing #3) — the
@@ -894,10 +833,8 @@ object VectorIndex {
   * Storage (one [[VersionedTable]], vec_id-bucketed): each row carries
   * the raw vector (read by the exact rerank only), its frozen-codebook
   * IVF cell id, and its PQ_M nibble codes. Both codebooks freeze at
-  * build — `_codebook_ivf` (c_id, cent — [[SimilarityOps.lloydCodebook]]
-  * at [[SimilarityOps.adaptiveCells]] ~√N cells) and `_codebook_pq`
-  * (m, c_id, cent, cc — [[SimilarityOps.pqCodebooks]] sample-bounded
-  * subspace Lloyd).
+  * build — `_codebook_ivf` ([[IvfCells]]) and `_codebook_pq`
+  * ([[PqCodes]]).
   *
   * Search = probe nprobe nearest cells per query (broadcast IVF
   * codebook) → candidate (q_id, vec_id) pairs from the PERSISTED cell
@@ -914,93 +851,28 @@ object VectorIndex {
   * corpus and re-encodes. Reference capability: demo-notebook.py's
   * maintained-derived-table pattern (notebooks/demo-notebook.py:349-435)
   * applied to the ANN-index family. */
-final class IvfPqIndex private (val table: VersionedTable) {
+final class IvfPqIndex private (t: VersionedTable)
+    extends SingleKeyIndex(t, "vec_id", IvfPqIndex.APP_ID) {
   import IvfPqIndex._
 
-  private def spark: SparkSession = table.spark
-  private def ivfDir: String = table.root.resolve(IVF_CODEBOOK_DIR).toString
-  private def pqDir: String = table.root.resolve(PQ_CODEBOOK_DIR).toString
-
   /** The frozen IVF codebook: (c_id, cent). */
-  def ivfCodebook: DataFrame = spark.read.parquet(ivfDir)
+  def ivfCodebook: DataFrame = spark.read.parquet(sidecar(IVF_CODEBOOK_DIR))
   /** The frozen PQ codebooks: (m, c_id, cent, cc). */
-  def pqCodebook: DataFrame = spark.read.parquet(pqDir)
+  def pqCodebook: DataFrame = spark.read.parquet(sidecar(PQ_CODEBOOK_DIR))
 
-  /** Derive both index columns for a batch of source-shaped rows:
-    * nearest frozen IVF cell + per-subspace PQ codes. O(batch) with
+  /** Nearest frozen IVF cell + per-subspace PQ codes. O(batch) with
     * both codebooks broadcast. */
-  private def derive(rows: DataFrame): DataFrame = {
-    val cells = SimilarityOps.nearest(
-        rows.withColumnRenamed("vec_id", "__vid")
-          .withColumn("ce", col("embedding")),
-        ivfCodebook, "ce", 1, "__arnk")
-      .select(col("__vid").as("vec_id"), col("embedding"),
-        col("c_id").as("cell"), col("__op"))
-    val sub = SimilarityOps.subvecs(
-      rows.select(col("vec_id"), col("embedding")), "vec_id", "embedding")
-    val codes = SimilarityOps
-      .pqAssign(sub, pqCodebook.select("m", "c_id", "cent"))
-      .groupBy(col("vec_id"))
-      .agg(expr("transform(sort_array(collect_list(struct(m, c_id)))," +
-        " x -> x.c_id)").as("codes"))
-    cells.join(codes, Seq("vec_id"))
-      .select(col("vec_id"), col("embedding"), col("cell"), col("codes"),
-        col("__op"))
+  protected def derive(rows: DataFrame): DataFrame =
+    IvfCells.assign(rows, ivfCodebook)
+      .join(PqCodes.encode(rows, pqCodebook), Seq("vec_id"))
+      .select(col("vec_id"), col("embedding"), col("c_id").as("cell"),
+        col("codes"), col("__op"))
+  override protected def train(snapshot: DataFrame): Unit = {
+    IvfCells.train(snapshot, sidecar(IVF_CODEBOOK_DIR))
+    PqCodes.train(snapshot, sidecar(PQ_CODEBOOK_DIR))
   }
-
-  /** Batch mean assigned-cell distance (1 − best cosine) against the
-    * frozen IVF codebook — the [[VectorIndex]] metric: the cell
-    * quantizer drifting costs recall before ADC precision does. */
-  private def observeDrift(
-      raw: DataFrame, atVersion: Long, baseline: Boolean): Unit = {
-    val r = raw.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(ivfCodebook))
-      .withColumn("__c", expr("cosine_sim(embedding, cent)"))
-      .groupBy(col("vec_id")).agg(max(col("__c")).as("best"))
-      .agg(avg(lit(1.0) - col("best")).as("d"), count(lit(1)).as("n"))
-      .collect()(0)
-    if (r.getLong(1) > 0 && !r.isNullAt(0))
-      IndexDrift.append(table, "mean_assign_dist", r.getDouble(0),
-        r.getLong(1), atVersion, baseline)
-  }
-
-  private[llm] def refreshObserved(
-      source: VersionedTable, baseline: Boolean): Option[Long] = {
-    graft.functions.GraftFunctions.register(spark)
-    val latest = source.latestVersion
-    IncrementalIndex.refresh(table, source, "vec_id", derive, APP_ID,
-      observeDrift(_, latest, baseline))
-  }
-
-  /** Apply source changes since the last refresh (both codebooks
-    * frozen). */
-  def refresh(source: VersionedTable): Option[Long] =
-    refreshObserved(source, baseline = false)
-
-  /** Retrain BOTH codebooks on the CURRENT corpus (sample-bounded) and
-    * re-encode everything; starts a new drift-baseline epoch.
-    * O(corpus) by design — the rebuild the drift metric calls for. */
-  def reindex(source: VersionedTable): Long = {
-    graft.functions.GraftFunctions.register(spark)
-    val latest = source.latestVersion
-    val snap = source.snapshot()
-    val corpus = snap
-      .select(col("vec_id").as("__vid"), col("embedding").as("ce"))
-    val k = SimilarityOps.adaptiveCells(snap.count())
-    SimilarityOps.lloydCodebook(corpus, k, SimilarityOps.adaptiveTrainLimit(k))
-      .write.mode("overwrite").parquet(ivfDir)
-    val corpusSub = SimilarityOps.subvecs(
-      snap.select(col("vec_id"), col("embedding")), "vec_id", "embedding")
-    SimilarityOps.pqCodebooks(corpusSub)
-      .withColumn("cc", expr(SimilarityOps.subDot("cent", "cent")))
-      .write.mode("overwrite").parquet(pqDir)
-    table.overwriteWhere(lit(true),
-      derive(snap.withColumn("__op", lit("UPSERT"))).drop("__op"))
-    table.commitFiles(Seq.empty, Seq.empty, None, "reindex-watermark",
-      extraTxn = Map(APP_ID -> latest))
-    observeDrift(snap, latest, baseline = true)
-    table.latestVersion
-  }
+  override protected def drift(batch: DataFrame) =
+    IvfCells.drift(batch, ivfCodebook)
 
   /** Top-`k` per query: probe `nprobe` nearest frozen cells (`<= 0`
     * probes ~1/4 of the codebook, read from the codebook itself), ADC-
@@ -1026,7 +898,6 @@ object IvfPqIndex {
   val APP_ID = "ivfpq-index"
   val IVF_CODEBOOK_DIR = "_codebook_ivf"
   val PQ_CODEBOOK_DIR = "_codebook_pq"
-  val BUCKETS = 8
 
   private def indexSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
@@ -1036,27 +907,9 @@ object IvfPqIndex {
 
   /** Train both codebooks on the source's current snapshot, freeze
     * them, and encode the snapshot. The source must have CDF enabled. */
-  def build(source: VersionedTable, path: String): IvfPqIndex = {
-    val spark = source.spark
-    graft.functions.GraftFunctions.register(spark)
-    val t = VersionedTable.create(spark, path, indexSchema,
-      IncrementalIndex.indexProps("ivfpq", source, "embedding", "vec_id"),
-      bucketBy = Some(BucketSpec(Seq("vec_id"), BUCKETS)))
-    val idx = new IvfPqIndex(t)
-    val snap = source.snapshot()
-    val corpus = snap
-      .select(col("vec_id").as("__vid"), col("embedding").as("ce"))
-    val k = SimilarityOps.adaptiveCells(snap.count())
-    SimilarityOps.lloydCodebook(corpus, k, SimilarityOps.adaptiveTrainLimit(k))
-      .write.mode("overwrite").parquet(idx.ivfDir)
-    val corpusSub = SimilarityOps.subvecs(
-      snap.select(col("vec_id"), col("embedding")), "vec_id", "embedding")
-    SimilarityOps.pqCodebooks(corpusSub)
-      .withColumn("cc", expr(SimilarityOps.subDot("cent", "cent")))
-      .write.mode("overwrite").parquet(idx.pqDir)
-    idx.refreshObserved(source, baseline = true)
-    idx
-  }
+  def build(source: VersionedTable, path: String): IvfPqIndex =
+    SingleKeyIndex.create(source, path, "ivfpq", "embedding", "vec_id",
+      indexSchema)(new IvfPqIndex(_))
 
   def load(spark: SparkSession, path: String): IvfPqIndex =
     new IvfPqIndex(VersionedTable.load(spark, path))

@@ -242,8 +242,8 @@ object CdcStreams {
   /** Continuous INDEX maintenance: tails the source's change log and
     * applies one incremental `refresh` per micro-batch — the
     * [[startViewMaintenance]] pattern generalized to any CDF-maintained
-    * index ([[graft.llm.VectorIndex]], [[graft.llm.PqIndex]],
-    * [[graft.llm.Sq8Index]], [[graft.llm.SignatureIndex]], or an
+    * index (any [[graft.llm.MaintainedIndex]] — the single-key indexes
+    * on the [[graft.llm.SingleKeyIndex]] base, BM25 — or an
     * [[graft.table.AggView]]'s parameterless refresh). The refresh
     * itself is exactly-once via the index's txn watermark, so the
     * stream is purely a wake-up signal: a replayed batch after a crash

@@ -141,7 +141,7 @@ class AudioOpsSpec extends SparkSpec {
       Map("text" -> org.apache.spark.sql.functions.lit(
         "entirely different content, other length")))
     assert(idx.refresh(src).isDefined)
-    assert(idx.table.latestManifest.addedFiles.size <= AudioHashIndex.BUCKETS,
+    assert(idx.table.latestManifest.addedFiles.size <= IncrementalIndex.BUCKETS,
       "one-doc refresh must stay bucket-bounded")
     assert(idx.pairs.isEmpty)
 

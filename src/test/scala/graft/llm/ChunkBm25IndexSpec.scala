@@ -163,7 +163,7 @@ class ChunkBm25IndexSpec extends SparkSpec {
     src.append(docs.filter($"doc_id" === 0L))
     assert(idx.refresh(src).isDefined)
     val m = idx.postings.latestManifest
-    assert(m.addedFiles.size <= ChunkBm25Index.BUCKETS,
+    assert(m.addedFiles.size <= IncrementalIndex.BUCKETS,
       s"one-doc refresh must stay bucket-bounded, rewrote ${m.addedFiles.size}")
   }
 

@@ -33,7 +33,7 @@ class IncrementalIndexSpec extends SparkSpec {
     src.append(corpus.filter($"vec_id" % 2 === 1))
     assert(idx.refresh(src).isDefined)
     val m = idx.table.latestManifest
-    assert(m.addedFiles.size <= VectorIndex.BUCKETS,
+    assert(m.addedFiles.size <= IncrementalIndex.BUCKETS,
       s"refresh must be a bucket-scoped CoW merge, rewrote ${m.addedFiles.size} files")
 
     // refresh ≡ rebuild: assignment of the FULL corpus under the frozen
@@ -78,7 +78,7 @@ class IncrementalIndexSpec extends SparkSpec {
 
     src.append(corpus.filter($"vec_id" % 2 === 1))
     assert(idx.refresh(src).isDefined)
-    assert(idx.table.latestManifest.addedFiles.size <= PqIndex.BUCKETS,
+    assert(idx.table.latestManifest.addedFiles.size <= IncrementalIndex.BUCKETS,
       "refresh must be a bucket-scoped CoW merge")
     // the codebook did NOT retrain on refresh
     assert(snapCodebook() === frozen)
@@ -123,7 +123,7 @@ class IncrementalIndexSpec extends SparkSpec {
 
     src.append(corpus.filter($"vec_id" % 2 === 1))
     assert(idx.refresh(src).isDefined)
-    assert(idx.table.latestManifest.addedFiles.size <= IvfPqIndex.BUCKETS,
+    assert(idx.table.latestManifest.addedFiles.size <= IncrementalIndex.BUCKETS,
       "refresh must be a bucket-scoped CoW merge")
     // NEITHER codebook retrained on refresh
     assert(ivfFrozen() === vf && pqFrozen() === pf)
@@ -319,7 +319,7 @@ class IncrementalIndexSpec extends SparkSpec {
     src.updateWhere($"doc_id" === 2,
       Map("text" -> lit("entirely different content, other length")))
     assert(idx.refresh(src).isDefined)
-    assert(idx.table.latestManifest.addedFiles.size <= ImageHashIndex.BUCKETS,
+    assert(idx.table.latestManifest.addedFiles.size <= IncrementalIndex.BUCKETS,
       "one-doc refresh must stay bucket-bounded")
     assert(idx.pairs.isEmpty)
 
