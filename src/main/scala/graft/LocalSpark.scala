@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The local-mode session configuration every main and the test suite
   * share: `cores` task threads and as many shuffle partitions, UTC
   * session time, nanosecond parquet timestamps read as longs (see
-  * [[Tables.events]]), no UI. */
+  * [[Tables.events]]), no UI, and Spark's generated-code cache sized by
+  * [[CodegenCache.MaxEntries]]. Sessions a host builds get the same size
+  * when the engine attaches to them ([[CodegenCache.attach]]). */
 object LocalSpark {
   def builder(cores: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -14,4 +16,49 @@ object LocalSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(CodegenCache.Key, CodegenCache.MaxEntries.toLong)
+}
+
+/** Size of Spark's JVM-wide cache of generated classes.
+  *
+  * Spark keeps the classes it generates for whole-stage codegen and
+  * projections in one LRU cache per JVM, of `Key` entries (default 100).
+  * Every micro-batch cycle of the engine re-runs the same Bronze append,
+  * Silver MERGE, Gold fold and view refreshes, and one cycle needs more
+  * than 100 classes, so at the default every cycle compiles its plans
+  * again: 189 classes per serve cycle and ~100 per trickle cycle of
+  * perfbench, against 8-12 and 34 at `MaxEntries`. A serve run's
+  * distinct set, set-up included, is under 400 classes; `MaxEntries`
+  * leaves headroom for larger plan sets such as `graft.Bench`'s rows.
+  *
+  * The size is a static conf read once, when `CodeGenerator`'s object
+  * initializes, so it reaches a JVM by one of two routes:
+  *   - sessions the engine builds set it in [[LocalSpark.builder]];
+  *   - sessions a host builds (a notebook's session, a harness) get it
+  *     from [[attach]], which the engine's host entry points call. */
+object CodegenCache {
+  val Key = "spark.sql.codegen.cache.maxEntries"
+  val MaxEntries = 5000
+
+  private var attached = false
+
+  /** Once per JVM: unless the host's SparkConf sets [[Key]] (then the
+    * host's value wins), initializes `CodeGenerator` under a conf holding
+    * [[MaxEntries]]. Writes nothing into the host's session conf. Has no
+    * effect when `CodeGenerator` already initialized (its cache is
+    * sized). */
+  def attach(spark: SparkSession): Unit = synchronized {
+    if (!attached) {
+      attached = true
+      if (!spark.sparkContext.getConf.contains(Key)) {
+        val conf = new org.apache.spark.sql.internal.SQLConf
+        conf.setConfString(Key, MaxEntries.toString)
+        org.apache.spark.sql.internal.SQLConf.withExistingConf(conf) {
+          Class.forName(
+            "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$",
+            true, classOf[org.apache.spark.sql.internal.SQLConf].getClassLoader)
+        }
+      }
+    }
+  }
 }

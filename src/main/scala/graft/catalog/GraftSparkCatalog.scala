@@ -162,6 +162,8 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces {
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
     warehouse = Option(options.get("warehouse")).getOrElse("/tmp/graft-warehouse")
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(graft.CodegenCache.attach)
   }
 
   override def name(): String = catalogName

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistryBase, TypeCheckResult}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -95,21 +95,32 @@ object GraftFunctions {
   }
 
   /** Runtime registration of all graft functions on an existing
-    * session (idempotent). */
+    * session. A function the session's registry already holds is kept,
+    * so a repeated call costs one lookup per function. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
+    registerOnce(spark.sessionState.functionRegistry, ident, info, builder)
     Md5MinRegistration.register(spark)
     SimhashBands.register(spark)
     registerTableChanges(spark)
   }
 
+  /** Registers `name` unless `registry` already holds it. */
+  private[functions] def registerOnce[T](
+      registry: FunctionRegistryBase[T],
+      name: FunctionIdentifier,
+      info: ExpressionInfo,
+      builder: Seq[Expression] => T): Unit =
+    if (!registry.functionExists(name)) registry.registerFunction(name, info, builder)
+
   /** SQL table-valued function `table_changes('<table path>', from
     * [, to])` — the reference's Delta TVF surface verbatim (S7,
     * demo-notebook.py:371), resolved against [[graft.table.VersionedTable]].
     * Arguments must be literals (resolution happens at analysis time,
-    * like Delta's own TVF). */
-  def registerTableChanges(spark: SparkSession): Unit =
-    spark.sessionState.tableFunctionRegistry.registerFunction(
+    * like Delta's own TVF). Also the engine's attach step on a host's
+    * session ([[graft.CodegenCache.attach]]). */
+  def registerTableChanges(spark: SparkSession): Unit = {
+    graft.CodegenCache.attach(spark)
+    registerOnce(spark.sessionState.tableFunctionRegistry,
       FunctionIdentifier("table_changes"),
       new ExpressionInfo("graft.table.VersionedTable", "table_changes"),
       (args: Seq[Expression]) => {
@@ -125,6 +136,7 @@ object GraftFunctions {
         t.changes(lng(args(1)), args.lift(2).map(lng))
           .queryExecution.analyzed
       })
+  }
 }
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` — the
@@ -140,9 +152,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         CosineSimilarity(children.head, children(1))))
     // the session is threaded into the parser so GLOBAL RANK resolves
     // its source against the session that was invoked, never
-    // SparkSession.active (ADVICE r11)
-    ext.injectParser((s, parser) =>
-      new graft.catalog.GraftSqlParser(parser, Some(s)))
+    // SparkSession.active (ADVICE r11); building the parser is also the
+    // engine's attach step, run once the host's SparkConf exists
+    ext.injectParser { (s, parser) =>
+      graft.CodegenCache.attach(s)
+      new graft.catalog.GraftSqlParser(parser, Some(s))
+    }
     // serves SQL reads of merge-on-read (deletion-vector'd) versions
     ext.injectResolutionRule(s => graft.catalog.MorScanRewrite(s))
     // expands the deferred GLOBAL RANK node at first analysis

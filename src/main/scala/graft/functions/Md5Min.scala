@@ -97,7 +97,7 @@ object Md5MinUtil {
 /** Registration for [[Md5Min]] alongside cosine_sim. */
 object Md5MinRegistration {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
+    GraftFunctions.registerOnce(spark.sessionState.functionRegistry,
       FunctionIdentifier("md5_min"),
       new ExpressionInfo(classOf[Md5Min].getCanonicalName, "md5_min"),
       (children: Seq[Expression]) => {

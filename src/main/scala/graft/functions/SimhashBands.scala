@@ -130,7 +130,7 @@ object SimhashBands {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
+    GraftFunctions.registerOnce(spark.sessionState.functionRegistry,
       FunctionIdentifier("simhash_bands"),
       new ExpressionInfo(classOf[SimhashBands].getCanonicalName, "simhash_bands"),
       (children: Seq[Expression]) => {

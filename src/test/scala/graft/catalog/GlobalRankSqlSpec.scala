@@ -17,26 +17,6 @@ import graft.SparkSpec
   */
 class GlobalRankSqlSpec extends SparkSpec {
 
-  /** A session with the graft extensions so `spark.sql` parses the
-    * statement (mirrors GraftSqlParserSpec). */
-  private def withExtendedSession[A](f: SparkSession => A): A = {
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .withExtensions(new graft.functions.GraftExtensions().apply(_))
-        .getOrCreate()
-      f(s)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
-  }
-
   /** Skewed, tie-heavy, signed fixture: v has heavy ties (mod 7),
     * negatives, and ids give a total tiebreak order. */
   private def fixture(s: SparkSession): Unit = {

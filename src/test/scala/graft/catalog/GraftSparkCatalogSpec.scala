@@ -398,15 +398,7 @@ class GraftSparkCatalogSpec extends SparkSpec {
     assert(chain.contains("deletion vectors"), s"unexpected failure:\n$chain")
 
     // a session WITH GraftExtensions serves the DV-subtracting read
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val s = org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .withExtensions(new graft.functions.GraftExtensions().apply(_))
-        .getOrCreate()
+    withExtendedSession { s =>
       s.conf.set("spark.sql.catalog.graft", classOf[GraftSparkCatalog].getName)
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       assert(s.sql("SELECT id FROM graft.mordb.m ORDER BY id")
@@ -419,9 +411,6 @@ class GraftSparkCatalogSpec extends SparkSpec {
       // time travel onto the DV'd version subtracts too
       assert(s.sql("SELECT count(*) FROM graft.mordb.m VERSION AS OF 2")
         .head().getLong(0) === 30L)
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
-      org.apache.spark.sql.SparkSession.setActiveSession(spark)
     }
   }
 }

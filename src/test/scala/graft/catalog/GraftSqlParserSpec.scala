@@ -2,7 +2,6 @@ package graft.catalog
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, concat, lit, sum}
 
 import graft.SparkSpec
@@ -13,28 +12,6 @@ import graft.table._
   * `spark.sql.extensions=graft.functions.GraftExtensions`; regular SQL
   * must fall through to Spark's parser untouched. */
 class GraftSqlParserSpec extends SparkSpec {
-
-  /** A second SparkSession over the SAME SparkContext, built with the
-    * extensions (the shared test session predates them). */
-  private def withExtendedSession[A](f: SparkSession => A): A = {
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      // programmatic form: the string conf is a STATIC conf, frozen by
-      // the JVM-wide SparkContext the shared test session already built
-      val s = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .withExtensions(new graft.functions.GraftExtensions().apply(_))
-        .getOrCreate()
-      f(s)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
-  }
 
   test("VACUUM / OPTIMIZE / RESTORE statements execute against the engine") {
     withExtendedSession { s =>
