@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Round benchmark: runs every `SparkEntry.queries` entry on
@@ -112,7 +111,7 @@ object Bench {
       allNames: Seq[String],
       maxPasses: Int,
       budgetS: Double,
-      annotateShapes: Boolean = false): (Seq[(String, Double)], String, Seq[Double], String, Int, Double, String, Seq[(String, Seq[Double])], String) = {
+      annotateShapes: Boolean = false): (Seq[(String, Double)], String, Seq[Double], String, Int, Double, String, Seq[(String, Seq[Double])]) = {
     // lifecycle rows run in the warmups (their fixtures must build) and
     // get ONE dedicated timed run after the median passes — see
     // [[lifecycleOnce]]
@@ -158,20 +157,6 @@ object Bench {
       System.err.println(f"bench: budget fit — warmup $warm1%.1fs of " +
         f"$budgetS%.0fs budget, running $passes of $maxPasses timed passes")
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // classes Spark compiled during each timed run (JVM-wide Janino
-    // compiles, i.e. generated-code cache misses; see CodegenCache)
-    val compiles = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    def compileCount = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    def timed(name: String): (String, Double) = {
-      prepare(name)
-      quiesce()
-      val c0 = compileCount
-      val t0 = System.nanoTime()
-      force(name).foreach(errors(name) = _)
-      val t = (System.nanoTime() - t0) / 1e9
-      compiles(name) = compiles.getOrElse(name, Seq.empty) :+ (compileCount - c0).toDouble
-      name -> t
-    }
     val perPass: Seq[Seq[(String, Double)]] = (1 to passes).map { pass =>
       // Per-query isolation (VERDICT r5/r6 finding 1): engine-fixture
       // queries leave unreferenced RDD/shuffle/broadcast state that
@@ -188,7 +173,14 @@ object Bench {
       //   - per-pass order randomization (deterministic seed = pass
       //     index) decorrelates any residual neighbor effect (page
       //     cache, async deletes) so the median discards it.
-      new scala.util.Random(pass).shuffle(names).map(timed)
+      val order = new scala.util.Random(pass).shuffle(names)
+      order.map { name =>
+        prepare(name)
+        quiesce()
+        val t0 = System.nanoTime()
+        force(name).foreach(errors(name) = _)
+        name -> (System.nanoTime() - t0) / 1e9
+      }
     }
     // Plan-shape annotation (VERDICT r10 #8): re-derive each query's
     // static plan through the DESCRIBE SHAPE audit core and record
@@ -208,7 +200,14 @@ object Bench {
     // Lifecycle rows: ONE dedicated warm, quiesced timed run each
     // (full cycle per invocation — the median protocol would just
     // re-pay ~90s of commit churn per pass; see [[lifecycleOnce]]).
-    val oncePass: Seq[(String, Double)] = allNames.filter(once).map(timed)
+    val oncePass: Seq[(String, Double)] =
+      allNames.filter(once).map { name =>
+        prepare(name)
+        quiesce()
+        val t0 = System.nanoTime()
+        force(name).foreach(errors(name) = _)
+        name -> (System.nanoTime() - t0) / 1e9
+      }
     // An errored query's fail-fast ~0.1s "timings" must not leak into
     // queries/total — they read as impossibly-fast rows and corrupt
     // cross-round totals (ADVICE r8). Errored names live ONLY in
@@ -222,9 +221,6 @@ object Bench {
     val passJson = byQuery.map { case (k, xs) =>
       "\"" + k + "\":" + xs.map(fmt).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val compilesJson = allNames.filterNot(errors.contains)
-      .map(n => "\"" + n + "\":" + median(compiles(n)).toLong)
-      .mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
       .mkString("{", ",", "}")
     val shapesJson =
@@ -234,7 +230,7 @@ object Bench {
         .mkString("{", ",", "}")
     (medians, passJson,
       perPass.map(_.collect { case (n, t) if !errors.contains(n) => t }.sum),
-      errJson, passes, warm1, shapesJson, byQuery, compilesJson)
+      errJson, passes, warm1, shapesJson, byQuery)
   }
 
   def main(args: Array[String]): Unit = {
@@ -261,11 +257,11 @@ object Bench {
       val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       val names = Sf1Queries.filter(n => only.forall(_.contains(n)))
-      val (m1, _, t1, e1, _, warm1, _, raw1, c1) =
+      val (m1, _, t1, e1, _, warm1, _, raw1) =
         measure(spark, sf1Dir, names, 1, 0.0)
       val q1 = raw1.map { case (k, xs) =>
         "\"" + k + "\":" + fmt(xs.head) }.mkString("{", ",", "}")
-      val json = s"""{"metric":"sf1_solo","pass":"${esc(label)}","value":${fmt(m1.map(_._2).sum)},"unit":"sec","queries":$q1,"pass_total":${fmt(t1.head)},"warmup_s":${fmt(warm1)},"compiles":$c1,"errors":$e1,"dir":"${esc(sf1Dir)}","lifecycle_once":${lifecycleOnce(names).toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+      val json = s"""{"metric":"sf1_solo","pass":"${esc(label)}","value":${fmt(m1.map(_._2).sum)},"unit":"sec","queries":$q1,"pass_total":${fmt(t1.head)},"warmup_s":${fmt(warm1)},"errors":$e1,"dir":"${esc(sf1Dir)}","lifecycle_once":${lifecycleOnce(names).toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
       println(json)
       val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
         s"/tmp/bench_sf1_pass$label.json")
@@ -306,7 +302,7 @@ object Bench {
       val loadStart = loadavg()
       // plan shapes ride pass 1 only — they are static, and the merge
       // carries them into the committed record once
-      val (m1, _, t1, e1, _, warm1, shapesJson, raw1, c1) =
+      val (m1, _, t1, e1, _, warm1, shapesJson, raw1) =
         measure(spark, sfDir, names, 1, 0.0, annotateShapes = label == "1")
       val loadEnd = loadavg()
       val q1 = raw1.map { case (k, xs) => "\"" + k + "\":" + fmt(xs.head) }
@@ -315,7 +311,7 @@ object Bench {
         if (shapesJson.isEmpty) "" else s""","plan_shapes":$shapesJson"""
       val onceJson = lifecycleOnce(names).toSeq.sorted
         .map("\"" + _ + "\"").mkString("[", ",", "]")
-      val json = s"""{"metric":"sf01_solo","pass":"${esc(label)}","value":${fmt(m1.map(_._2).sum)},"unit":"sec","queries":$q1,"pass_total":${fmt(t1.head)},"warmup_s":${fmt(warm1)},"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"compiles":$c1,"errors":$e1,"sf":"${esc(sfDir)}","lifecycle_once":$onceJson$shapesField}"""
+      val json = s"""{"metric":"sf01_solo","pass":"${esc(label)}","value":${fmt(m1.map(_._2).sum)},"unit":"sec","queries":$q1,"pass_total":${fmt(t1.head)},"warmup_s":${fmt(warm1)},"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"errors":$e1,"sf":"${esc(sfDir)}","lifecycle_once":$onceJson$shapesField}"""
       println(json)
       val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
         s"/tmp/bench_sf01_pass$label.json")
@@ -345,7 +341,7 @@ object Bench {
     // plan-shape annotation only on unbudgeted (committed-artifact)
     // runs: the driver's budget-fitted invocation skips the ~2 min of
     // extra plan compiles, the judge-diffed record carries them
-    val (medians, passJson, passTotals, errJson, passes, warm1, shapesJson, _, compilesJson) =
+    val (medians, passJson, passTotals, errJson, passes, warm1, shapesJson, _) =
       measure(spark, sfDir, names, maxPasses, budgetS,
         annotateShapes = budgetS <= 0)
     val qs = medians.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
@@ -387,7 +383,7 @@ object Bench {
         // no shape re-derivation at sf1: plans are shape-identical to
         // the sf0.1 section's (paths and partition counts are excluded
         // from the audit by design)
-        val (m1, p1, t1, e1, ran1, _, _, raw1, c1) =
+        val (m1, p1, t1, e1, ran1, _, _, raw1) =
           measure(spark, sf1Dir, sf1Names, sf1Passes, 0.0,
             annotateShapes = false)
         val q1 = m1.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
@@ -408,7 +404,7 @@ object Bench {
           case (k, xs) if xs.length >= 2 && median(xs) > 0 &&
             xs.max / median(xs) > 3.0 => "\"" + k + "\""
         }.mkString("[", ",", "]")
-        (s""","sf1":{"value":${fmt(m1.map(_._2).sum)},"queries":$q1,"passes":$p1,"pass_totals":${t1.map(fmt).mkString("[", ",", "]")},"query_spread_pct":$sp1,"spike_rows":$spikes1,"n_passes":$ran1,"compiles":$c1,"errors":$e1,"dir":"${esc(sf1Dir)}"}""",
+        (s""","sf1":{"value":${fmt(m1.map(_._2).sum)},"queries":$q1,"passes":$p1,"pass_totals":${t1.map(fmt).mkString("[", ",", "]")},"query_spread_pct":$sp1,"spike_rows":$spikes1,"n_passes":$ran1,"errors":$e1,"dir":"${esc(sf1Dir)}"}""",
           e1 != "{}")
       }
 
@@ -418,7 +414,7 @@ object Bench {
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     val shapesField =
       if (shapesJson.isEmpty) "" else s""","plan_shapes":$shapesJson"""
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"passes":$passJson,"pass_totals":${passTotals.map(fmt).mkString("[", ",", "]")},"spread_pct":${fmt(spreadPct)},"n_passes":$passes,"lifecycle_once":$onceJson,"budget_s":${fmt(budgetS)},"warmup_s":${fmt(warm1)},"compiles":$compilesJson,"errors":$errJson,"sf":"$sfDir"$shapesField$sf1Json}"""
+    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"passes":$passJson,"pass_totals":${passTotals.map(fmt).mkString("[", ",", "]")},"spread_pct":${fmt(spreadPct)},"n_passes":$passes,"lifecycle_once":$onceJson,"budget_s":${fmt(budgetS)},"warmup_s":${fmt(warm1)},"errors":$errJson,"sf":"$sfDir"$shapesField$sf1Json}"""
     println(json)
     // Also persist to a file: the driver scrapes the sbt log tail, which
     // truncates — every BENCH_r*.json landed with "parsed": null

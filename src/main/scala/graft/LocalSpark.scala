@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.internal.SQLConf
 
 /** The local-mode session configuration every main and the test suite
   * share: `cores` task threads and as many shuffle partitions, UTC
@@ -26,10 +28,12 @@ object LocalSpark {
   * Every micro-batch cycle of the engine re-runs the same Bronze append,
   * Silver MERGE, Gold fold and view refreshes, and one cycle needs more
   * than 100 classes, so at the default every cycle compiles its plans
-  * again: 189 classes per serve cycle and ~100 per trickle cycle of
-  * perfbench, against 8-12 and 34 at `MaxEntries`. A serve run's
-  * distinct set, set-up included, is under 400 classes; `MaxEntries`
-  * leaves headroom for larger plan sets such as `graft.Bench`'s rows.
+  * again. `MaxEntries` holds the largest distinct set measured in one JVM:
+  * the ~4 700 classes of `graft.Bench`'s 239 rows, whose timed
+  * pass then compiles 52 classes instead of 8 980, for ~28 MB more
+  * metaspace and ~30 MB more code cache. A perfbench serve, trickle or
+  * bulk run needs under 400 (189 compiles per serve cycle at the default,
+  * 8-12 at `MaxEntries`).
   *
   * The size is a static conf read once, when `CodeGenerator`'s object
   * initializes, so it reaches a JVM by one of two routes:
@@ -51,13 +55,11 @@ object CodegenCache {
     if (!attached) {
       attached = true
       if (!spark.sparkContext.getConf.contains(Key)) {
-        val conf = new org.apache.spark.sql.internal.SQLConf
+        val conf = new SQLConf
         conf.setConfString(Key, MaxEntries.toString)
-        org.apache.spark.sql.internal.SQLConf.withExistingConf(conf) {
-          Class.forName(
-            "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$",
-            true, classOf[org.apache.spark.sql.internal.SQLConf].getClassLoader)
-        }
+        // the first reference to the object initializes it, and its cache
+        // takes the size of the conf active at that moment
+        SQLConf.withExistingConf(conf)(CodeGenerator)
       }
     }
   }

@@ -2,8 +2,10 @@ package graft
 
 import java.lang.management.ManagementFactory
 import java.nio.file.Files
-import java.util.concurrent.TimeUnit
+import java.util.concurrent.{Executors, TimeUnit}
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -12,14 +14,15 @@ import org.apache.spark.sql.SparkSession
 /** Spark's generated-code cache holds the engine's size on both routes
   * into a session ([[CodegenCache]]): sessions built by
   * [[LocalSpark.builder]], and a host's plain session the engine attaches
-  * to. Each case runs the same 150 distinct plans twice; with the cache
-  * sized, the second pass compiles nothing. The cache is sized once per
-  * JVM, so the host cases run in child JVMs ([[CodegenCacheProbe]]). */
+  * to, through each of the engine's host entry points. Each case runs the
+  * same 150 distinct plans twice; with the cache sized, the second pass
+  * compiles nothing. The cache is sized once per JVM, so the host cases
+  * run in child JVMs ([[CodegenCacheProbe]]), two at a time. */
 class CodegenCacheSpec extends SparkSpec {
 
   /** Runs the probe in a child JVM on this JVM's class path and module
     * options; returns (first pass, second pass, host conf holds the key). */
-  private def probe(hostSize: Option[Int]): (Long, Long, Boolean) = {
+  private def probe(mode: String): (Long, Long, Boolean) = {
     val jvmOpts = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
     val addOpens = jvmOpts.zip(jvmOpts.drop(1) :+ "").flatMap {
       case ("--add-opens", v) => Seq("--add-opens", v)
@@ -30,15 +33,15 @@ class CodegenCacheSpec extends SparkSpec {
     val log = Files.createTempFile("codegen-probe", ".log").toFile
     val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx1g",
       "-cp", System.getProperty("java.class.path"),
-      CodegenCacheProbe.getClass.getName.stripSuffix("$")) ++ hostSize.map(_.toString)
+      CodegenCacheProbe.getClass.getName.stripSuffix("$"), mode)
     val p = new ProcessBuilder(cmd.asJava).redirectErrorStream(true)
       .redirectOutput(log).start()
     try {
-      assert(p.waitFor(240, TimeUnit.SECONDS), "probe JVM timed out")
+      assert(p.waitFor(300, TimeUnit.SECONDS), s"probe JVM ($mode) timed out")
       val out = Files.readAllLines(log.toPath).asScala
       val line = out.find(_.startsWith("PROBE "))
       assert(p.exitValue() == 0 && line.isDefined,
-        s"probe JVM failed:\n${out.takeRight(40).mkString("\n")}")
+        s"probe JVM ($mode) failed:\n${out.takeRight(40).mkString("\n")}")
       val Array(_, first, second, hostKey) = line.get.split(" ")
       (first.toLong, second.toLong, hostKey.toBoolean)
     } finally {
@@ -47,31 +50,60 @@ class CodegenCacheSpec extends SparkSpec {
     }
   }
 
-  test("the engine's builder sizes the cache: a second pass compiles nothing") {
-    val first = CodegenCacheProbe.pass(spark)
-    assert(CodegenCacheProbe.pass(spark) === 0L, s"first pass compiled $first")
+  /** Every host mode's probe, started at the first host case. */
+  private lazy val probes: Map[String, Future[(Long, Long, Boolean)]] = {
+    val pool = Executors.newFixedThreadPool(2)
+    val ec = ExecutionContext.fromExecutor(pool)
+    val started = CodegenCacheProbe.Modes.map(m => m -> Future(probe(m))(ec)).toMap
+    pool.shutdown()
+    started
   }
 
-  test("attaching to a host's plain session sizes the cache and writes no conf") {
-    val (first, second, hostKey) = probe(None)
+  private def hostAttach(mode: String): Unit = {
+    val (first, second, hostKey) = Await.result(probes(mode), 10.minutes)
     assert(first >= CodegenCacheProbe.Plans)
     assert(second === 0L)
     assert(!hostKey, s"${CodegenCache.Key} written into the host's conf")
   }
 
+  test("the engine's builder sizes the cache: a second pass compiles nothing") {
+    val first = CodegenCacheProbe.pass(spark)
+    assert(CodegenCacheProbe.pass(spark) === 0L, s"first pass compiled $first")
+  }
+
+  test("attaching through registerTableChanges sizes a host's cache and writes no conf") {
+    hostAttach("functions")
+  }
+
+  test("attaching through the GraftExtensions parser sizes a host's cache and writes no conf") {
+    hostAttach("extensions")
+  }
+
+  test("attaching through GraftSparkCatalog sizes a host's cache and writes no conf") {
+    hostAttach("catalog")
+  }
+
   test("a host's explicit size wins over the engine's") {
-    val (first, second, _) = probe(Some(100))
+    val (first, second, _) = Await.result(probes("host-size"), 10.minutes)
     assert(first >= CodegenCacheProbe.Plans)
     assert(second > 0L, "a 100-entry cache held every plan")
   }
 }
 
-/** Child-JVM side of [[CodegenCacheSpec]]: builds a plain host session
-  * (with the cache size given as the argument, if any), attaches the
-  * engine the way a host does, runs [[pass]] twice and prints
-  * `PROBE <first> <second> <host conf holds the key>`. */
+/** Child-JVM side of [[CodegenCacheSpec]]: builds a plain host session,
+  * attaches the engine by the route the mode names, runs [[pass]] twice
+  * and prints `PROBE <first> <second> <host conf holds the key>`.
+  *   - `functions`: `GraftFunctions.registerTableChanges`, as a notebook
+  *     or harness calls it on its own session;
+  *   - `extensions`: the host sets `spark.sql.extensions` and runs one
+  *     SQL statement;
+  *   - `catalog`: the host sets `spark.sql.catalog.graft` and runs one
+  *     SQL statement that names the catalog;
+  *   - `host-size`: as `functions`, with the host's SparkConf setting a
+  *     100-entry cache. */
 object CodegenCacheProbe {
   val Plans = 150
+  val Modes = Seq("functions", "extensions", "catalog", "host-size")
 
   /** Classes compiled by running [[Plans]] distinct plans once. */
   def pass(spark: SparkSession): Long = {
@@ -81,15 +113,30 @@ object CodegenCacheProbe {
   }
 
   def main(args: Array[String]): Unit = {
+    val mode = args(0)
+    val warehouse = Files.createTempDirectory("codegen-probe-wh")
     val b = SparkSession.builder().master("local[2]").config("spark.ui.enabled", "false")
-    args.headOption.foreach(b.config(CodegenCache.Key, _))
+    mode match {
+      case "extensions" =>
+        b.config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
+      case "catalog" =>
+        b.config("spark.sql.catalog.graft", classOf[graft.catalog.GraftSparkCatalog].getName)
+          .config("spark.sql.catalog.graft.warehouse", warehouse.toString)
+      case "host-size" => b.config(CodegenCache.Key, 100L)
+      case _ =>
+    }
     val spark = b.getOrCreate()
-    graft.functions.GraftFunctions.registerTableChanges(spark)
+    mode match {
+      case "extensions" => spark.sql("SELECT 1").collect()
+      case "catalog" => spark.sql("SHOW NAMESPACES IN graft").collect()
+      case _ => graft.functions.GraftFunctions.registerTableChanges(spark)
+    }
     val first = pass(spark)
     val second = pass(spark)
     val hostKey = spark.conf.getAll.contains(CodegenCache.Key) ||
       spark.sparkContext.getConf.contains(CodegenCache.Key)
     println(s"PROBE $first $second $hostKey")
     spark.stop()
+    Files.delete(warehouse)
   }
 }
