@@ -163,7 +163,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces {
     catalogName = name
     warehouse = Option(options.get("warehouse")).getOrElse("/tmp/graft-warehouse")
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(graft.CodegenCache.attach)
+      .foreach(graft.LocalSpark.attach)
   }
 
   override def name(): String = catalogName

@@ -117,9 +117,9 @@ object GraftFunctions {
     * demo-notebook.py:371), resolved against [[graft.table.VersionedTable]].
     * Arguments must be literals (resolution happens at analysis time,
     * like Delta's own TVF). Also the engine's attach step on a host's
-    * session ([[graft.CodegenCache.attach]]). */
+    * session ([[graft.LocalSpark.attach]]). */
   def registerTableChanges(spark: SparkSession): Unit = {
-    graft.CodegenCache.attach(spark)
+    graft.LocalSpark.attach(spark)
     registerOnce(spark.sessionState.tableFunctionRegistry,
       FunctionIdentifier("table_changes"),
       new ExpressionInfo("graft.table.VersionedTable", "table_changes"),
@@ -155,7 +155,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SparkSession.active (ADVICE r11); building the parser is also the
     // engine's attach step, run once the host's SparkConf exists
     ext.injectParser { (s, parser) =>
-      graft.CodegenCache.attach(s)
+      graft.LocalSpark.attach(s)
       new graft.catalog.GraftSqlParser(parser, Some(s))
     }
     // serves SQL reads of merge-on-read (deletion-vector'd) versions

@@ -13,11 +13,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * `schemaLocation`, /root/reference/notebooks/demo-notebook.py:163-166)
   * re-expressed over vanilla Spark (SURVEY §7.5 risk 6):
   *
-  *   - '''inference''' is a one-shot BATCH pass over the landing
-  *     directory (a vanilla file STREAM cannot infer) — bounded to the
-  *     most recent [[MaxInferFiles]] files, the same sampling guard
-  *     Autoloader applies so inference cost does not grow with landing
-  *     history at 100 TB;
+  *   - '''inference''' is a BATCH pass over the landing directory (a
+  *     vanilla file STREAM cannot infer), run at every Bronze start, a
+  *     restart over a persisted log included (drift detection needs
+  *     it). It reads the most recent [[MaxInferFiles]] files,
+  *     Autoloader's sampling guard, so its cost is capped but grows
+  *     with landing history up to the cap: one `json` job of 109-170 ms
+  *     per perfbench trickle cycle at 8-12 landing files (ROADMAP open
+  *     items);
   *   - '''hints''' override the inferred type for any column they name
   *     (and contribute the column outright when inference never saw it),
   *     exactly Autoloader's hint semantics — inference only ever decides
